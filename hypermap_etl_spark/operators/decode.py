@@ -35,6 +35,7 @@ from hypermap_etl_spark.functions.hexutils import (
     uint256_topic_to_hex,
 )
 from hypermap_etl_spark.schemas import EVENT_SCHEMA
+from hypermap_etl_spark.util import jvm_cached
 
 
 def _topic(i: int) -> Column:
@@ -77,6 +78,15 @@ def _dyn_bytes(head_slot: int) -> Column:
 
 def decode_raw_logs(raw: DataFrame, contract: str = CONTRACT_ADDRESS) -> DataFrame:
     """Raw logs → wide event rows; unknown logs keep eventType NULL."""
+    event_type, cols = jvm_cached(
+        ("decode", contract.lower()), lambda: _decode_exprs(contract)
+    )
+    return raw.withColumn("eventType", event_type).select(*cols)
+
+
+def _decode_exprs(contract: str) -> tuple[Column, list[Column]]:
+    """(eventType, output projection) of decode_raw_logs — a pure
+    function of ``contract``, so built once per JVM (util.jvm_cached)."""
     t0 = F.lower(_topic(0))
     is_target = F.lower(F.col("address")) == F.lit(contract.lower())
 
@@ -98,35 +108,32 @@ def decode_raw_logs(raw: DataFrame, contract: str = CONTRACT_ADDRESS) -> DataFra
     et = F.col("eventType")
     in_types = lambda *names: et.isin(*names)  # noqa: E731
 
-    return (
-        raw.withColumn("eventType", event_type)
-        .select(
-            event_id(F.col("transactionHash"), F.col("logIndex")).alias("event_id"),
-            "eventType",
-            F.col("blockNumber").cast("long").alias("blockNumber"),
-            "blockHash",
-            "transactionHash",
-            F.col("transactionIndex").cast("int").alias("transactionIndex"),
-            F.col("logIndex").cast("int").alias("logIndex"),
-            F.lit(None).cast("long").alias("timestamp"),
-            F.when(in_types("Mint", "Fact", "Note"), norm_hex(_topic(1))).alias("parenthash"),
-            F.when(et == "Mint", norm_hex(_topic(2))).alias("childhash"),
-            F.when(et == "Fact", norm_hex(_topic(2))).alias("facthash"),
-            F.when(et == "Note", norm_hex(_topic(2))).alias("notehash"),
-            F.when(in_types("Mint", "Fact", "Note"), norm_hex(_topic(3))).alias("labelhash"),
-            F.when(in_types("Mint", "Fact", "Note"), hex_to_utf8(label_bytes)).alias("label"),
-            F.when(in_types("Fact", "Note"), F.concat(F.lit("0x"), F.lower(data_bytes))).alias("data"),
-            F.when(et == "Gene", norm_hex(_topic(1))).alias("entry"),
-            F.when(et == "Gene", topic_to_address(_topic(2))).alias("gene"),
-            F.when(et == "Transfer", topic_to_address(_topic(1))).alias("from"),
-            F.when(et == "Transfer", topic_to_address(_topic(2))).alias("to"),
-            # canonical 0x-hex-64 id; reference stores decimal which breaks
-            # the owner join (SURVEY.md §7.4.4) — deliberate fix, recorded.
-            F.when(et == "Transfer", uint256_topic_to_hex(_topic(3))).alias("id"),
-            F.when(et == "Zero", topic_to_address(_topic(1))).alias("zeroTba"),
-            F.when(et == "Upgraded", topic_to_address(_topic(1))).alias("implementation"),
-        )
-    )
+    return event_type, [
+        event_id(F.col("transactionHash"), F.col("logIndex")).alias("event_id"),
+        et,
+        F.col("blockNumber").cast("long").alias("blockNumber"),
+        F.col("blockHash"),
+        F.col("transactionHash"),
+        F.col("transactionIndex").cast("int").alias("transactionIndex"),
+        F.col("logIndex").cast("int").alias("logIndex"),
+        F.lit(None).cast("long").alias("timestamp"),
+        F.when(in_types("Mint", "Fact", "Note"), norm_hex(_topic(1))).alias("parenthash"),
+        F.when(et == "Mint", norm_hex(_topic(2))).alias("childhash"),
+        F.when(et == "Fact", norm_hex(_topic(2))).alias("facthash"),
+        F.when(et == "Note", norm_hex(_topic(2))).alias("notehash"),
+        F.when(in_types("Mint", "Fact", "Note"), norm_hex(_topic(3))).alias("labelhash"),
+        F.when(in_types("Mint", "Fact", "Note"), hex_to_utf8(label_bytes)).alias("label"),
+        F.when(in_types("Fact", "Note"), F.concat(F.lit("0x"), F.lower(data_bytes))).alias("data"),
+        F.when(et == "Gene", norm_hex(_topic(1))).alias("entry"),
+        F.when(et == "Gene", topic_to_address(_topic(2))).alias("gene"),
+        F.when(et == "Transfer", topic_to_address(_topic(1))).alias("from"),
+        F.when(et == "Transfer", topic_to_address(_topic(2))).alias("to"),
+        # canonical 0x-hex-64 id; reference stores decimal which breaks
+        # the owner join (SURVEY.md §7.4.4) — deliberate fix, recorded.
+        F.when(et == "Transfer", uint256_topic_to_hex(_topic(3))).alias("id"),
+        F.when(et == "Zero", topic_to_address(_topic(1))).alias("zeroTba"),
+        F.when(et == "Upgraded", topic_to_address(_topic(1))).alias("implementation"),
+    ]
 
 
 def parse_raw_logs(raw: DataFrame, contract: str = CONTRACT_ADDRESS) -> DataFrame:

@@ -30,11 +30,13 @@ the same key family so AQE reuses exchange where possible. No Python.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hypermap_etl_spark.constants import ROOT_HASH
-from hypermap_etl_spark.util import tracked_local_checkpoint
+from hypermap_etl_spark.util import jvm_cached, tracked_local_checkpoint
 
 def _ord():
     return F.struct(F.col("blockNumber"), F.col("logIndex"))
@@ -55,37 +57,50 @@ def materialize_entries(
     (the stored row supplies identity at merge time). With the default
     ``None`` the behavior and plan are exactly the full-fold ones.
 
-    Plan shape (r10, guide §1.1/§2.3/§2.4 — ONE pass, TWO exchanges,
-    ZERO joins): the previous formulation computed M1/M3 as one
-    aggregation and M2/M4-M7 as five more, left-joined on namehash —
-    six scans of the log and ~8 exchanges for state that is all keyed
-    by the same entry key. Every event now map-side explodes into at
-    most two (namehash, kind, label, payload, ord) rows — its write
-    target, plus for Mints the parent's children/placeholder row — and
-    the whole M1-M8 state folds in a single two-level aggregation:
-    level 1 groups by (namehash, kind, label) (the per-label last-write
-    granularity M4/M5 need; a no-op grain for the other kinds), level 2
-    by namehash resolves identity (first-Mint-wins vs placeholder),
-    assembles the maps/sets, and takes M8 as the greatest touch. Every
-    per-kind aggregate is conditional on ``kind``, and all of them are
-    semigroup folds, so two-level == one-level exactly. Keys seen only
-    as write targets (no Mint, no placeholder evidence, not in
-    ``known_extra``) are dropped by the final filter — the same rows
-    the old shape dropped via the left joins from the entry base.
-    Shuffle volume: exchange 1 carries ~1.05 narrow rows per event
-    (project-before-exchange; no payload duplication), exchange 2 one
-    row per (key, kind, label) — versus six exchanges of comparable
-    width before. Measured on the 64x-history refold: 57-62 s -> 16-18 s
-    on the same input (wide cache), with the oracle-checked output
-    row-identical across sf0.001/sf0.01/sf0.1, the known_extra path,
-    and adversarial junk logs (NULL blocks, NULL targets, unknown
-    event types).
+    Plan shape — ONE pass, TWO exchanges, ZERO joins: every event
+    map-side explodes into at most two (namehash, kind, label, payload,
+    ord) rows — its write target, plus for Mints the parent's
+    children/placeholder row — and the whole M1-M8 state folds in a
+    single two-level aggregation: level 1 groups by (namehash, kind,
+    label) (the per-label last-write granularity M4/M5 need; a no-op
+    grain for the other kinds), level 2 by namehash resolves identity
+    (first-Mint-wins vs placeholder), assembles the maps/sets, and
+    takes M8 as the greatest touch. Every per-kind aggregate is
+    conditional on ``kind``, and all of them are semigroup folds, so
+    two-level == one-level exactly. Keys seen only as write targets (no
+    Mint, no placeholder evidence, not in ``known_extra``) are dropped
+    by the final filter. Shuffle volume: exchange 1 carries ~1.05
+    narrow rows per event (project-before-exchange; no payload
+    duplication), exchange 2 one row per (key, kind, label). A
+    per-aggregate formulation left-joined on namehash would scan the
+    log six times through ~8 exchanges for the same state (measured on
+    the 64x-history refold: 57-62 s vs 16-18 s).
+
+    The expressions depend only on ``root_hash`` and are built once per
+    JVM (_fold_exprs).
     """
-    ev = events.select(
-        "eventType", "blockNumber", "logIndex", "parenthash", "childhash",
-        F.coalesce(F.col("label"), F.lit("")).alias("label"),
-        "data", "entry", "gene", "to", "id",
+    x = jvm_cached(("fold", root_hash), lambda: _fold_exprs(root_hash))
+    src = (
+        events.select(*x.ev)
+        .select(*x.exploded)
+        .filter(x.cand_ok)
+        .select(*x.src)
     )
+    if known_extra is not None:
+        src = src.unionByName(known_extra.select(*x.extra))
+    g1 = src.groupBy(*x.g1_keys).agg(*x.g1)
+    res = g1.groupBy(x.g1_keys[0]).agg(*x.res)
+    return res.filter(x.keep).select(*x.out)
+
+
+def _fold_exprs(root_hash: str) -> SimpleNamespace:
+    """Every Column of materialize_entries' plan, by stage."""
+    ev = [
+        *[F.col(c) for c in ("eventType", "blockNumber", "logIndex",
+                             "parenthash", "childhash")],
+        F.coalesce(F.col("label"), F.lit("")).alias("label"),
+        *[F.col(c) for c in ("data", "entry", "gene", "to", "id")],
+    ]
     et = F.col("eventType")
     is_mint = (et == "Mint") & F.col("childhash").isNotNull()
 
@@ -121,30 +136,27 @@ def materialize_entries(
         _cand((et == "Transfer") & F.col("id").isNotNull(), F.col("id"),
               6, F.lit(""), F.col("to"), F.lit(False)),
     )
-    src = (
-        ev.select("blockNumber", "logIndex", F.explode(cand).alias("c"))
-        .filter(F.col("c").isNotNull() & F.col("c.namehash").isNotNull())
-        .select(
-            F.col("c.namehash").alias("namehash"),
-            F.col("c.kind").alias("kind"),
-            F.col("c.lbl").alias("lbl"),
-            F.col("c.payload").alias("payload"),
-            F.col("c.is_ph").alias("is_ph"),
-            "blockNumber", "logIndex",
-        )
-    )
-    if known_extra is not None:
-        src = src.unionByName(
-            known_extra.select(
-                F.col("namehash"),
-                F.lit(0).cast("int").alias("kind"),
-                F.lit("").alias("lbl"),
-                nul.alias("payload"),
-                F.lit(False).alias("is_ph"),
-                F.lit(None).cast("long").alias("blockNumber"),
-                F.lit(None).cast("long").alias("logIndex"),
-            )
-        )
+    exploded = [
+        F.col("blockNumber"), F.col("logIndex"), F.explode(cand).alias("c"),
+    ]
+    cand_ok = F.col("c").isNotNull() & F.col("c.namehash").isNotNull()
+    src = [
+        F.col("c.namehash").alias("namehash"),
+        F.col("c.kind").alias("kind"),
+        F.col("c.lbl").alias("lbl"),
+        F.col("c.payload").alias("payload"),
+        F.col("c.is_ph").alias("is_ph"),
+        F.col("blockNumber"), F.col("logIndex"),
+    ]
+    extra = [
+        F.col("namehash"),
+        F.lit(0).cast("int").alias("kind"),
+        F.lit("").alias("lbl"),
+        nul.alias("payload"),
+        F.lit(False).alias("is_ph"),
+        F.lit(None).cast("long").alias("blockNumber"),
+        F.lit(None).cast("long").alias("logIndex"),
+    ]
 
     # level 1: per (namehash, kind, label). The NULL-skipping first/last
     # writes are arg_min/arg_max over (block, logIndex) that SKIP NULL
@@ -159,7 +171,8 @@ def materialize_entries(
         F.col("payload").isNotNull(),
         F.struct(_ord().alias("o"), F.col("payload").alias("v")),
     )
-    g1 = src.groupBy("namehash", "kind", "lbl").agg(
+    g1_keys = [F.col("namehash"), F.col("kind"), F.col("lbl")]
+    g1 = [
         F.min(pay_w).alias("w_first"),
         F.max(pay_w).alias("w_last"),
         F.min(F.struct(_ord().alias("o"), F.col("lbl").alias("v"))).alias("l_first"),
@@ -168,11 +181,27 @@ def materialize_entries(
         F.min(F.when(F.col("is_ph"), F.col("blockNumber"))).alias("ph_min"),
         F.max(F.col("is_ph")).alias("ph_any"),
         F.collect_set(F.when(F.col("kind") == 2, F.col("payload"))).alias("childset"),
-    )
+    ]
 
     # level 2: resolve per entry key
     k = F.col("kind")
-    res = g1.groupBy("namehash").agg(
+
+    def _label_map(kind):
+        return F.map_from_entries(
+            F.array_sort(
+                F.collect_list(
+                    F.when(
+                        k == kind,
+                        F.struct(
+                            F.col("lbl").alias("label"),
+                            F.col("w_last")["v"].alias("data"),
+                        ),
+                    )
+                )
+            )
+        )
+
+    res = [
         F.min(F.when(k == 1, F.col("l_first"))).alias("m_l"),
         F.min(F.when(k == 1, F.col("w_first"))).alias("m_p"),
         F.min(F.when(k == 1, F.col("b_min"))).alias("m_creation"),
@@ -180,8 +209,8 @@ def materialize_entries(
         F.min(F.when(k == 2, F.col("ph_min"))).alias("ph_creation"),
         # seen_* track ROW EXISTENCE, creation blocks track VALUES: a
         # Mint whose only rows carry NULL blockNumber still creates the
-        # entry (with NULL creationBlock), exactly as the old entry
-        # base did — keyed off the row set, not off min(block)
+        # entry (with NULL creationBlock) — keyed off the row set, not
+        # off min(block)
         F.max(F.when(k == 1, F.lit(True))).alias("seen_mint"),
         F.max(F.when(k == 2, F.col("ph_any"))).alias("seen_ph"),
         F.array_sort(
@@ -190,48 +219,23 @@ def materialize_entries(
             )
         ).alias("children_agg"),
         F.max(F.when(k == 2, F.col("b_max"))).alias("t_children"),
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        k == 3,
-                        F.struct(
-                            F.col("lbl").alias("label"),
-                            F.col("w_last")["v"].alias("data"),
-                        ),
-                    )
-                )
-            )
-        ).alias("facts_agg"),
+        _label_map(3).alias("facts_agg"),
         F.max(F.when(k == 3, F.col("b_max"))).alias("t_facts"),
-        F.map_from_entries(
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        k == 4,
-                        F.struct(
-                            F.col("lbl").alias("label"),
-                            F.col("w_last")["v"].alias("data"),
-                        ),
-                    )
-                )
-            )
-        ).alias("notes_agg"),
+        _label_map(4).alias("notes_agg"),
         F.max(F.when(k == 4, F.col("b_max"))).alias("t_notes"),
         F.max(F.when(k == 5, F.col("w_last"))).alias("g_last"),
         F.max(F.when(k == 5, F.col("b_max"))).alias("t_gene"),
         F.max(F.when(k == 6, F.col("w_last"))).alias("o_last"),
         F.max(F.when(k == 6, F.col("b_max"))).alias("t_owner"),
         F.max(F.when(k == 0, F.lit(True))).alias("has_extra"),
-    )
+    ]
 
     # isPlaceholder is PERSISTED state, not render-time inference: the
     # delta merge (merge_entry_states) must distinguish a reserved M3
     # placeholder from a genuine first Mint whose attacker-controlled
     # label happens to be '[unknown]' with parent ROOT — value
-    # inference made those indistinguishable, letting a later re-Mint
-    # overwrite a real first-mint identity on the delta path (ADVICE
-    # r8, confirmed repro: delta creationBlock=20 vs full fold 10).
+    # inference makes those indistinguishable and would let a later
+    # re-Mint overwrite a real first-mint identity on the delta path.
     has_mint = F.col("m_creation").isNotNull()
     is_base = F.coalesce(F.col("seen_mint"), F.lit(False)) | F.coalesce(
         F.col("seen_ph"), F.lit(False)
@@ -250,8 +254,8 @@ def materialize_entries(
         creation, touch_mint, F.col("t_children"), F.col("t_facts"),
         F.col("t_notes"), F.col("t_gene"), F.col("t_owner"),
     )
-    return res.filter(keep).select(
-        "namehash",
+    out = [
+        F.col("namehash"),
         F.when(has_mint, F.col("m_l")["v"])
         .when(is_base, F.lit("[unknown]"))
         .otherwise(nul)
@@ -271,6 +275,10 @@ def materialize_entries(
         F.when(is_base, ~has_mint)
         .otherwise(F.lit(None).cast("boolean"))
         .alias("isPlaceholder"),
+    ]
+    return SimpleNamespace(
+        ev=ev, exploded=exploded, cand_ok=cand_ok, src=src, extra=extra,
+        g1_keys=g1_keys, g1=g1, res=res, keep=keep, out=out,
     )
 
 
@@ -281,13 +289,11 @@ ENTRY_KEY_COLS = ["childhash", "parenthash", "entry", "id"]
 def touched_namehashes(events: DataFrame) -> DataFrame:
     """Distinct entry keys a batch of events can affect (child, parent,
     gene target, transfer id) — the M1-M7 write set."""
-    return (
-        events.select(
-            F.explode(F.array(*[F.col(c) for c in ENTRY_KEY_COLS])).alias("namehash")
-        )
-        .filter(F.col("namehash").isNotNull())
-        .distinct()
-    )
+    key, present = jvm_cached("touched", lambda: (
+        F.explode(F.array(*[F.col(c) for c in ENTRY_KEY_COLS])).alias("namehash"),
+        F.col("namehash").isNotNull(),
+    ))
+    return events.select(key).filter(present).distinct()
 
 
 def events_referencing(events_table: DataFrame, keys: DataFrame) -> DataFrame:
@@ -322,7 +328,10 @@ def with_entry_bucket(df: DataFrame, n: int = ENTRY_BUCKETS) -> DataFrame:
     MERGE contract holds (a key never moves buckets), and per-batch
     upserts rewrite only the buckets holding touched entries instead of
     the whole entries table."""
-    return df.withColumn("entry_bucket", F.pmod(F.xxhash64(F.col("namehash")), F.lit(n)))
+    bucket = jvm_cached(
+        ("entry_bucket", n), lambda: F.pmod(F.xxhash64(F.col("namehash")), F.lit(n))
+    )
+    return df.withColumn("entry_bucket", bucket)
 
 
 def incremental_entries_update(
@@ -444,33 +453,33 @@ def merge_entry_states(
       lastUpdateBlock  max of the two
       (M8)
     """
-    # legacy tables written before the flag column: add it as NULL so
-    # the coalesce below falls back to the value heuristic for them
-    if "isPlaceholder" not in stored.columns:
-        stored = stored.withColumn(
-            "isPlaceholder", F.lit(None).cast("boolean")
-        )
-    if "isPlaceholder" not in partial.columns:
-        partial = partial.withColumn(
-            "isPlaceholder", F.lit(None).cast("boolean")
-        )
-    s = stored.select(
-        "namehash",
-        *[
-            F.col(c).alias(f"__s_{c}")
-            for c in stored.columns
-            if c != "namehash"
-        ],
+    s_cols, b_cols = tuple(stored.columns), tuple(partial.columns)
+    x = jvm_cached(
+        ("merge_states", root_hash, s_cols, b_cols),
+        lambda: _merge_state_exprs(root_hash, s_cols, b_cols),
     )
-    b = partial.select(
-        "namehash",
-        *[
-            F.col(c).alias(f"__b_{c}")
-            for c in partial.columns
-            if c != "namehash"
-        ],
+    return (
+        stored.select(*x.s)
+        .join(partial.select(*x.b), "namehash", "full_outer")
+        .select(*x.out)
     )
-    j = s.join(b, "namehash", "full_outer")
+
+
+def _merge_state_exprs(
+    root_hash: str, s_cols: tuple[str, ...], b_cols: tuple[str, ...]
+) -> SimpleNamespace:
+    """The Columns of merge_entry_states — pure functions of ``root_hash``
+    and the two sides' column names, so built once per JVM."""
+
+    def _side(tag, cols):
+        out = [F.col("namehash")] + [
+            F.col(n).alias(f"__{tag}_{n}") for n in cols if n != "namehash"
+        ]
+        if "isPlaceholder" not in cols:
+            # legacy tables written before the flag column: NULL, so
+            # the coalesce below falls back to the value heuristic
+            out.append(F.lit(None).cast("boolean").alias(f"__{tag}_isPlaceholder"))
+        return out
 
     has_s = F.col("__s_creationBlock").isNotNull()
     has_b = F.col("__b_creationBlock").isNotNull()
@@ -521,8 +530,8 @@ def merge_entry_states(
         ).alias(name)
 
     empty_arr = F.array().cast("array<string>")
-    return j.select(
-        "namehash",
+    out = [
+        F.col("namehash"),
         ident("label").alias("label"),
         ident("parentHash").alias("parentHash"),
         F.lit(None).cast("string").alias("fullName"),
@@ -546,7 +555,8 @@ def merge_entry_states(
         F.when(use_b, placeholder_b)
         .otherwise(placeholder_s)
         .alias("isPlaceholder"),
-    )
+    ]
+    return SimpleNamespace(s=_side("s", s_cols), b=_side("b", b_cols), out=out)
 
 
 def _pending_manifest_read(spark, ptable: str) -> DataFrame | None:
@@ -719,15 +729,16 @@ def _pending_path(entries_path: str) -> str:
     return entries_path.rstrip("/") + "__pending"
 
 
-def _read_pending(spark, pending_path: str) -> DataFrame | None:
+def _read_pending(spark, pending_path: str, schema) -> DataFrame | None:
     """The parked early-writes store, with crash recovery: a swap that
     died between the two renames leaves the data in a ``__old_`` dir —
     restore the NEWEST one (by mtime — token order is random uuid, not
-    recency; ADVICE r8) and sweep the rest; when the pending dir itself
+    recency) and sweep the rest; when the pending dir itself
     exists, any ``__old_`` dir is a leak from a crash after the second
     rename and must be swept too, or a LATER mid-swap crash could
     restore that stale snapshot over the live one. Stale
-    ``__staging_`` dirs are untrusted garbage.
+    ``__staging_`` dirs are untrusted garbage. The store is read with
+    ``schema``, the batch events' schema it was written with.
 
     POSIX-only scope: this store commits via atomic directory rename;
     on S3-class object stores use incremental_entries_delta_manifest,
@@ -747,7 +758,9 @@ def _read_pending(spark, pending_path: str) -> DataFrame | None:
         olds.remove(newest)
     for d in olds:
         _shutil.rmtree(d, ignore_errors=True)
-    return spark.read.parquet(pending_path)
+    from hypermap_etl_spark.operators.merge import read_parquet_as
+
+    return read_parquet_as(spark, pending_path, schema)
 
 
 def _swap_pending(pend: DataFrame, pending_path: str) -> None:
@@ -771,12 +784,15 @@ def _swap_pending(pend: DataFrame, pending_path: str) -> None:
 
 def _write_target() -> "F.Column":
     """The entry key a Fact/Note/Gene/Transfer row writes to."""
-    et = F.col("eventType")
-    return (
-        F.when(et.isin("Fact", "Note"), F.col("parenthash"))
-        .when(et == "Gene", F.col("entry"))
-        .when(et == "Transfer", F.col("id"))
-    )
+    def build():
+        et = F.col("eventType")
+        return (
+            F.when(et.isin("Fact", "Note"), F.col("parenthash"))
+            .when(et == "Gene", F.col("entry"))
+            .when(et == "Transfer", F.col("id"))
+        )
+
+    return jvm_cached("write_target", build)
 
 
 def _split_retriable_pending(
@@ -814,19 +830,20 @@ def _known_now(events_in: DataFrame, stored_keys: DataFrame | None,
     """Every entry key that exists after this round: stored touched
     keys plus the batch's minted children and referenced (placeholder)
     parents — exactly the full fold's ``known`` set restricted to this
-    round's scope."""
-    mints = events_in.filter(
-        (F.col("eventType") == "Mint") & F.col("childhash").isNotNull()
-    )
-    known = mints.select(F.col("childhash").alias("namehash")).unionByName(
-        mints.filter(
-            F.col("parenthash").isNotNull()
-            & (F.col("parenthash") != root_hash)
-        ).select(F.col("parenthash").alias("namehash"))
-    )
+    round's scope. Keys may repeat: the set is only ever the broadcast
+    side of a semi- or anti-join, where duplicates change nothing, so
+    no shuffle dedupes it."""
+    is_mint, child, is_ph, parent = jvm_cached(("known_now", root_hash), lambda: (
+        (F.col("eventType") == "Mint") & F.col("childhash").isNotNull(),
+        F.col("childhash").alias("namehash"),
+        F.col("parenthash").isNotNull() & (F.col("parenthash") != root_hash),
+        F.col("parenthash").alias("namehash"),
+    ))
+    mints = events_in.filter(is_mint)
+    known = mints.select(child).unionByName(mints.filter(is_ph).select(parent))
     if stored_keys is not None:
         known = known.unionByName(stored_keys)
-    return known.distinct()
+    return known
 
 
 def _unknown_writes(events_in: DataFrame, known_now: DataFrame) -> DataFrame:
@@ -837,17 +854,19 @@ def _unknown_writes(events_in: DataFrame, known_now: DataFrame) -> DataFrame:
     (on-chain the mint-before-write invariant makes this set empty;
     the store is the correctness net for logs that violate it).
 
-    One scan + ONE broadcast anti-join (r10, guide §2.4): rows are
-    tagged with their write target (_write_target covers all four
-    types) and anti-joined once — the previous shape ran three
-    filtered scans and three anti-joins against the same known set for
-    the same result rows."""
-    et = F.col("eventType")
-    tagged = events_in.filter(
-        (et.isin("Fact", "Note") & F.col("parenthash").isNotNull())
-        | ((et == "Gene") & F.col("entry").isNotNull())
-        | ((et == "Transfer") & F.col("id").isNotNull())
-    ).withColumn("__t", _write_target())
+    One scan + ONE broadcast anti-join: rows are tagged with their
+    write target (_write_target covers all four types) and anti-joined
+    once against the known set."""
+    def build():
+        et = F.col("eventType")
+        return (
+            (et.isin("Fact", "Note") & F.col("parenthash").isNotNull())
+            | ((et == "Gene") & F.col("entry").isNotNull())
+            | ((et == "Transfer") & F.col("id").isNotNull())
+        )
+
+    is_write = jvm_cached("is_write", build)
+    tagged = events_in.filter(is_write).withColumn("__t", _write_target())
     return tagged.join(
         F.broadcast(known_now),
         tagged["__t"] == known_now["namehash"],
@@ -901,72 +920,57 @@ def incremental_entries_delta(
     from hypermap_etl_spark.util import release_local_checkpoint
 
     pending_path = _pending_path(entries_path)
-    pending = _read_pending(spark, pending_path)
+    pending = _read_pending(spark, pending_path, new_events.schema)
     had_pending = pending is not None
 
-    # driver-action overlap (guide §2.6, r10): the steady-state batch
-    # is a chain of ~7 fixed-cost driver actions, each leaving the
-    # cluster idle during its tail. Two pairs are independent and run
-    # concurrently from a 2-thread pool: (a) the batch checkpoint vs
-    # the touched-bucket read chain (hot path only — with a pending
-    # store the fold input depends on stored keys), and (b) the
-    # pending-emptiness probe vs the entries MERGE write. The pending
-    # SWAP itself stays strictly after the merge lands — the
-    # crash-ordering contract is about the swap, not the read-only
-    # probe.
+    # driver-action overlap: the steady-state batch is a chain of
+    # fixed-cost driver actions, each leaving the cluster idle during
+    # its tail. Two pairs are independent and run concurrently from a
+    # 2-thread pool: (a) the batch checkpoint vs the touched-bucket read
+    # chain, and (b) the pending-emptiness probe vs the entries MERGE
+    # write. The pending SWAP itself stays strictly after the merge
+    # lands — the crash-ordering contract is about the swap, not the
+    # read-only probe.
     pool = ThreadPoolExecutor(max_workers=2)
-    ev_future = (
-        None
-        if had_pending
-        else pool.submit(lambda: new_events.localCheckpoint(eager=True))
-    )
-
-    # the stored rows are read FIRST, pruned by the BATCH's touched
-    # keys — equal to the fold input's touched set, because retried
-    # pending rows' targets are batch-minted keys (childhash or
-    # parenthash of the batch's mints), already in the batch's own
-    # write set — so the stale-drop below can consult stored keys
-    # before the fold input is assembled
-    stored_touched = None
-    stored_keys = None
+    ev_future = pool.submit(lambda: new_events.localCheckpoint(eager=True))
+    held = []  # checkpoints to release at the end, besides ev_future's
     try:
+        # the stored rows are read FIRST, pruned by the BATCH's touched
+        # keys — equal to the fold input's touched set, because retried
+        # pending rows' targets are batch-minted keys (childhash or
+        # parenthash of the batch's mints), already in the batch's own
+        # write set — so the stale-drop below can consult stored keys
+        # before the fold input is assembled
+        stored_touched = None
+        stored_keys = None
         if _os.path.exists(entries_path):
             keys = touched_namehashes(new_events)
+            stored = _read_entries(spark, entries_path, entry_buckets)
             if entry_buckets:
                 kb = with_entry_bucket(keys, entry_buckets)
                 buckets = [
                     r[0]
                     for r in kb.select("entry_bucket").distinct().collect()
                 ]
-                stored = (
-                    spark.read.parquet(entries_path)
-                    .filter(F.col("entry_bucket").isin(buckets))
-                    .drop("entry_bucket")
-                )
-            else:
-                stored = spark.read.parquet(entries_path)
+                stored = stored.filter(
+                    F.col("entry_bucket").isin(buckets)
+                ).drop("entry_bucket")
             stored_touched = stored.join(
                 F.broadcast(keys), "namehash", "left_semi"
             ).localCheckpoint(eager=True)
+            held.append(stored_touched)
             stored_keys = stored_touched.select("namehash")
-    except Exception:
-        if ev_future is not None:
-            try:
-                release_local_checkpoint(ev_future.result())
-            except Exception:
-                pass  # the future itself failed — nothing to release
-        pool.shutdown()
-        raise
 
-    leftover = None
-    try:
+        batch = ev_future.result()
+        events_in = batch
+        leftover = None
         if had_pending:
             # only pending rows whose target this batch introduces
             # re-enter the fold; the rest stay parked at the cost of
             # ONE semi-join scan (never a fold) —
             # see _split_retriable_pending
             retriable, leftover = _split_retriable_pending(
-                pending, new_events, root_hash
+                pending, batch, root_hash
             )
             if stored_keys is not None:
                 # crash-window staleness guard: a pending row whose
@@ -983,23 +987,9 @@ def incremental_entries_delta(
                 retriable = tagged.join(
                     sk, tagged["__t"] == sk["namehash"], "left_anti"
                 ).drop("__t")
-            events_in = new_events.unionByName(
-                retriable, allowMissingColumns=True
-            ).localCheckpoint(eager=True)
-        else:
-            events_in = ev_future.result()
-    except Exception:
-        if stored_touched is not None:
-            release_local_checkpoint(stored_touched)
-        if ev_future is not None:
-            try:
-                release_local_checkpoint(ev_future.result())
-            except Exception:
-                pass  # the future itself failed — nothing to release
-        pool.shutdown()
-        raise
+            # the fold reads the union once, so it stays lazy
+            events_in = batch.unionByName(retriable, allowMissingColumns=True)
 
-    try:
         if stored_touched is None:
             updated = materialize_entries(events_in, root_hash)
         else:
@@ -1012,23 +1002,19 @@ def incremental_entries_delta(
                 "entry_bucket"
             )
         updated = updated.localCheckpoint(eager=True)
-    except Exception:
-        if stored_touched is not None:
-            release_local_checkpoint(stored_touched)
-        release_local_checkpoint(events_in)
-        raise
-    try:
-        pend = _unknown_writes(
-            events_in, _known_now(events_in, stored_keys, root_hash)
-        )
+        held.append(updated)
+
+        # the still-unknown remainder comes from the batch alone: retried
+        # rows are never Mints (so they add no known key) and their
+        # targets are batch-minted (so none of them is unknown)
+        pend = _unknown_writes(batch, _known_now(batch, stored_keys, root_hash))
         if leftover is not None:
             pend = pend.unionByName(leftover, allowMissingColumns=True)
         # overlap (b): the READ-ONLY emptiness probe of the pending
-        # remainder runs while the entries MERGE writes (guide §2.6) —
-        # both consume only checkpointed inputs. The pending SWAP
-        # itself still happens strictly after the merge lands, so the
-        # crash-ordering contract (merge before pending replace) is
-        # untouched.
+        # remainder runs while the entries MERGE writes — both consume
+        # only checkpointed inputs. The pending SWAP itself still
+        # happens strictly after the merge lands, so the crash-ordering
+        # contract (merge before pending replace) is untouched.
         pend_empty = None if had_pending else pool.submit(pend.isEmpty)
         # assume_unique: both branches produce one row per namehash —
         # the fold is a groupBy(namehash) aggregate and
@@ -1051,17 +1037,33 @@ def incremental_entries_delta(
         # between the two re-applies both, idempotently). Skipped
         # entirely while no early write has ever been seen, so the
         # hot path pays nothing on well-formed chains.
-        if had_pending:
-            _swap_pending(pend, pending_path)
-        elif not pend_empty.result():
+        if had_pending or not pend_empty.result():
             _swap_pending(pend, pending_path)
         return res
     finally:
         pool.shutdown()
-        release_local_checkpoint(updated)
-        if stored_touched is not None:
-            release_local_checkpoint(stored_touched)
-        release_local_checkpoint(events_in)
+        if ev_future.exception() is None:
+            held.append(ev_future.result())
+        for df in held:
+            release_local_checkpoint(df)
+
+
+def _read_entries(spark, entries_path: str, entry_buckets: int | None) -> DataFrame:
+    """The stored entries table, read with its known schema (ENTRY_SCHEMA,
+    plus ``entry_bucket`` when bucketed). A table written before the
+    ``isPlaceholder`` column existed is read without it;
+    merge_entry_states falls back to value inference for such rows."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from hypermap_etl_spark.operators.merge import _table_columns, read_parquet_as
+    from hypermap_etl_spark.schemas import ENTRY_SCHEMA
+
+    fields = list(ENTRY_SCHEMA.fields)
+    if entry_buckets:
+        fields.append(StructField("entry_bucket", LongType()))
+    if "isPlaceholder" not in (_table_columns(entries_path) or ["isPlaceholder"]):
+        fields = [f for f in fields if f.name != "isPlaceholder"]
+    return read_parquet_as(spark, entries_path, StructType(fields))
 
 
 def quarantine_bad_events(events: DataFrame) -> DataFrame:

@@ -51,8 +51,9 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 BLOCK_BUCKET_SIZE = 100_000
@@ -165,6 +166,50 @@ def _has_parquet_files(path: str) -> bool:
     return False
 
 
+def _table_columns(path: str) -> list[str] | None:
+    """Column names of the parquet table at ``path`` without a Spark job:
+    one data file's footer plus the partition columns of the directories
+    above it. None when the table holds no data file. Directories Spark
+    skips when listing a table (``.``-prefixed, ``_``-prefixed without
+    ``=``) are skipped here too."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not d.startswith(".") and not (d.startswith("_") and "=" not in d)
+        )
+        data = sorted(
+            n for n in names
+            if n.endswith(".parquet") and not n.startswith(("_", "."))
+        )
+        if data:
+            rel = os.path.relpath(root, path).split(os.sep)
+            parts = [d.split("=", 1)[0] for d in rel if "=" in d]
+            return pq.read_schema(os.path.join(root, data[0])).names + parts
+    return None
+
+
+def read_parquet_as(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Read a parquet table this program wrote, with the schema it was
+    written with. ``spark.read.parquet`` without a schema runs a
+    one-task job to infer it; per-batch readers of the program's own
+    tables already know it.
+
+    The table's columns must be exactly ``schema``'s: a table holding
+    other columns raises instead of being read with columns silently
+    dropped or NULL-filled. Types are checked by the parquet reader,
+    which fails on a column it cannot read as ``schema`` declares it.
+    """
+    found = _table_columns(path)
+    if found is not None and sorted(found) != sorted(schema.fieldNames()):
+        raise ValueError(
+            f"parquet table {path} holds columns {sorted(found)}, "
+            f"expected {sorted(schema.fieldNames())}"
+        )
+    return spark.read.schema(schema).parquet(path)
+
+
 def _remove_partition_dirs(path: str, partition_col: str, values) -> int:
     """Remove the on-disk directories of fully-emptied partitions,
     escaping- and listing-safe. Returns how many were removed.
@@ -253,7 +298,7 @@ def merge_into_parquet(
     ``assume_unique``: the caller guarantees new_df already holds one
     row per key (an aggregate keyed on key_cols, e.g. the entries
     fold), skipping the per-batch dedupe window — one exchange + sort
-    of the batch saved per merge (guide §2.4). Violating the guarantee
+    of the batch saved per merge. Violating the guarantee
     would persist duplicate keys, so only pass it for frames whose
     lineage proves it.
 
@@ -279,23 +324,22 @@ def _merge_unlocked(
         new_df = dedupe_new(new_df, key_cols)
 
     if not os.path.exists(path):
-        writer = new_df.write.mode("overwrite")
+        # the row count is observed on the write itself, so the batch
+        # plan runs once
+        obs = Observation()
+        observed = new_df.observe(obs, F.count(F.lit(1)).alias("n"))
+        writer = observed.write.mode("overwrite")
         if partition_col:
             writer = writer.partitionBy(partition_col)
         writer.parquet(path)
-        return {"upsertedCount": new_df.count(), "modifiedCount": 0}
+        return {"upsertedCount": _obs_count(obs), "modifiedCount": 0}
 
-    from pyspark.sql import Observation
-
-    existing = spark.read.parquet(path)
+    existing = read_parquet_as(spark, path, new_df.schema)
     if partition_col:
         # the ONE pre-write action: touched partition values (needed to
         # BUILD the pruned plan) and the batch row count ride the same
-        # tiny aggregate — r7 review: the steady-state batch paid ~4
-        # separate fixed actions here (touched collect, semi-join
-        # count, batch count, write); it now pays 2 (this collect +
-        # the write, with the matched/upserted counts observed on the
-        # write itself)
+        # tiny aggregate; the matched/upserted counts are observed on
+        # the write itself, so a steady-state merge runs two actions
         per_part = (
             new_df.groupBy(partition_col)
             .agg(F.count(F.lit(1)).alias("__c"))

@@ -334,3 +334,31 @@ def clear_plan_cache() -> int:
     n = len(_PLAN_CACHE)
     _PLAN_CACHE.clear()
     return n
+
+
+# key → (py4j gateway, value). Each value holds handles to JVM objects
+# of the gateway it was built on; keeping that gateway alongside means a
+# restarted gateway is never handed another's (dead) objects, and the
+# strong reference keeps its identity from being reused.
+_JVM_CACHE: dict = {}
+
+
+def jvm_cached(key, build):
+    """``build()``, memoized per ``key`` for the life of the JVM gateway.
+
+    For Column expressions that are pure functions of ``key``: building
+    a wide expression tree costs one py4j round trip per node (thousands
+    for the decode projection and the entries fold), while a Column is an
+    immutable, session-independent expression that every DataFrame built
+    from it resolves afresh. Per-batch code that rebuilds the same trees
+    pays that cost once per JVM instead of once per call.
+    """
+    from pyspark import SparkContext
+
+    gateway = SparkContext._gateway
+    hit = _JVM_CACHE.get(key)
+    if hit is not None and hit[0] is gateway:
+        return hit[1]
+    value = build()
+    _JVM_CACHE[key] = (gateway, value)
+    return value

@@ -157,6 +157,46 @@ def test_merge_accepts_legacy_stored_table_without_flag(spark):
     assert merged[P]["isPlaceholder"] is False
 
 
+def test_legacy_entries_table_read_from_disk_still_merges(spark):
+    """The delta path reads stored entries with the known schema, no
+    inference job. A table written before the flag column existed —
+    bucketed or not — is read without the flag, and the merge falls
+    back to value inference exactly as for an in-memory legacy frame."""
+    from hypermap_etl_spark.operators.materialize import (
+        _read_entries,
+        merge_entry_states,
+    )
+
+    P = h(65)
+    rows1 = [
+        ev(eventType="Mint", blockNumber=10, logIndex=0, parenthash=ROOT_HASH,
+           childhash=P, labelhash=h(66), label="real"),
+    ]
+    rows2 = [
+        ev(eventType="Fact", blockNumber=20, logIndex=0, parenthash=P,
+           facthash=h(67), labelhash=h(68), label="c", data="0x01"),
+    ]
+    legacy = materialize_entries(events_df(spark, rows1)).drop("isPlaceholder")
+    partial = materialize_entries(
+        events_df(spark, rows2), known_extra=legacy.select("namehash")
+    )
+    expected = _flat(merge_entry_states(legacy, partial))
+    for buckets in (4, None):
+        path = tempfile.mkdtemp() + "/entries"
+        if buckets:
+            with_entry_bucket(legacy, buckets).write.partitionBy(
+                "entry_bucket"
+            ).parquet(path)
+        else:
+            legacy.write.parquet(path)
+        stored = _read_entries(spark, path, buckets)
+        assert "isPlaceholder" not in stored.columns
+        got = _flat(merge_entry_states(stored.drop("entry_bucket"), partial))
+        assert got == expected
+        assert got[P]["label"] == "real"
+        assert got[P]["isPlaceholder"] is False
+
+
 def test_delta_repeat_mint_keeps_first_identity(spark):
     P = h(80)
     rows = [

@@ -76,6 +76,31 @@ def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
     assert tbl.filter(F.col("label") == "b").count() == 4
 
 
+def test_merge_rejects_table_with_unexpected_columns(spark):
+    """The stored table is read with the batch's schema (no inference
+    job), so a table holding a column the batch lacks must still fail
+    the merge loudly, not be rewritten with that column dropped —
+    partitioned or not."""
+    import pytest
+
+    from hypermap_etl_spark.operators.merge import with_block_bucket
+
+    for part in (None, "block_bucket"):
+        path = tempfile.mkdtemp() + "/tbl"
+        batch = with_block_bucket(_mk(spark, 3))
+        merge_into_parquet(
+            spark, path, batch.withColumn("extra", F.lit(1)), ["event_id"],
+            partition_col=part,
+        )
+        with pytest.raises(ValueError, match="extra"):
+            merge_into_parquet(
+                spark, path, with_block_bucket(_mk(spark, 2, start=5)),
+                ["event_id"], partition_col=part,
+            )
+        assert "extra" in spark.read.parquet(path).columns
+        assert spark.read.parquet(path).count() == 3
+
+
 def test_merge_recovers_interrupted_swap(spark):
     """A crash between the two swap renames leaves the table in a
     __old_ dir; the next merge must restore it instead of treating the

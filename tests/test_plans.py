@@ -844,6 +844,7 @@ def test_delta_stored_read_is_partition_pruned(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hypermap_etl_spark.operators.materialize import (
+        _read_entries,
         materialize_entries,
         merge_entry_states,
         touched_namehashes,
@@ -867,7 +868,7 @@ def test_delta_stored_read_is_partition_pruned(spark, tmp_path):
     kb = with_entry_bucket(keys, 8)
     buckets = [r[0] for r in kb.select("entry_bucket").distinct().collect()]
     stored = (
-        spark.read.parquet(path)
+        _read_entries(spark, path, 8)
         .filter(F.col("entry_bucket").isin(buckets))
         .drop("entry_bucket")
     )
