@@ -29,6 +29,32 @@ _BUILT_STORES: set = set()
 _BUILT_VALS: dict = {}
 
 
+# Runs per entry (shared with tools/bench_one.py): best-of-2 for the
+# plan-cached single queries (run 1 settles JIT + AQE stats; run 2 is
+# steady state), but the COLD composites rebuild their whole lineage
+# each run and carry most of the suite's variance — best-of-3 so one
+# GC pause or host-steal spike can't masquerade as a regression
+# (cdc_dedup moved +58% with zero code change under best-of-2).
+# hm_incremental* runs 3 because run 1 includes the one-time
+# base-table build the steady state amortizes away.
+_RUNS_3 = {
+    "curate_pipeline",
+    "cdc_dedup",
+    "hybrid_rrf",
+    "ivf_build",
+    "hm_incremental",
+    "hm_incremental_small",
+    "hm_incremental_small_16x",
+    "hm_incremental_small_64x",
+    "hm_refold_write",
+    "incremental_dedup",
+}
+# minutes-scale control arms: measured once — their magnitude (vs the
+# delta path's flat seconds) IS the result, and dispersion at that
+# scale cannot be mistaken for steal
+_RUNS_1 = {"hm_refold_write_64x"}
+
+
 def build_bench() -> dict:
     """The ordered bench registry: name -> fn(spark, sf_dir).
 
@@ -516,31 +542,6 @@ def main() -> None:
     # +26..58% swings on UNTOUCHED composites when new entries shifted
     # their position in the session (GC/page-cache state differs by
     # position), which drowns real regressions.
-    #
-    # Runs per entry: best-of-2 for the plan-cached single queries
-    # (run 1 settles JIT + AQE stats; run 2 is steady state), but the
-    # COLD composites rebuild their whole lineage each run and carry
-    # most of the suite's variance — best-of-3 so one GC pause or
-    # host-steal spike can't masquerade as a regression (VERDICT r7
-    # task 3; cdc_dedup moved +58% with zero code change under
-    # best-of-2). hm_incremental* runs 3 because run 1 includes the
-    # one-time base-table build the steady state amortizes away.
-    _RUNS_3 = {
-        "curate_pipeline",
-        "cdc_dedup",
-        "hybrid_rrf",
-        "ivf_build",
-        "hm_incremental",
-        "hm_incremental_small",
-        "hm_incremental_small_16x",
-        "hm_incremental_small_64x",
-        "hm_refold_write",
-        "incremental_dedup",
-    }
-    # minutes-scale control arms: measured once — their magnitude (vs
-    # the delta path's flat seconds) IS the result, and dispersion at
-    # that scale cannot be mistaken for steal
-    _RUNS_1 = {"hm_refold_write_64x"}
 
     from hypermap_etl_spark.util import release_persisted
 

@@ -311,6 +311,9 @@ def _md5_shard(col: Column, n_shards: int) -> Column:
     )
 
 
+_PACK_COLS = ("doc_id", "chunk_id", "bucket", "n_tokens", "pack_id")
+
+
 def pack_sequences(
     chunks: DataFrame,
     max_tokens: int = 512,
@@ -336,8 +339,12 @@ def pack_sequences(
     a caller that needs pack_id NEXT TO the chunk payload (e.g.
     curate_pipeline's chunks output) can carry it row-locally instead
     of joining this frame back to the chunks corpus. Default output
-    unchanged.
+    unchanged. A carried name that collides with an output column
+    raises ValueError.
     """
+    clash = sorted(set(carry or ()) & set(_PACK_COLS))
+    if clash:
+        raise ValueError(f"carry names collide with pack_sequences output: {clash}")
     bucket = _md5_bucket(F.col("doc_id"), n_buckets)
     from pyspark.sql.window import Window
 
@@ -353,7 +360,7 @@ def pack_sequences(
     return (
         chunks.withColumn("bucket", bucket)
         .withColumn("pack_id", pack)
-        .select("doc_id", "chunk_id", "bucket", "n_tokens", "pack_id", *(carry or []))
+        .select(*_PACK_COLS, *(carry or []))
     )
 
 

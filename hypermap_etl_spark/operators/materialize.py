@@ -559,227 +559,37 @@ def _merge_state_exprs(
     return SimpleNamespace(s=_side("s", s_cols), b=_side("b", b_cols), out=out)
 
 
-def _pending_manifest_read(spark, ptable: str) -> DataFrame | None:
-    """The manifest-committed pending store: resolve the current
-    version; a manifest with no partitions is an explicitly-committed
-    EMPTY set (≡ no pending)."""
-    from hypermap_etl_spark.sources import manifest as M
-
-    if M.current_version(ptable) is None:
-        return None
-    m = M.read_manifest(ptable)
-    if not m["partitions"]:
-        return None
-    return M.read_table(spark, ptable)
-
-
-def _pending_manifest_publish(pend: DataFrame, ptable: str) -> None:
-    """Commit the pending set as a version-pointed manifest table
-    (VERDICT r8 task 2): data lands in a fresh prefix, the commit is
-    one manifest PUT + one pointer flip — NO data renames, so
-    incremental_entries_delta_manifest is rename-free end-to-end as
-    its contract claims. An empty set publishes a manifest with zero
-    partitions (no data write at all). The store is model-sized by
-    construction, so the trailing vacuum (keep last 2 snapshots) is
-    cheap and bounds on-disk growth across a long stream."""
-    from hypermap_etl_spark.sources import manifest as M
-
-    if pend.isEmpty():
-        with M._merge_lock(ptable):
-            M._publish(ptable, {"partition_col": None, "partitions": {}})
-    else:
-        M.write_table(pend, ptable)
-    M.vacuum_table(ptable, keep=2)
-
-
-def incremental_entries_delta_manifest(
-    spark,
-    table: str,
-    new_events: DataFrame,
-    root_hash: str = ROOT_HASH,
-    entry_buckets: int = 16,
-) -> dict[str, int]:
-    """The complete 100 TB maintenance story in one call: O(batch)
-    delta maintenance (no history replay — incremental_entries_delta's
-    fold+merge) COMMITTED through the manifest protocol
-    (sources/manifest.py — no data renames ANYWHERE, including the
-    pending early-writes store, which is itself a manifest table:
-    readers resolve a manifest, so object stores are safe and a reader
-    racing the batch sees a complete old or new snapshot). Untouched
-    entry buckets' file entries carry forward verbatim in the new
-    manifest; a bad batch is undone by rollback_table (pointer
-    re-publish, no data movement). Same block-order contract as the
-    plain delta path; re-applied batches re-merge idempotently — a
-    crash between the entries commit and the pending commit leaves the
-    OLD pending current, and its retriable rows simply re-apply
-    idempotently on the next batch."""
-    from hypermap_etl_spark.sources import manifest as M
-    from hypermap_etl_spark.util import release_local_checkpoint
-
-    import json as _json
-
-    ptable = _pending_path(table)
-    pending = _pending_manifest_read(spark, ptable)
-    had_pending = pending is not None
-
-    # stored rows first, pruned by the BATCH's touched keys (equal to
-    # the fold input's touched set — retried rows' targets are the
-    # batch's own minted keys), so the retry split below can drop
-    # crash-window stale rows whose target is already stored
-    stored_touched = None
-    stored_keys = None
-    if M.current_version(table) is not None:
-        keys = touched_namehashes(new_events)
-        kb = with_entry_bucket(keys, entry_buckets)
-        buckets = [
-            r[0] for r in kb.select("entry_bucket").distinct().collect()
-        ]
-        m = M.read_manifest(table)
-        present = [b for b in buckets if _json.dumps(b) in m["partitions"]]
-        if present:
-            stored_touched = (
-                M.read_table(spark, table, partition_values=present)
-                .drop("entry_bucket")
-                .join(F.broadcast(keys), "namehash", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            stored_keys = stored_touched.select("namehash")
-
-    leftover = None
-    if had_pending:
-        retriable, leftover = _split_retriable_pending(
-            pending, new_events, root_hash
-        )
-        if stored_keys is not None:
-            # staleness guard — same invariant as the plain path: a
-            # stored target means the row was already applied; only a
-            # crashed-and-never-redelivered pending publish leaves it
-            # here, and re-folding it would replay an old write
-            sk = F.broadcast(stored_keys)
-            tagged = retriable.withColumn("__t", _write_target())
-            retriable = tagged.join(
-                sk, tagged["__t"] == sk["namehash"], "left_anti"
-            ).drop("__t")
-        new_events = new_events.unionByName(
-            retriable, allowMissingColumns=True
-        )
-
-    if M.current_version(table) is None and not had_pending:
-        from pyspark.sql import Observation
-
-        from hypermap_etl_spark.operators.merge import _obs_count
-
-        obs = Observation()
-        first = (
-            with_entry_bucket(
-                materialize_entries(new_events, root_hash), entry_buckets
-            )
-            .repartition("entry_bucket")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-        )
-        # count observed on the bootstrap write itself: a batch of only
-        # early writes folds to ZERO entries, whose empty manifest a
-        # read-back count cannot even resolve
-        M.write_table(first, table, partition_col="entry_bucket")
-        pend = _unknown_writes(
-            new_events, _known_now(new_events, None, root_hash)
-        )
-        if not pend.isEmpty():
-            _pending_manifest_publish(pend, ptable)
-        return {
-            "upsertedCount": int(_obs_count(obs)),
-            "modifiedCount": 0,
-        }
-
-    try:
-        new_events = new_events.localCheckpoint(eager=True)
-    except Exception:
-        if stored_touched is not None:
-            release_local_checkpoint(stored_touched)
-        raise
-    try:
-        if stored_touched is None:
-            updated = materialize_entries(new_events, root_hash)
-        else:
-            partial = materialize_entries(
-                new_events, root_hash, known_extra=stored_keys
-            )
-            updated = merge_entry_states(stored_touched, partial, root_hash)
-        updated = with_entry_bucket(updated, entry_buckets).repartition(
-            "entry_bucket"
-        )
-        res = M.merge_table(
-            spark, table, updated, ["namehash"], partition_col="entry_bucket"
-        )
-        pend = _unknown_writes(
-            new_events, _known_now(new_events, stored_keys, root_hash)
-        )
-        if leftover is not None:
-            pend = pend.unionByName(leftover, allowMissingColumns=True)
-        if had_pending or not pend.isEmpty():
-            _pending_manifest_publish(pend, ptable)
-        return res
-    finally:
-        if stored_touched is not None:
-            release_local_checkpoint(stored_touched)
-        release_local_checkpoint(new_events)
-
-
 def _pending_path(entries_path: str) -> str:
     return entries_path.rstrip("/") + "__pending"
 
 
 def _read_pending(spark, pending_path: str, schema) -> DataFrame | None:
-    """The parked early-writes store, with crash recovery: a swap that
-    died between the two renames leaves the data in a ``__old_`` dir —
-    restore the NEWEST one (by mtime — token order is random uuid, not
-    recency) and sweep the rest; when the pending dir itself
-    exists, any ``__old_`` dir is a leak from a crash after the second
-    rename and must be swept too, or a LATER mid-swap crash could
-    restore that stale snapshot over the live one. Stale
-    ``__staging_`` dirs are untrusted garbage. The store is read with
-    ``schema``, the batch events' schema it was written with.
+    """The parked early-writes store, read with ``schema`` (the batch
+    events' schema it was written with); None when there is none. A
+    crashed ``_swap_pending`` is healed first, by the same recovery as
+    every other staged swap (merge._recover_interrupted_swap).
 
-    POSIX-only scope: this store commits via atomic directory rename;
-    on S3-class object stores use incremental_entries_delta_manifest,
-    whose pending store is manifest-committed (no renames)."""
-    import glob as _glob
+    POSIX-only scope: the store commits via directory renames, like
+    the unpartitioned MERGE (see operators/merge.py)."""
     import os as _os
-    import shutil as _shutil
 
-    for d in _glob.glob(pending_path + "__staging_*"):
-        _shutil.rmtree(d, ignore_errors=True)
-    olds = _glob.glob(pending_path + "__old_*")
+    from hypermap_etl_spark.operators.merge import (
+        _recover_interrupted_swap,
+        read_parquet_as,
+    )
+
+    _recover_interrupted_swap(pending_path)
     if not _os.path.isdir(pending_path):
-        if not olds:
-            return None
-        newest = max(olds, key=_os.path.getmtime)
-        _os.rename(newest, pending_path)
-        olds.remove(newest)
-    for d in olds:
-        _shutil.rmtree(d, ignore_errors=True)
-    from hypermap_etl_spark.operators.merge import read_parquet_as
-
+        return None
     return read_parquet_as(spark, pending_path, schema)
 
 
 def _swap_pending(pend: DataFrame, pending_path: str) -> None:
-    """Replace the pending store with ``pend`` via the staged
-    double-rename (recovered by _read_pending on the next batch).
-    POSIX-only (see _read_pending); the manifest delta path commits
-    its pending set rename-free instead."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
+    """Replace the pending store with ``pend`` (merge._swap_in; healed
+    by _read_pending on the next batch)."""
+    from hypermap_etl_spark.operators.merge import _swap_in
 
-    tok = _uuid.uuid4().hex[:8]
-    staging = f"{pending_path}__staging_{tok}"
-    pend.write.mode("overwrite").parquet(staging)
-    old = f"{pending_path}__old_{tok}"
-    if _os.path.exists(pending_path):
-        _os.rename(pending_path, old)
-    _os.rename(staging, pending_path)
-    _shutil.rmtree(old, ignore_errors=True)
+    _swap_in(pend, pending_path)
 
 
 def _write_target() -> "F.Column":
@@ -803,7 +613,7 @@ def _split_retriable_pending(
     parent — targets only ever become known through Mints, and pending
     rows are never Mints) vs the rest, which stay parked untouched.
 
-    Bounds the retry cost (ADVICE r8): without this split every parked
+    Bounds the retry cost: without this split every parked
     row re-enters the fold on every batch — on adversarial logs
     (writes to never-minted targets) per-batch work degrades to
     O(all-time unknown writes) and each parked key inflates
@@ -894,7 +704,7 @@ def incremental_entries_delta(
     (materialize_entries with ``known_extra`` = the touched keys'
     stored rows, read bucket-pruned from the standing table), combine
     associatively with the stored rows (merge_entry_states), MERGE the
-    result back, then atomically replace the pending store with the
+    result back, then replace the pending store with the
     still-unknown remainder. Work is O(batch events + pending +
     touched stored rows); no full-log scan exists anywhere in the
     plan. On-chain logs keep the pending store empty (mint precedes

@@ -29,11 +29,15 @@ with optimistic concurrency (Delta/Iceberg) instead.
 Durability: with ``partition_col`` the merge is a DYNAMIC PARTITION
 OVERWRITE — only partitions present in the incoming batch are
 rewritten; untouched partition files are never touched. Without it,
-the rewrite is staged to a temp dir and swapped via two renames; the
-swap is NOT atomic (a crash between the renames leaves the data in a
-``__old_`` dir), so the next merge first recovers any interrupted
-swap. Both paths assume a local/HDFS-like filesystem — object stores
-without atomic rename need a table format (Delta/Iceberg) instead.
+the rewrite goes through ``_swap_in``, the ONE whole-table commit of
+every unpartitioned rewrite here (merge, delete_keys, reorg_rollback,
+compact_small_table) and of the delta path's pending store: stage,
+rename the table away, rename the staging dir in, drop the old dir.
+The swap is NOT atomic (a crash between the renames leaves the data in
+a ``__old_`` dir), so every caller first runs
+``_recover_interrupted_swap``. Both paths assume a local/HDFS-like
+filesystem — object stores without atomic rename need a table format
+(sources/manifest.py, Delta/Iceberg) instead.
 
 Scale note: rewriting the full table per merge is the plain-parquet
 cost; the Delta MERGE path (file-level pruning on the key's min/max
@@ -100,8 +104,8 @@ class _merge_lock:
     Merges were always documented single-writer per table; this makes a
     violation a loud ConcurrentMergeError instead of a silent race
     (_recover_interrupted_swap deletes ALL sibling staging dirs, so a
-    concurrent writer's live staging dir would be destroyed mid-write —
-    the r2 review's concern). mkdir is atomic on POSIX and HDFS-likes;
+    concurrent writer's live staging dir would be destroyed
+    mid-write). mkdir is atomic on POSIX and HDFS-likes;
     locks older than LOCK_STALE_SECS are treated as crashed writers and
     taken over.
     """
@@ -128,14 +132,34 @@ class _merge_lock:
         return False
 
 
-def _recover_interrupted_swap(path: str) -> None:
-    """Heal a previous merge that crashed between the two swap renames.
+def _swap_in(df: DataFrame, path: str) -> None:
+    """Replace the unpartitioned table at ``path`` with ``df``: write
+    it to a ``__staging_`` dir, rename the table away to an ``__old_``
+    dir, rename the staging dir in, drop the old dir. A missing table
+    is simply created by the second rename. Not atomic — a crash
+    leaves sibling dirs that ``_recover_interrupted_swap`` heals, so
+    callers run it before they read ``path``."""
+    tok = uuid.uuid4().hex[:8]
+    staging = f"{path}__staging_{tok}"
+    df.write.mode("overwrite").parquet(staging)
+    old = f"{path}__old_{tok}"
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(staging, path)
+    shutil.rmtree(old, ignore_errors=True)
 
-    The swap is rename(path→old); rename(staging→path); rmtree(old). A
-    crash in the gap leaves no table at ``path`` and the full data in
-    the ``__old_`` dir — restore the newest one. Stale ``__staging_``
-    dirs (crash before the first rename) are just deleted: the table
-    at ``path`` is still the authoritative pre-merge state.
+
+def _recover_interrupted_swap(path: str) -> None:
+    """Heal a ``_swap_in`` that crashed part way.
+
+    A crash between the two renames leaves no table at ``path`` and the
+    full data in the ``__old_`` dir — restore the newest one (by mtime:
+    tokens are random, not ordered). When ``path`` exists every
+    ``__old_`` dir is a leak (crash after the second rename, or an
+    orphaned partition trash dir) and is swept, or a LATER mid-swap
+    crash could restore that stale snapshot over the live one. Stale
+    ``__staging_`` dirs (crash before the first rename) are deleted:
+    the table at ``path`` is still the authoritative prior state.
     """
     parent, base = os.path.split(os.path.abspath(path))
     if not os.path.isdir(parent):
@@ -208,6 +232,15 @@ def read_parquet_as(spark: SparkSession, path: str, schema: StructType) -> DataF
             f"expected {sorted(schema.fieldNames())}"
         )
     return spark.read.schema(schema).parquet(path)
+
+
+def _in_partitions(partition_col: str, values) -> "F.Column":
+    """Row filter for the partitions holding ``values``. NULL is a
+    partition value of its own (``__HIVE_DEFAULT_PARTITION__``), which
+    a bare ``isin`` never matches."""
+    col = F.col(partition_col)
+    cond = col.isin([v for v in values if v is not None])
+    return cond | col.isNull() if None in values else cond
 
 
 def _remove_partition_dirs(path: str, partition_col: str, values) -> int:
@@ -353,7 +386,7 @@ def _merge_unlocked(
             return {"upsertedCount": 0, "modifiedCount": 0}
         touched = [r[0] for r in per_part]
         batch_total = sum(r["__c"] for r in per_part)
-        existing = existing.filter(F.col(partition_col).isin(touched))
+        existing = existing.filter(_in_partitions(partition_col, touched))
         obs_new = None
     else:
         # no partition pruning to drive — the batch count is observed
@@ -391,12 +424,7 @@ def _merge_unlocked(
             .parquet(path)
         )
     else:
-        staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(staging)
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
+        _swap_in(merged, path)
     if batch_total is None:
         batch_total = _obs_count(obs_new)
     matched = _obs_count(obs_exist) - _obs_count(obs_surv)
@@ -521,15 +549,15 @@ def compact_small_table(spark: SparkSession, path: str, num_files: int = 1) -> i
 
 def _compact_small_table_unlocked(spark: SparkSession, path: str, num_files: int) -> int:
     _recover_interrupted_swap(path)
-    df = spark.read.parquet(path).distinct().coalesce(num_files)
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    return n
+    obs = Observation()
+    df = (
+        spark.read.parquet(path)
+        .distinct()
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .coalesce(num_files)
+    )
+    _swap_in(df, path)
+    return _obs_count(obs)
 
 
 def delete_keys(
@@ -550,8 +578,7 @@ def delete_keys(
     delete key (users, not block buckets), so touched partitions are
     discovered from the data; then dynamic partition overwrite
     rewrites only those. Untouched partition files are never opened
-    for the rewrite. Without it: staged full rewrite + atomic swap
-    (the merge discipline).
+    for the rewrite. Without it: the staged swap (``_swap_in``).
 
     Same single-writer lock as merge — a concurrent writer raises
     instead of racing. Returns {"deletedCount", "partitionsRewritten"}.
@@ -565,19 +592,22 @@ def delete_keys(
         key = [F.col(f"e.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key_cols]
 
         if partition_col:
-            touched = [
-                r[0]
-                for r in existing.select(*key_cols, partition_col)
+            # the semi-join that finds the touched partitions also
+            # counts the doomed rows: each matching stored row is
+            # emitted once, so the per-partition counts sum to exactly
+            # what the rewrite below removes
+            per_part = (
+                existing.select(*key_cols, partition_col)
                 .alias("e")
                 .join(keys.alias("n"), key, "left_semi")
-                .select(partition_col)
-                .distinct()
+                .groupBy(partition_col)
+                .agg(F.count(F.lit(1)).alias("__c"))
                 .collect()
-            ]
-            if not touched:
+            )
+            if not per_part:
                 return {"deletedCount": 0, "partitionsRewritten": 0}
-            scoped = existing.filter(F.col(partition_col).isin(touched))
-            n_before = scoped.count()
+            touched = [r[0] for r in per_part]
+            scoped = existing.filter(_in_partitions(partition_col, touched))
             survivors = scoped.alias("e").join(keys.alias("n"), key, "left_anti")
             # dynamic overwrite only replaces partitions PRESENT in the
             # output: a touched partition whose every row is deleted
@@ -594,36 +624,22 @@ def delete_keys(
                 .parquet(path)
             )
             _remove_partition_dirs(path, partition_col, set(touched) - kept)
-            # a delete that emptied EVERY partition leaves a bare table
-            # root Spark cannot infer a schema from (fuzzer-found via
-            # reorg_rollback's total-reorg repair)
-            n_after = (
-                spark.read.parquet(path)
-                .filter(F.col(partition_col).isin(touched))
-                .count()
-                if _has_parquet_files(path)
-                else 0
-            )
             return {
-                "deletedCount": n_before - n_after,
+                "deletedCount": sum(r["__c"] for r in per_part),
                 "partitionsRewritten": len(touched),
             }
 
-        n_before = existing.count()
-        survivors = existing.alias("e").join(keys.alias("n"), key, "left_anti")
-        staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-        survivors.write.mode("overwrite").parquet(staging)
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
-        n_after = (
-            spark.read.parquet(path).count()
-            if _has_parquet_files(path)
-            else 0  # every row deleted: empty staging has no data file
+        # deleted = stored − survivors, both observed on the swap write
+        obs_exist, obs_surv = Observation(), Observation()
+        survivors = (
+            existing.observe(obs_exist, F.count(F.lit(1)).alias("n"))
+            .alias("e")
+            .join(keys.alias("n"), key, "left_anti")
+            .observe(obs_surv, F.count(F.lit(1)).alias("n"))
         )
+        _swap_in(survivors, path)
         return {
-            "deletedCount": n_before - n_after,
+            "deletedCount": _obs_count(obs_exist) - _obs_count(obs_surv),
             "partitionsRewritten": 0,
         }
 
@@ -650,7 +666,7 @@ def reorg_rollback(
     directories without ever being opened, the fork's own bucket is
     the single partition rewrite, and every bucket below is untouched
     — work is O(reorg depth), not O(log). Unpartitioned fallback:
-    staged full rewrite + atomic swap (the merge discipline).
+    the staged swap (``_swap_in``).
 
     Entries (optional, keyed repair — the incremental_entries_update
     machinery run in reverse): the fold is a pure function of each
@@ -727,13 +743,9 @@ def reorg_rollback(
                         )
                         out["bucketsRewritten"] = 1
             else:
-                survivors = existing.filter(F.col(block_col) <= fork_block)
-                staging = f"{events_path}__staging_{uuid.uuid4().hex[:8]}"
-                survivors.write.mode("overwrite").parquet(staging)
-                old = f"{events_path}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(events_path, old)
-                os.rename(staging, events_path)
-                shutil.rmtree(old)
+                _swap_in(
+                    existing.filter(F.col(block_col) <= fork_block), events_path
+                )
 
     if entries_path is None or not _has_parquet_files(entries_path):
         # absent OR holding no data file (a fold of a log that created

@@ -1,7 +1,8 @@
-"""Manifest-committed parquet tables — the object-store-safe commit
-protocol the MERGE sink's docstring promises (operators/merge.py:32-40
-documented the staged double-rename as local/HDFS-only and named this
-as "the 100 TB answer and a drop-in swap"; this is that swap).
+"""Manifest-committed parquet tables — the object-store-safe
+alternative to the staged double-rename that operators/merge.py
+commits unpartitioned rewrites with (``_swap_in``, local/HDFS-only).
+The ``manifest`` CLI drives it; the index stream, the entries delta
+path and the serving queries use the plain parquet layout.
 
 Why renames are the problem: S3-class object stores have no atomic
 directory rename — the staged-swap MERGE (rename table away, rename
@@ -125,7 +126,7 @@ def _publish_cas(
     """Multi-writer commit via compare-and-set on the manifest FILE —
     the local analog of an object store's conditional PUT (S3
     ``If-None-Match: *`` / GCS ``ifGenerationMatch=0`` on the
-    ``manifests/m-{v+1}.json`` key; VERDICT r8 task 8).
+    ``manifests/m-{v+1}.json`` key).
 
     The CAS primitive is ``os.link(tmp, mpath)``: the manifest content
     is fully written to a private tmp file first, then linked into
@@ -192,7 +193,7 @@ def _publish_cas(
 def _flip_pointer(table: str, v: int) -> None:
     """Forward-only compare-and-swap of the ``_latest`` pointer.
 
-    The check-then-rename race (ADVICE r9-medium): flipper A (v=5) and
+    The check-then-rename race: flipper A (v=5) and
     flipper B (v=6) both read pointer=4; B renames ptr→6, then A's late
     rename regresses it to 5, and — before ``_publish`` was rebased on
     the on-disk max — the next locked writer computed version 6 from
@@ -240,7 +241,7 @@ def _publish(table: str, manifest: dict) -> int:
     object store both writes become single small conditional PUTs.
 
     Versions off ``_max_manifest_version`` and commits through the same
-    ``os.link`` CAS as ``_publish_cas`` (ADVICE r9-medium): the pointer
+    ``os.link`` CAS as ``_publish_cas``: the pointer
     can lag the on-disk max (crash between manifest link and pointer
     flip, or a late flipper losing the race), and basing on
     ``current_version`` then recomputed an already-taken version whose
@@ -287,7 +288,7 @@ def _decode_partition_key(raw: str, dtype: str | None) -> str:
     spell NULL as ``__HIVE_DEFAULT_PARTITION__`` — and the key must
     round-trip with the ``json.dumps(value)`` a later merge computes
     from COLLECTED values, so the value is typed from the dataframe
-    schema, never guessed from the digits (ADVICE r8: the digit
+    schema, never guessed from the digits (a digit
     heuristic turned the string value '0123' into int 123, so the
     stale partition was carried forward forever alongside the new one
     and pruned reads missed it). Same decoding discipline as

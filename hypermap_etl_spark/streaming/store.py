@@ -39,8 +39,8 @@ Crash recovery (``recover_compact``, run on every compaction entry):
 
 Without recovery, a crash between steps 4 and 5 left the store with
 zero readable partitions, and a re-run short-circuited on the <=1
-check without restoring them — the exact window the r7 review flagged
-(streaming/abmonitor.py, inherited from drift.py and topk.py).
+check without restoring them (streaming/abmonitor.py, inherited from
+drift.py and topk.py).
 """
 
 from __future__ import annotations
@@ -130,11 +130,10 @@ def compact_store(
     (only the listed partitions are replaced) and against crashes at
     any step (see module docstring).
 
-    POSIX-only scope (VERDICT r8): the swap commits via atomic
-    directory renames, which S3-class object stores do not have — on
-    an object store keep the additive store un-compacted (appends are
-    rename-free) or commit it through sources/manifest.py the way the
-    delta path's pending store is."""
+    POSIX-only scope: the swap commits via atomic directory renames,
+    which S3-class object stores do not have — on an object store keep
+    the additive store un-compacted (appends are rename-free) or commit
+    it through sources/manifest.py."""
     recover_compact(store_path)
     parts = [d for d in os.listdir(store_path) if d.startswith("batch_id=")]
     if len(parts) <= 1:

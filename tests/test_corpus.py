@@ -185,6 +185,20 @@ def test_pack_sequences_budget_and_order(spark):
         by_doc[r["doc_id"]] = r["pack_id"]
 
 
+def test_pack_sequences_rejects_colliding_carry(spark):
+    """A carried column named like an output column raises at call time
+    instead of surfacing later as an ambiguous-column error; other
+    carried columns ride through unchanged."""
+    docs = _docs(spark, ["a b c d e f"])
+    chunks = corpus.token_chunks(docs, chunk_tokens=4, overlap=0)
+    for name in ("doc_id", "chunk_id", "bucket", "n_tokens", "pack_id"):
+        with pytest.raises(ValueError, match=name):
+            corpus.pack_sequences(chunks, carry=[name])
+    packed = corpus.pack_sequences(chunks.withColumn("src", F.lit("s")), carry=["src"])
+    assert packed.columns[-1] == "src"
+    assert {r["src"] for r in packed.collect()} == {"s"}
+
+
 def test_tfidf_top_terms_ranks_distinctive_words(spark):
     from hypermap_etl_spark.operators import textstats
 

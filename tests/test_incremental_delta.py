@@ -279,62 +279,6 @@ def test_delta_children_union_across_batches(spark):
     assert got[P]["children"] == tuple(sorted([C1, C2, C3]))
 
 
-def test_delta_manifest_composition(spark):
-    """Delta maintenance committed through the manifest protocol
-    (incremental_entries_delta_manifest): equals the full refold,
-    carries untouched buckets' manifest entries forward verbatim, and
-    a bad batch is undone by a pointer-only rollback."""
-    import json
-
-    from hypermap_etl_spark.operators.materialize import (
-        incremental_entries_delta_manifest,
-    )
-    from hypermap_etl_spark.sources.manifest import (
-        read_manifest,
-        read_table,
-        rollback_table,
-    )
-
-    rows = sorted(
-        _fixture_rows(), key=lambda r: (r["blockNumber"], r["logIndex"])
-    )
-    batches = [
-        [r for r in rows if r["blockNumber"] <= 15],
-        [r for r in rows if 15 < r["blockNumber"] <= 19],
-        [r for r in rows if r["blockNumber"] > 19],
-    ]
-    table = tempfile.mkdtemp() + "/entries"
-    manifests = []
-    for b in batches:
-        incremental_entries_delta_manifest(
-            spark, table, events_df(spark, b), entry_buckets=4
-        )
-        manifests.append(read_manifest(table))
-
-    expected = _flat(materialize_entries(events_df(spark, rows)))
-    got = _flat(read_table(spark, table).drop("entry_bucket"))
-    assert got == expected
-
-    # untouched buckets carry forward: every bucket NOT touched by
-    # batch 3 keeps its batch-2 manifest entry byte-for-byte
-    m2, m3 = manifests[1], manifests[2]
-    changed = {
-        k for k in m3["partitions"]
-        if m2["partitions"].get(k) != m3["partitions"][k]
-    }
-    untouched = set(m2["partitions"]) - changed
-    assert untouched or len(m2["partitions"]) == len(changed)
-    for k in untouched:
-        assert m3["partitions"][k] == m2["partitions"][k]
-
-    # rollback to the post-batch-2 state: pointer-only restore
-    rollback_table(table, m2["version"])
-    mid = _flat(
-        materialize_entries(events_df(spark, batches[0] + batches[1]))
-    )
-    assert _flat(read_table(spark, table).drop("entry_bucket")) == mid
-
-
 # --- hypothesis: random logs, random block cuts ---------------------------
 
 from hypothesis import HealthCheck, given, settings
@@ -405,7 +349,7 @@ def test_delta_early_write_parked_then_applied(spark):
 
 def test_split_retriable_pending(spark):
     """Only pending rows whose target the CURRENT batch introduces
-    re-enter the fold (ADVICE r8 retry bound); the rest stay parked
+    re-enter the fold (the retry bound); the rest stay parked
     at the cost of one semi-join, never a fold."""
     from hypermap_etl_spark.operators.materialize import (
         _split_retriable_pending,
@@ -428,75 +372,6 @@ def test_split_retriable_pending(spark):
     assert sorted(r["eventType"] for r in leftover.collect()) == [
         "Gene", "Transfer",
     ]
-
-
-def test_delta_manifest_pending_is_rename_free_and_crash_safe(
-    spark, monkeypatch
-):
-    """VERDICT r8 task 2: the manifest delta path's pending store is
-    itself a manifest table — no __staging_/__old_ rename dirs ever
-    exist — and a crash BETWEEN the entries commit and the pending
-    commit re-applies idempotently on the next delivery."""
-    import glob
-    import os
-
-    from hypermap_etl_spark.operators import materialize as mat
-    from hypermap_etl_spark.operators.materialize import (
-        incremental_entries_delta_manifest,
-    )
-    from hypermap_etl_spark.sources.manifest import read_table
-
-    X = h(35)
-    rows = [
-        ev(eventType="Transfer", blockNumber=4, logIndex=0,
-           **{"from": addr(1), "to": addr(2), "id": X}),
-        ev(eventType="Fact", blockNumber=4, logIndex=1, parenthash=X,
-           facthash=h(36), labelhash=h(37), label="early", data="0xee"),
-        ev(eventType="Mint", blockNumber=6, logIndex=0, parenthash=ROOT_HASH,
-           childhash=X, labelhash=h(38), label="x"),
-    ]
-    b1 = [r for r in rows if r["blockNumber"] <= 5]
-    b2 = [r for r in rows if r["blockNumber"] > 5]
-    table = tempfile.mkdtemp() + "/entries"
-    ptable = table + "__pending"
-    incremental_entries_delta_manifest(spark, table, events_df(spark, b1))
-    # the pending store is a manifest table, not a rename-swapped dir
-    assert os.path.isdir(os.path.join(ptable, "manifests"))
-    assert os.path.isfile(os.path.join(ptable, "_latest"))
-    assert not glob.glob(ptable + "__staging_*")
-    assert not glob.glob(ptable + "__old_*")
-    assert read_table(spark, ptable).count() == 2
-
-    # crash between the entries merge and the pending publish
-    real_publish = mat._pending_manifest_publish
-
-    def _boom(pend, p):
-        raise RuntimeError("simulated crash before pending publish")
-
-    monkeypatch.setattr(mat, "_pending_manifest_publish", _boom)
-    try:
-        incremental_entries_delta_manifest(
-            spark, table, events_df(spark, b2)
-        )
-        raise AssertionError("expected the simulated crash")
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(mat, "_pending_manifest_publish", real_publish)
-    # old pending is still current (2 rows) — re-delivering the batch
-    # re-merges idempotently and then retires the parked writes
-    assert read_table(spark, ptable).count() == 2
-    incremental_entries_delta_manifest(spark, table, events_df(spark, b2))
-    expected = _flat(materialize_entries(events_df(spark, rows)))
-    got = _flat(read_table(spark, table).drop("entry_bucket"))
-    assert got == expected
-    assert got[X]["owner"] == addr(2)
-    assert got[X]["facts"] == (("early", "0xee"),)
-    # applied writes left the pending store: empty manifest commit
-    from hypermap_etl_spark.sources.manifest import read_manifest
-
-    assert read_manifest(ptable)["partitions"] == {}
-    assert not glob.glob(ptable + "__staging_*")
-    assert not glob.glob(ptable + "__old_*")
 
 
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))

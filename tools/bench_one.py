@@ -29,13 +29,6 @@ import bench as B
 from hypermap_etl_spark.session import get_spark
 from hypermap_etl_spark.util import release_persisted
 
-_RUNS_3 = {
-    "curate_pipeline", "cdc_dedup", "hybrid_rrf", "ivf_build",
-    "hm_incremental", "hm_incremental_small", "hm_incremental_small_16x",
-    "hm_incremental_small_64x", "hm_refold_write", "incremental_dedup",
-}
-_RUNS_1 = {"hm_refold_write_64x"}
-
 
 def main() -> int:
     args = sys.argv[1:]
@@ -78,7 +71,7 @@ def main() -> int:
             print(f"# {name}: plan captured", flush=True)
             continue
         n_runs = forced_runs or (
-            1 if name in _RUNS_1 else 3 if name in _RUNS_3 else 2
+            1 if name in B._RUNS_1 else 3 if name in B._RUNS_3 else 2
         )
         runs = []
         rows = 0
