@@ -4,7 +4,7 @@ JSON line {"metric", "value", "unit", "queries", "sf"}.
 
 Query selection covers every engine subsystem: the wide hash aggregate
 (q1), join pyramid (q3/q5), windows/sessionization, the hypermap decode
-+ M1-M9 fold, MinHash-LSH dedup, ANN top-k, and (r4) the end-to-end
++ M1-M9 fold, MinHash-LSH dedup, ANN top-k, and the end-to-end
 curate_pipeline composite — quality filter → MinHash dedup → connected
 components → ExactSubstr span surgery → PII redact → split/chunk/pack/
 shard, with the report disabled (stage boundaries still materialize
@@ -58,7 +58,7 @@ _RUNS_1 = {"hm_refold_write_64x"}
 def build_bench() -> dict:
     """The ordered bench registry: name -> fn(spark, sf_dir).
 
-    Split out of main() (r10 measurement infra) so tools/bench_one.py
+    Split out of main() so tools/bench_one.py
     can time single entries and dump their plans with the SAME
     functions the headline bench runs — methodology unchanged."""
     from hypermap_etl_spark.plans.doc_queries import (
@@ -131,7 +131,7 @@ def build_bench() -> dict:
 
     def _hm_incremental_bench(spark, sf_dir, pct, tag):
         """The reference's core loop at bench scale: the top (1-pct) of
-        blocks upserts as a batch into a standing 64-bucket entries
+        blocks upserts as a batch into a standing entry-bucketed entries
         table — recompute only touched keys, rewrite only touched
         buckets. The base table builds once on the first call (a real
         lake amortizes it); best-of-N reports the steady-state upsert."""
@@ -147,7 +147,6 @@ def build_bench() -> dict:
         )
         from hypermap_etl_spark.plans.hm_derive import hm_events_df
 
-        buckets = 64
         hm = hm_events_df(spark, sf_dir).cache()
         if f"cut_{pct}" not in _BUILT_VALS:
             _BUILT_VALS[f"cut_{pct}"] = hm.agg(
@@ -161,23 +160,20 @@ def build_bench() -> dict:
         if f"bench_hm_entries_{sf_tag}_{tag}" not in _BUILT_STORES:
             shutil.rmtree(entries_path, ignore_errors=True)
             base = with_entry_bucket(
-                materialize_entries(hm.filter(F.col("blockNumber") <= cut)),
-                buckets,
+                materialize_entries(hm.filter(F.col("blockNumber") <= cut))
             )
             base.repartition("entry_bucket").write.mode(
                 "overwrite"
             ).partitionBy("entry_bucket").parquet(entries_path)
             _BUILT_STORES.add(f"bench_hm_entries_{sf_tag}_{tag}")
         batch = hm.filter(F.col("blockNumber") > cut)
-        counts = incremental_entries_update(
-            spark, entries_path, hm, batch, entry_buckets=buckets
-        )
+        counts = incremental_entries_update(spark, entries_path, hm, batch)
         return spark.createDataFrame([counts])
 
     def hm_incremental_bench(spark, sf_dir):
         return _hm_incremental_bench(spark, sf_dir, 0.95, "p95")
 
-    # ---- the incremental-vs-refold CROSSOVER (VERDICT r7 task 2) ----
+    # ---- the incremental-vs-refold CROSSOVER ----
     # The refold pays O(|log|) every run; incremental maintenance pays
     # O(batch + touched stored rows) — but Spark's per-action floor
     # (planning + stage scheduling) is seconds, so at sf0.1's 100k-event
@@ -220,8 +216,8 @@ def build_bench() -> dict:
         # cached: the refold comparator references the log from the
         # fold's aggregate branches — a nightly job reads a stored
         # table, not a mult-x re-derivation, so the fair comparator
-        # folds cached rows. COALESCE before caching (r10, guide
-        # §2.2/§6): the union of mult block-shifted copies inherits
+        # folds cached rows. COALESCE before caching: the union of
+        # mult block-shifted copies inherits
         # mult x 32 scan partitions (2048 at 64x, ~0.9 MB each) — every
         # downstream scan then pays thousands of near-empty tasks,
         # which dominated the 64x refold (stage profile: 6 scans x 2048
@@ -273,8 +269,7 @@ def build_bench() -> dict:
                     _hm_logx(spark, sf_dir, mult).filter(
                         F.col("blockNumber") <= cut
                     )
-                ),
-                64,
+                )
             )
             base.repartition("entry_bucket").write.mode(
                 "overwrite"
@@ -296,9 +291,7 @@ def build_bench() -> dict:
 
         path, cut = _hmx_setup(spark, sf_dir, mult)
         batch = hm_events_df(spark, sf_dir).filter(F.col("blockNumber") > cut)
-        counts = incremental_entries_delta(
-            spark, path, batch, entry_buckets=64
-        )
+        counts = incremental_entries_delta(spark, path, batch)
         return spark.createDataFrame([counts])
 
     def hm_incremental_small_bench(spark, sf_dir):
@@ -323,9 +316,7 @@ def build_bench() -> dict:
             tempfile.gettempdir(), f"spark_graft_bench_refold{mult}"
         )
         shutil.rmtree(out, ignore_errors=True)
-        full = with_entry_bucket(
-            materialize_entries(_hm_logx(spark, sf_dir, mult)), 64
-        )
+        full = with_entry_bucket(materialize_entries(_hm_logx(spark, sf_dir, mult)))
         full.repartition("entry_bucket").write.mode("overwrite").partitionBy(
             "entry_bucket"
         ).parquet(out)
@@ -359,9 +350,7 @@ def build_bench() -> dict:
 
         out = os.path.join(tempfile.gettempdir(), "spark_graft_bench_refold")
         shutil.rmtree(out, ignore_errors=True)
-        full = with_entry_bucket(
-            materialize_entries(hm_events_df(spark, sf_dir)), 64
-        )
+        full = with_entry_bucket(materialize_entries(hm_events_df(spark, sf_dir)))
         full.repartition("entry_bucket").write.mode("overwrite").partitionBy(
             "entry_bucket"
         ).parquet(out)
@@ -388,7 +377,7 @@ def build_bench() -> dict:
         return similarity.ivf_index_stats(spark, loc)
 
     def ivf_append_bench(spark, sf_dir):
-        """Index maintenance (VERDICT r6 #5): absorb the held-out 5%
+        """Index maintenance: absorb the held-out 5%
         batch against the standing index's PINNED centroids — O(batch)
         assignment, appends only touched cid= directories. Must be
         well under ivf_build — that gap IS the add-vs-train contract
@@ -406,7 +395,7 @@ def build_bench() -> dict:
         emb = load_table(spark, sf_dir, "embeddings")
         batch = emb.filter(F.col("vec_id") % 20 == 0)
         rep = similarity.ivf_index_append(batch, loc)
-        # operational practice (r10, the ivf_serve watch item): the
+        # operational practice (the ivf_serve watch item): the
         # append tail accumulates one file set per touched list per
         # batch — compaction after the append keeps the probed-list
         # scan flat, so ivf_serve times the index a maintained
@@ -443,7 +432,7 @@ def build_bench() -> dict:
         "hm_entries": hm_entries,
         "doc_minhash_pairs": doc_minhash_pairs,
         "emb_ann_topk": emb_ann_topk,
-        # r5: the hostile-depth paginate (page beyond util.MAX_HEAP_TOP
+        # the hostile-depth paginate (page beyond util.MAX_HEAP_TOP
         # takes the spillable global-window fallback, not per-partition
         # heaps) gets a wall-time number so it can't regress silently
         "events_page_deep": events_page_deep,
@@ -453,43 +442,43 @@ def build_bench() -> dict:
         # + partitioned windows, never a single-task sort) under its
         # production consumer, token-balanced sharding
         "balanced_shards": doc_balanced_shards,
-        # r6: three new subsystems get wall-time numbers — the exact
+        # three subsystems get wall-time numbers — the exact
         # weighted quantile over the big fact (distinct-value windows),
         # the pure-HOF content-defined chunking corpus pass, and the
         # prefix-filtered exact similarity join
         "weighted_median": lineitem_weighted_median,
         "cdc_dedup": doc_cdc_dedup,
         "prefix_pairs": doc_prefix_pairs,
-        # r6 continuation: hybrid retrieval (BM25 leg + hash-embed
+        # hybrid retrieval (BM25 leg + hash-embed
         # cosine leg fused by RRF) — two corpus scans, two top-k legs,
         # fusion on ≤2·k_leg rows
         "hybrid_rrf": doc_hybrid_rrf,
-        # r7: index maintenance — full rebuild vs O(batch) append+serve
+        # index maintenance — full rebuild vs O(batch) append+serve
         # (ivf_build MUST precede ivf_append: the append hits the
         # standing index the build entry wrote)
         "ivf_build": ivf_build_bench,
         "ivf_append": ivf_append_bench,
         "ivf_serve": ivf_serve_bench,
-        # r7 continuation: the reference's CORE LOOP at bench scale —
+        # the reference's CORE LOOP at bench scale —
         # incremental entries maintenance: a 5%-of-blocks batch lands
         # on a standing bucketed entries table; work is O(touched
         # entries' events), never a full refold. First call builds the
         # base table (a real lake amortizes it); best-of-N reports
         # the steady-state batch upsert.
         "hm_incremental": hm_incremental_bench,
-        # r8 (VERDICT r7 task 2): the crossover demonstration — the
+        # the crossover demonstration — the
         # 0.5% batch vs the nightly full refold+write it must beat
         "hm_incremental_small": hm_incremental_small_bench,
         "hm_refold_write_4x": hm_refold_write_4x,
         "hm_refold_write": hm_refold_write,
-        # r9 (VERDICT r8 task 5): the third crossover point — 16x
+        # the third crossover point — 16x
         # history. The refold's cost keeps growing with |log| while the
         # SAME 0.5% delta batch stays flat (its plan never references
         # history length); three points make the flat-vs-linear
         # separation a curve, not a two-point claim.
         "hm_refold_write_16x": hm_refold_write_16x,
         "hm_incremental_small_16x": hm_incremental_small_16x_bench,
-        # r10 (VERDICT r9 task 5): the fourth crossover point — 64x
+        # the fourth crossover point — 64x
         # history makes the refold-linear / delta-flat claim
         # unambiguous: the refold control arm is now ~an order of
         # magnitude past the delta's flat line, far outside any
@@ -499,23 +488,23 @@ def build_bench() -> dict:
         # the one-time 64x base table the steady state amortizes).
         "hm_refold_write_64x": hm_refold_write_64x,
         "hm_incremental_small_64x": hm_incremental_small_64x_bench,
-        # r7 continuation: the iterative-loop graph family gets
+        # the iterative-loop graph family gets
         # wall-time numbers — multi-source BFS (fixpoint early exit)
         # and deterministic LPA (fixed 4 rounds), both the
         # localCheckpoint/release loop discipline over the
         # repeat-co-purchase graph
         "seed_distance": parts_seed_distance,
         "lpa_communities": parts_copurchase_lpa,
-        # r7 continuation 2: the permutation stack at fact scale — a
+        # the permutation stack at fact scale — a
         # x200 map-side replicate expansion folded BEFORE the shuffle
         # (the exchange carries groups*200 rows, not corpus*200),
         # then the integer-exact BH epilogue on |groups| rows
         "permutation_fdr": events_fdr_bh,
-        # r7 continuation 2: candidate generation for link prediction —
+        # candidate generation for link prediction —
         # the degree-capped wedge self-join + anti-join against the
         # edge set (the quadratic-hub trap, capped)
         "link_prediction": parts_link_prediction,
-        # r7 continuation 2: ALL nine exact deciles of the big fact in
+        # ALL nine exact deciles of the big fact in
         # one running-sum pass (distinct-value collapse + range
         # shuffle + bounded q-explode) — the grouped quantile table
         "quantile_table": lineitem_price_deciles,
@@ -538,14 +527,14 @@ def main() -> None:
     bench["q1_pricing_summary"](spark, sf_dir).count()
 
     # Entry ORDER is pinned: `bench` is an insertion-ordered dict and
-    # nothing may iterate it in any other order — the r7 round saw
-    # +26..58% swings on UNTOUCHED composites when new entries shifted
+    # nothing may iterate it in any other order — reordering once
+    # caused +26..58% swings on UNTOUCHED composites when new entries shifted
     # their position in the session (GC/page-cache state differs by
     # position), which drowns real regressions.
 
     from hypermap_etl_spark.util import release_persisted
 
-    # VERDICT r8 task 4: the JSON carries EVERY repeat's timing per
+    # the JSON carries EVERY repeat's timing per
     # entry ("runs"), not just the winner — the microVM shows 2-4x
     # host-steal swings on identical code, and a future reader needs
     # the dispersion to separate regression from steal. "queries" stays
@@ -572,9 +561,8 @@ def main() -> None:
             flush=True,
         )
 
-    # r11 (VERDICT r10 #3): the full runs arrays made the one-line JSON
-    # large enough that a truncated capture nulled the whole r9->r10
-    # PERF comparison. The dispersion evidence still prints — one
+    # the full runs arrays made the one-line JSON large enough that a
+    # truncated capture nulled a whole before/after PERF comparison. The dispersion evidence still prints — one
     # "# name: ... runs=[...]" line per entry above, and as a compact
     # separate line here — but the CONTRACT line carries only
     # queries/value/core8/sf (~1.5 KB), so truncation can't eat it.
@@ -583,8 +571,8 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     # core8 keeps its original membership for round-over-round
     # comparability — an EXPLICIT include list, so adding a headliner
-    # can never silently inflate the core total (the r6 continuation
-    # briefly did exactly that via the old exclusion list)
+    # can never silently inflate the core total (an exclusion list
+    # once did exactly that)
     _CORE8 = (
         "q1_pricing_summary",
         "q3_shipping_priority",

@@ -31,11 +31,11 @@ def _spark(args):
 
 
 def cmd_extract(args) -> None:
-    """Decode + enrich + idempotent MERGE; per-type count report
-    (extract-events.ts:336-355 shape)."""
+    """Decode + enrich + idempotent MERGE into the block-bucketed events
+    table; per-type count report (extract-events.ts:336-355 shape)."""
     from hypermap_etl_spark.operators.decode import decode_raw_logs
     from hypermap_etl_spark.operators.enrich import enrich_timestamps
-    from hypermap_etl_spark.operators.merge import merge_into_parquet
+    from hypermap_etl_spark.operators.merge import merge_into_parquet, with_block_bucket
     from hypermap_etl_spark.sources.raw_logs import read_raw_logs
 
     spark = _spark(args)
@@ -51,23 +51,28 @@ def cmd_extract(args) -> None:
             events = enrich_timestamps(events, spark.read.parquet(args.blocks))
         counts = {r["eventType"]: r["count"]
                   for r in events.groupBy("eventType").count().collect()}
-        res = merge_into_parquet(spark, args.table, events, ["event_id"])
+        res = merge_into_parquet(spark, args.table, with_block_bucket(events),
+                                 ["event_id"], partition_col="block_bucket")
     finally:
         decoded.unpersist()
     print(json.dumps({"counts": counts, "skipped": skipped, **res}))
 
 
 def cmd_index(args) -> None:
-    """extract + entries materialization (index-events.ts flow)."""
+    """extract + entries materialization (index-events.ts flow), in the
+    layout the stream maintains."""
     cmd_extract(args)
-    from hypermap_etl_spark.operators.materialize import materialize_entries
+    from hypermap_etl_spark.operators.materialize import (
+        _read_entries,
+        materialize_entries,
+        with_entry_bucket,
+    )
     from hypermap_etl_spark.session import get_spark
 
     spark = get_spark("hypermap-etl-index")
-    events = spark.read.parquet(args.table)
-    entries = materialize_entries(events)
-    entries.write.mode("overwrite").parquet(args.entries)
-    print(json.dumps({"entries": spark.read.parquet(args.entries).count()}))
+    entries = with_entry_bucket(materialize_entries(spark.read.parquet(args.table)))
+    entries.write.mode("overwrite").partitionBy("entry_bucket").parquet(args.entries)
+    print(json.dumps({"entries": _read_entries(spark, args.entries).count()}))
 
 
 def cmd_scan(args) -> None:
@@ -706,20 +711,17 @@ def cmd_pca(args) -> None:
 
 
 def cmd_reorg(args) -> None:
-    """Chain-reorg recovery (operators/merge.reorg_rollback): truncate
-    the indexed event log above the fork block — whole tail buckets
-    drop as directories, one partition rewrite at most — and repair
-    the derived entries table keyed on what the discarded events (or a
-    previous interrupted run) touched. Prints one JSON report line."""
+    """Chain-reorg recovery (operators/merge.reorg_rollback) on the
+    tables `index` or `stream` wrote: truncate the indexed event log
+    above the fork block — whole tail buckets drop as directories, one
+    partition rewrite at most — and repair the derived entries table
+    keyed on what the discarded events (or a previous interrupted run)
+    touched. Prints one JSON report line."""
     from hypermap_etl_spark.operators.merge import reorg_rollback
 
     spark = _spark(args)
     rep = reorg_rollback(
-        spark,
-        args.table,
-        args.fork_block,
-        entries_path=args.entries,
-        entry_buckets=args.entry_buckets,
+        spark, args.table, args.fork_block, entries_path=args.entries
     )
     print(json.dumps(rep))
 
@@ -799,7 +801,9 @@ def cmd_stream(args) -> None:
     With --entries this is the continuous `index-events` mode: every
     micro-batch also incrementally updates the materialized entries
     (touched namehashes only, replay pruned by the key→bucket side
-    index) with periodic entries-bucket compaction."""
+    index) with periodic entries-bucket compaction. Both tables have
+    the layout `index` writes, so a stream can follow `index` on the
+    same --table/--entries paths."""
     from hypermap_etl_spark.streaming.scan import start_index_stream, start_ingest_stream
     from hypermap_etl_spark.streaming.telemetry import (
         attach_progress_listener,
@@ -2125,8 +2129,6 @@ def main(argv=None) -> None:
                    help="last block that SURVIVES the reorg")
     p.add_argument("--entries", default=None,
                    help="derived entries table to repair")
-    p.add_argument("--entry-buckets", type=int, default=None,
-                   help="entry_bucket partition count of the entries table")
     p = sub.add_parser("calibrate",
                        help="reliability diagram + ECE for a scored parquet")
     p.add_argument("--scored", required=True,

@@ -226,11 +226,16 @@ def token_chunks(
 
 # ------------------------------------------------------- quality filter ----
 
+# keep-filter thresholds shared by train_filter and curate_pipeline
+KEEP_MAX_PUNCT_RATIO = 0.2
+KEEP_MIN_QUALITY = 0.5
+
+
 def train_filter(
     docs: DataFrame,
     min_words: int = 20,
-    max_punct_ratio: float = 0.2,
-    min_quality: float = 0.5,
+    max_punct_ratio: float = KEEP_MAX_PUNCT_RATIO,
+    min_quality: float = KEEP_MIN_QUALITY,
     lang: str = "en",
     text_col: str = "text",
 ) -> DataFrame:
@@ -240,7 +245,7 @@ def train_filter(
     Output: (doc_id, keep, reasons) where reasons is a comma-joined
     list of failed checks ('' when kept).
 
-    ONE projection over one scan (r11, guide §2.4): the quality and
+    ONE projection over one scan: the quality and
     language expressions come from the same shared definitions their
     standalone operators use (textstats.quality_expressions /
     language_scores), evaluated side by side per row — the previous
@@ -334,7 +339,7 @@ def pack_sequences(
     Everything is one window over (bucket, doc_id, chunk_id) — engine-
     reproducible (md5 bucketing, integer cumsum), no Python.
 
-    ``carry`` threads extra chunk columns through unchanged (r11, the
+    ``carry`` threads extra chunk columns through unchanged (the
     cdc_chunks carry pattern): the assignment is a pure window-add, so
     a caller that needs pack_id NEXT TO the chunk payload (e.g.
     curate_pipeline's chunks output) can carry it row-locally instead
@@ -614,7 +619,7 @@ def curate_pipeline(
     # input arrives pre-split and the repartition is a no-op cost-wise.
     #
     # Filter the corpus DIRECTLY with train_filter's row-local keep
-    # expression (r11, guide §2.4): the previous shape computed a
+    # expression: the previous shape computed a
     # separate (doc_id, keep) frame and semi-joined it back, scanning
     # the corpus twice and paying a corpus-sized join for a per-row
     # decision. Same rows by construction (_filter_reasons is the one
@@ -625,19 +630,10 @@ def curate_pipeline(
     # composition this long, per-transformation re-analysis of the full
     # upstream tree made driver-side plan construction the dominant
     # cost (~7 s of a 21 s sf0.1 run). See stage_boundary's docstring.
-    kept = stage_boundary(
-        fan_out(docs).where(
-            _filter_reasons(
-                text_col,
-                min_words=min_words,
-                max_punct_ratio=0.2,
-                min_quality=0.5,
-                lang=lang,
-            )
-            == ""
-        ),
-        cut_lineage=True,
+    reasons = _filter_reasons(
+        text_col, min_words, KEEP_MAX_PUNCT_RATIO, KEEP_MIN_QUALITY, lang
     )
+    kept = stage_boundary(fan_out(docs).where(reasons == ""), cut_lineage=True)
     n_kept = kept.count() if with_report else 0
 
     n_gopher_dropped = 0
@@ -760,7 +756,7 @@ def curate_pipeline(
         )
 
     if redact:
-        # row-local mask chain applied in place (r11, guide §2.4):
+        # row-local mask chain applied in place:
         # redact_pii is a pure projection, so joining its output back
         # to surv was a corpus-sized self-join for a per-row rewrite.
         # _pii_masked is the one shared mask definition redact_pii
@@ -795,8 +791,8 @@ def curate_pipeline(
         )
         documents = base.join(shards.select("doc_id", "shard"), "doc_id")
     else:
-        # the default shard is a row-local md5 bucket of doc_id (r11,
-        # guide §2.4) — attach it as a column instead of joining
+        # the default shard is a row-local md5 bucket of doc_id —
+        # attach it as a column instead of joining
         # shard_assignments' projection back to the corpus (the LPT
         # balanced variant above is a real computation and keeps its
         # join)
@@ -822,7 +818,7 @@ def curate_pipeline(
         )
     else:
         # pack_sequences is a pure window-add, so the pack id rides the
-        # chunk rows via carry (r11) — no join back to the chunks frame
+        # chunk rows via carry — no join back to the chunks frame
         # (the strict packer is an applyInPandas stage; carrying
         # chunk_text through Python would violate guide §4.1, so it
         # keeps the thin-frame join)

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from types import SimpleNamespace
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hypermap_etl_spark.constants import ROOT_HASH
@@ -322,14 +322,15 @@ def events_referencing(events_table: DataFrame, keys: DataFrame) -> DataFrame:
 ENTRY_BUCKETS = 16
 
 
-def with_entry_bucket(df: DataFrame, n: int = ENTRY_BUCKETS) -> DataFrame:
-    """Partition column for the entries table: uniform hash bucket of the
-    namehash key. A pure function of the merge key, so the partitioned
-    MERGE contract holds (a key never moves buckets), and per-batch
-    upserts rewrite only the buckets holding touched entries instead of
-    the whole entries table."""
+def with_entry_bucket(df: DataFrame) -> DataFrame:
+    """Partition column of every entries table: uniform hash bucket of
+    the namehash key into ENTRY_BUCKETS. A pure function of the merge
+    key, so the partitioned MERGE contract holds (a key never moves
+    buckets), and per-batch upserts rewrite only the buckets holding
+    touched entries instead of the whole entries table."""
     bucket = jvm_cached(
-        ("entry_bucket", n), lambda: F.pmod(F.xxhash64(F.col("namehash")), F.lit(n))
+        "entry_bucket",
+        lambda: F.pmod(F.xxhash64(F.col("namehash")), F.lit(ENTRY_BUCKETS)),
     )
     return df.withColumn("entry_bucket", bucket)
 
@@ -340,7 +341,6 @@ def incremental_entries_update(
     events_table: DataFrame,
     new_events: DataFrame,
     root_hash: str = ROOT_HASH,
-    entry_buckets: int | None = None,
 ) -> dict[str, int]:
     """Streaming-scale materialization: recompute ONLY the entries the
     new batch touches, then MERGE them into the stored entries table.
@@ -355,9 +355,6 @@ def incremental_entries_update(
     additionally prune ``events_table`` to the buckets containing the
     touched keys' events before passing it in, so the SCAN is also
     O(touched), not O(log).
-
-    With ``entry_buckets`` the entries table is hash-partitioned on the
-    key (with_entry_bucket) and the MERGE rewrites only touched buckets.
 
     The event log is append-only, so entries never disappear — MERGE
     (upsert) is sufficient, no delete branch.
@@ -382,13 +379,10 @@ def incremental_entries_update(
     updated = materialize_entries(relevant, root_hash).join(
         F.broadcast(keys), "namehash", "left_semi"
     )
-    if entry_buckets:
-        # cluster the rewrite by bucket so each touched partition is
-        # written as one file per holding task instead of one file per
-        # shuffle task x bucket — steady-state file counts stay flat
-        updated = with_entry_bucket(updated, entry_buckets).repartition(
-            "entry_bucket"
-        )
+    # cluster the rewrite by bucket so each touched partition is written
+    # as one file per holding task instead of one file per shuffle task
+    # x bucket — steady-state file counts stay flat
+    updated = with_entry_bucket(updated).repartition("entry_bucket")
     # Materialize ONCE before the merge: merge_into_parquet runs
     # several actions over the batch frame (dedupe, touched-partition
     # collect, matched/upserted counts, the swap write) and each would
@@ -399,17 +393,9 @@ def incremental_entries_update(
     try:
         # assume_unique: the fold is a groupBy(namehash) aggregate —
         # one row per key by construction
-        if entry_buckets:
-            return merge_into_parquet(
-                spark,
-                entries_path,
-                updated,
-                ["namehash"],
-                partition_col="entry_bucket",
-                assume_unique=True,
-            )
         return merge_into_parquet(
-            spark, entries_path, updated, ["namehash"], assume_unique=True
+            spark, entries_path, updated, ["namehash"],
+            partition_col="entry_bucket", assume_unique=True,
         )
     finally:
         release_local_checkpoint(updated)
@@ -689,7 +675,6 @@ def incremental_entries_delta(
     entries_path: str,
     new_events: DataFrame,
     root_hash: str = ROOT_HASH,
-    entry_buckets: int | None = None,
 ) -> dict[str, int]:
     """O(batch) entries maintenance WITHOUT history replay — the true
     delta path (incremental_entries_update's restricted replay rereads
@@ -717,7 +702,10 @@ def incremental_entries_delta(
     RE-APPLYING a batch (crash replay, duplicate delivery) is safe:
     the merge is idempotent, and the pending store is replaced only
     AFTER the entries merge lands (a crash between the two re-applies
-    both, idempotently).
+    both, idempotently). Under the contract the only parked rows at or
+    above the batch's first block are that batch's own, left by an
+    earlier application; they are dropped before the batch re-parks
+    its early writes, so a redelivery never parks them twice.
 
     Bootstrap: a missing entries table is created from the first
     batch's own full fold (plus any parked writes).
@@ -742,7 +730,12 @@ def incremental_entries_delta(
     # lands — the crash-ordering contract is about the swap, not the
     # read-only probe.
     pool = ThreadPoolExecutor(max_workers=2)
-    ev_future = pool.submit(lambda: new_events.localCheckpoint(eager=True))
+    first_block = Observation()  # rides the checkpoint's own job
+    ev_future = pool.submit(
+        lambda: new_events.observe(
+            first_block, F.min("blockNumber").alias("lo")
+        ).localCheckpoint(eager=True)
+    )
     held = []  # checkpoints to release at the end, besides ev_future's
     try:
         # the stored rows are read FIRST, pruned by the BATCH's touched
@@ -755,16 +748,13 @@ def incremental_entries_delta(
         stored_keys = None
         if _os.path.exists(entries_path):
             keys = touched_namehashes(new_events)
-            stored = _read_entries(spark, entries_path, entry_buckets)
-            if entry_buckets:
-                kb = with_entry_bucket(keys, entry_buckets)
-                buckets = [
-                    r[0]
-                    for r in kb.select("entry_bucket").distinct().collect()
-                ]
-                stored = stored.filter(
-                    F.col("entry_bucket").isin(buckets)
-                ).drop("entry_bucket")
+            kb = with_entry_bucket(keys).select("entry_bucket").distinct()
+            buckets = [r[0] for r in kb.collect()]
+            stored = (
+                _read_entries(spark, entries_path)
+                .filter(F.col("entry_bucket").isin(buckets))
+                .drop("entry_bucket")
+            )
             stored_touched = stored.join(
                 F.broadcast(keys), "namehash", "left_semi"
             ).localCheckpoint(eager=True)
@@ -807,11 +797,11 @@ def incremental_entries_delta(
                 events_in, root_hash, known_extra=stored_keys
             )
             updated = merge_entry_states(stored_touched, partial, root_hash)
-        if entry_buckets:
-            updated = with_entry_bucket(updated, entry_buckets).repartition(
-                "entry_bucket"
-            )
-        updated = updated.localCheckpoint(eager=True)
+        updated = (
+            with_entry_bucket(updated)
+            .repartition("entry_bucket")
+            .localCheckpoint(eager=True)
+        )
         held.append(updated)
 
         # the still-unknown remainder comes from the batch alone: retried
@@ -819,6 +809,14 @@ def incremental_entries_delta(
         # targets are batch-minted (so none of them is unknown)
         pend = _unknown_writes(batch, _known_now(batch, stored_keys, root_hash))
         if leftover is not None:
+            # no metric when an empty batch's plan was optimized away
+            lo = first_block.get.get("lo")
+            if lo is not None:
+                # a redelivered batch's own parked rows: the batch
+                # re-parks them above (NULL blocks are kept)
+                leftover = leftover.filter(
+                    ~F.coalesce(F.col("blockNumber") >= lo, F.lit(False))
+                )
             pend = pend.unionByName(leftover, allowMissingColumns=True)
         # overlap (b): the READ-ONLY emptiness probe of the pending
         # remainder runs while the entries MERGE writes — both consume
@@ -829,20 +827,10 @@ def incremental_entries_delta(
         # assume_unique: both branches produce one row per namehash —
         # the fold is a groupBy(namehash) aggregate and
         # merge_entry_states full-outer-joins two unique frames on it
-        if entry_buckets:
-            res = merge_into_parquet(
-                spark,
-                entries_path,
-                updated,
-                ["namehash"],
-                partition_col="entry_bucket",
-                assume_unique=True,
-            )
-        else:
-            res = merge_into_parquet(
-                spark, entries_path, updated, ["namehash"],
-                assume_unique=True,
-            )
+        res = merge_into_parquet(
+            spark, entries_path, updated, ["namehash"],
+            partition_col="entry_bucket", assume_unique=True,
+        )
         # pending is replaced only AFTER the merge landed (crash
         # between the two re-applies both, idempotently). Skipped
         # entirely while no early write has ever been seen, so the
@@ -858,19 +846,17 @@ def incremental_entries_delta(
             release_local_checkpoint(df)
 
 
-def _read_entries(spark, entries_path: str, entry_buckets: int | None) -> DataFrame:
-    """The stored entries table, read with its known schema (ENTRY_SCHEMA,
-    plus ``entry_bucket`` when bucketed). A table written before the
-    ``isPlaceholder`` column existed is read without it;
+def _read_entries(spark, entries_path: str) -> DataFrame:
+    """The stored entries table, read with its known schema (ENTRY_SCHEMA
+    plus the ``entry_bucket`` partition column). A table written before
+    the ``isPlaceholder`` column existed is read without it;
     merge_entry_states falls back to value inference for such rows."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from hypermap_etl_spark.operators.merge import _table_columns, read_parquet_as
     from hypermap_etl_spark.schemas import ENTRY_SCHEMA
 
-    fields = list(ENTRY_SCHEMA.fields)
-    if entry_buckets:
-        fields.append(StructField("entry_bucket", LongType()))
+    fields = [*ENTRY_SCHEMA.fields, StructField("entry_bucket", LongType())]
     if "isPlaceholder" not in (_table_columns(entries_path) or ["isPlaceholder"]):
         fields = [f for f in fields if f.name != "isPlaceholder"]
     return read_parquet_as(spark, entries_path, StructType(fields))

@@ -30,7 +30,7 @@ Durability: with ``partition_col`` the merge is a DYNAMIC PARTITION
 OVERWRITE — only partitions present in the incoming batch are
 rewritten; untouched partition files are never touched. Without it,
 the rewrite goes through ``_swap_in``, the ONE whole-table commit of
-every unpartitioned rewrite here (merge, delete_keys, reorg_rollback,
+every unpartitioned rewrite here (merge, delete_keys,
 compact_small_table) and of the delta path's pending store: stage,
 rename the table away, rename the staging dir in, drop the old dir.
 The swap is NOT atomic (a crash between the renames leaves the data in
@@ -63,15 +63,16 @@ from pyspark.sql.types import StructType
 BLOCK_BUCKET_SIZE = 100_000
 
 
-def with_block_bucket(df: DataFrame, size: int = BLOCK_BUCKET_SIZE) -> DataFrame:
-    """Partition column for the events table: blockNumber div size.
+def with_block_bucket(df: DataFrame) -> DataFrame:
+    """Partition column of every events table: blockNumber div
+    BLOCK_BUCKET_SIZE.
 
     The physical analog of the reference's blockNumber index
     (src/schemas/index.ts:8, scripts/extract-events.ts:165): block-range
     queries prune whole partitions, and incremental merges only rewrite
     the newest bucket(s).
     """
-    return df.withColumn("block_bucket", F.expr(f"blockNumber div {size}"))
+    return df.withColumn("block_bucket", F.expr(f"blockNumber div {BLOCK_BUCKET_SIZE}"))
 
 
 def dedupe_new(new_df: DataFrame, key_cols: list[str], order_cols: list[str] | None = None) -> DataFrame:
@@ -649,10 +650,6 @@ def reorg_rollback(
     events_path: str,
     fork_block: int,
     entries_path: str | None = None,
-    block_col: str = "blockNumber",
-    partition_col: str | None = "block_bucket",
-    bucket_size: int = BLOCK_BUCKET_SIZE,
-    entry_buckets: int | None = None,
 ) -> dict[str, int]:
     """Chain-reorganization recovery: discard every indexed event ABOVE
     ``fork_block`` and repair the derived entries table to exactly the
@@ -661,12 +658,10 @@ def reorg_rollback(
     ever appends and upserts); a production chain indexer needs one —
     a reorg makes the append-only assumption of the entries fold false.
 
-    Events (under the table's single-writer lock): with block-bucket
-    partitioning, buckets entirely above the fork are DELETED as
-    directories without ever being opened, the fork's own bucket is
-    the single partition rewrite, and every bucket below is untouched
-    — work is O(reorg depth), not O(log). Unpartitioned fallback:
-    the staged swap (``_swap_in``).
+    Events (under the table's single-writer lock): buckets entirely
+    above the fork are DELETED as directories without ever being
+    opened, the fork's own bucket is the single partition rewrite, and
+    every bucket below is untouched — work is O(reorg depth), not O(log).
 
     Entries (optional, keyed repair — the incremental_entries_update
     machinery run in reverse): the fold is a pure function of each
@@ -683,12 +678,22 @@ def reorg_rollback(
     "entriesUpserted", "entriesDeleted"}.
     """
     from hypermap_etl_spark.operators.materialize import (
+        _read_entries,
         events_referencing,
         materialize_entries,
         touched_namehashes,
         with_entry_bucket,
     )
 
+    # the entries table is read, and its layout checked, before any
+    # event is deleted. One with no data file has nothing to repair:
+    # entries only come from Mints, so it stays empty under any subset
+    # of its log.
+    stored = (
+        _read_entries(spark, entries_path)
+        if entries_path is not None and _has_parquet_files(entries_path)
+        else None
+    )
     out = {
         "eventsDeleted": 0,
         "bucketsDropped": 0,
@@ -699,66 +704,50 @@ def reorg_rollback(
     with _merge_lock(events_path):
         _recover_interrupted_swap(events_path)
         existing = spark.read.parquet(events_path)
-        discarded = existing.filter(F.col(block_col) > fork_block)
+        discarded = existing.filter(F.col("blockNumber") > fork_block)
         n_discarded = discarded.count()
         keys = None
-        if entries_path is not None and n_discarded:
+        if stored is not None and n_discarded:
             # pin the write set BEFORE any file is deleted — the lazy
             # frame would re-read the truncated table
             keys = touched_namehashes(discarded).localCheckpoint()
         if n_discarded:
             out["eventsDeleted"] = n_discarded
-            if partition_col and partition_col in existing.columns:
-                fork_bucket = fork_block // bucket_size
-                above = sorted(
-                    r[0]
-                    for r in existing.filter(
-                        F.col(block_col) > fork_block
+            fork_bucket = fork_block // BLOCK_BUCKET_SIZE
+            above = sorted(
+                r[0]
+                for r in discarded.select("block_bucket").distinct().collect()
+            )
+            doomed_buckets = [b for b in above if b > fork_bucket]
+            out["bucketsDropped"] += _remove_partition_dirs(
+                events_path, "block_bucket", doomed_buckets
+            )
+            if fork_bucket in above:
+                survivors = existing.filter(
+                    (F.col("block_bucket") == fork_bucket)
+                    & (F.col("blockNumber") <= fork_block)
+                )
+                if survivors.isEmpty():
+                    # dynamic overwrite writes nothing for an empty
+                    # frame — the stale directory must go explicitly
+                    out["bucketsDropped"] += _remove_partition_dirs(
+                        events_path, "block_bucket", [fork_bucket]
                     )
-                    .select(partition_col)
-                    .distinct()
-                    .collect()
-                )
-                doomed_buckets = [b for b in above if b > fork_bucket]
-                out["bucketsDropped"] += _remove_partition_dirs(
-                    events_path, partition_col, doomed_buckets
-                )
-                if fork_bucket in above:
-                    survivors = existing.filter(
-                        (F.col(partition_col) == fork_bucket)
-                        & (F.col(block_col) <= fork_block)
+                else:
+                    (
+                        survivors.write.mode("overwrite")
+                        .option("partitionOverwriteMode", "dynamic")
+                        .partitionBy("block_bucket")
+                        .parquet(events_path)
                     )
-                    if survivors.isEmpty():
-                        # dynamic overwrite writes nothing for an empty
-                        # frame — the stale directory must go explicitly
-                        out["bucketsDropped"] += _remove_partition_dirs(
-                            events_path, partition_col, [fork_bucket]
-                        )
-                    else:
-                        (
-                            survivors.write.mode("overwrite")
-                            .option("partitionOverwriteMode", "dynamic")
-                            .partitionBy(partition_col)
-                            .parquet(events_path)
-                        )
-                        out["bucketsRewritten"] = 1
-            else:
-                _swap_in(
-                    existing.filter(F.col(block_col) <= fork_block), events_path
-                )
+                    out["bucketsRewritten"] = 1
 
-    if entries_path is None or not _has_parquet_files(entries_path):
-        # absent OR holding no data file (a fold of a log that created
-        # no entries writes only _SUCCESS — fuzzer-found): an empty
-        # table consistent with its log stays empty under any subset
-        # of that log (entries only ever come from Mints), so there is
-        # nothing to repair and the read below would raise
+    if stored is None:
         return out
 
     # widen with entries the STORE says were touched above the fork —
     # self-healing if a previous rollback truncated events but died
     # before this repair
-    stored = spark.read.parquet(entries_path)
     stale = stored.filter(F.col("lastUpdateBlock") > fork_block).select("namehash")
     # pin before the entries writes below — `stale` lazily reads the
     # very files the merge is about to replace
@@ -768,28 +757,26 @@ def reorg_rollback(
     if keys.isEmpty():
         return out
 
-    pcol = "entry_bucket" if entry_buckets else None
     if not _has_parquet_files(events_path):
         # TOTAL reorg (fork below every indexed block, fuzzer-found):
         # nothing survives, so there is no log to refold and the read
         # below would raise on the emptied table — every repair key's
         # entry simply goes away, which IS the fresh-index state
-        drep = delete_keys(spark, entries_path, keys, ["namehash"], pcol)
+        drep = delete_keys(spark, entries_path, keys, ["namehash"], "entry_bucket")
         out["entriesDeleted"] = drep["deletedCount"]
         return out
 
     surviving = spark.read.parquet(events_path)
-    refolded = (
+    refolded = with_entry_bucket(
         materialize_entries(events_referencing(surviving, keys))
         .join(F.broadcast(keys), "namehash", "left_semi")
-        .localCheckpoint()
+    ).localCheckpoint()
+    rep = merge_into_parquet(
+        spark, entries_path, refolded, ["namehash"], "entry_bucket"
     )
-    if entry_buckets:
-        refolded = with_entry_bucket(refolded, entry_buckets)
-    rep = merge_into_parquet(spark, entries_path, refolded, ["namehash"], pcol)
     out["entriesUpserted"] = rep["upsertedCount"] + rep["modifiedCount"]
     gone = keys.join(refolded.select("namehash"), "namehash", "left_anti")
     if not gone.isEmpty():
-        drep = delete_keys(spark, entries_path, gone, ["namehash"], pcol)
+        drep = delete_keys(spark, entries_path, gone, ["namehash"], "entry_bucket")
         out["entriesDeleted"] = drep["deletedCount"]
     return out

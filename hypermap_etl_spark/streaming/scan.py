@@ -18,11 +18,16 @@ new block ranges in chunks (/root/reference/scripts/scan-events.ts:
                           reference's 15 s status line,
                           scripts/extract-events.ts:197-202)
 
+One layout per table, shared with the batch CLI: the events table is
+partitioned by merge.with_block_bucket and the entries table by
+materialize.with_entry_bucket, so `extract`/`index` followed by a
+stream (or `reorg`) on the same paths works on the same tables.
+
 Scale design (the 100 TB path):
   - every micro-batch MERGE is a DYNAMIC PARTITION OVERWRITE on
     block_bucket — per-batch write I/O is O(touched buckets), never
-    O(table) (operators/merge.py:101-164; proven byte-identical for
-    untouched buckets in tests/test_merge_serving.py).
+    O(table) (operators/merge.merge_into_parquet; proven byte-identical
+    for untouched buckets in tests/test_merge_serving.py).
   - the index stream maintains a (namehash → block_bucket) side index
     so the per-batch replay reads ONLY the buckets containing the
     touched keys' historical events — scan volume is O(touched), not
@@ -136,8 +141,6 @@ def rebuild_key_index(spark: SparkSession, table_path: str, key_index_path: str)
     """One-off full-scan backfill of the key index for a pre-existing
     events table (e.g. built by batch `extract` before streaming)."""
     log = spark.read.parquet(table_path)
-    if "block_bucket" not in log.columns:
-        log = with_block_bucket(log)
     batch_key_buckets(log).write.mode("overwrite").parquet(key_index_path)
 
 
@@ -217,11 +220,11 @@ def source_layout_block_aligned(source_path: str) -> bool:
         return False
     spans.sort()
     for (_l1, h1, t1), (l2, _h2, t2) in zip(spans, spans[1:]):
-        # EQUAL mtimes are no-evidence, not a pass (ADVICE r9-medium):
-        # the file source orders equal-timestamp files arbitrarily, so
-        # two tied files can be split across micro-batches in non-block
-        # order — and coarse mtime granularity or a fast writer makes
-        # ties realistic. Only strictly increasing mtimes prove the
+        # EQUAL mtimes are no-evidence, not a pass: the file source
+        # orders equal-timestamp files arbitrarily, so two tied files
+        # can be split across micro-batches in non-block order — and
+        # coarse mtime granularity or a fast writer makes ties
+        # realistic. Only strictly increasing mtimes prove the
         # pickup order agrees with block order.
         if h1 >= l2 or t1 >= t2:
             return False
@@ -236,8 +239,6 @@ def start_index_stream(
     checkpoint_path: str,
     trigger: dict | None = None,
     max_files_per_trigger: int = 10,
-    key_index_path: str | None = None,
-    entry_buckets: int = 16,
     on_progress: Callable[[dict], None] | None = None,
     compact_index_every: int = 64,
     compact_entries_every: int = 64,
@@ -245,11 +246,18 @@ def start_index_stream(
     entries_strategy: str = "auto",
 ):
     """Continuous `index-events`: per micro-batch, MERGE decoded events
-    into the (block-bucketed) events table AND incrementally update the
-    materialized entries (only the namehashes the batch touches —
+    into the events table AND incrementally update the materialized
+    entries (only the namehashes the batch touches —
     operators/materialize.incremental_entries_update). The streaming
     equivalent of the reference's index loop
     (/root/reference/scripts/index-events.ts:216).
+
+    Both tables have the layout batch `index` writes (events by
+    block_bucket, entries by entry_bucket), so a stream can follow
+    `index` on the same paths; a table in another layout fails the
+    first batch's MERGE with a column error. The side tables sit next
+    to the entries table: ``<entries>__keyidx`` (key index) and
+    ``<entries>__pending`` (the delta path's early writes).
 
     Per-batch cost at scale (entries_strategy='replay'):
       write  O(touched block buckets)   — dynamic partition overwrite
@@ -323,7 +331,7 @@ def start_index_stream(
             f"'{entries_strategy}' for {source_path}"
         )
 
-    key_index_path = key_index_path or f"{entries_path}__keyidx"
+    key_index_path = entries_path.rstrip("/") + "__keyidx"
     raw = read_raw_log_stream(spark, source_path, max_files_per_trigger)
 
     # Per-batch guard for the delta contract: the
@@ -372,25 +380,18 @@ def start_index_stream(
                         if state["hw"] is None
                         else max(span["hi"], state["hw"])
                     )
-            table_existed = os.path.exists(table_path)
+            if os.path.exists(table_path) and not os.path.exists(key_index_path):
+                # the table predates the index (built by batch `index`):
+                # one full-scan backfill, then appends keep it current
+                rebuild_key_index(spark, table_path, key_index_path)
             res = merge_into_parquet(
                 spark, table_path, events, ["event_id"], partition_col="block_bucket"
             )
-            if not os.path.exists(key_index_path):
-                if table_existed:
-                    # table predates the index (batch-mode bootstrap):
-                    # one full-scan backfill, then appends keep it current
-                    rebuild_key_index(spark, table_path, key_index_path)
-                else:
-                    batch_key_buckets(events).write.mode("overwrite").parquet(
-                        key_index_path
-                    )
-            else:
-                batch_key_buckets(events).write.mode("append").parquet(key_index_path)
-                if compact_index_every and batch_id > 0 and batch_id % compact_index_every == 0:
-                    from hypermap_etl_spark.operators.merge import compact_small_table
+            batch_key_buckets(events).write.mode("append").parquet(key_index_path)
+            if compact_index_every and batch_id > 0 and batch_id % compact_index_every == 0:
+                from hypermap_etl_spark.operators.merge import compact_small_table
 
-                    compact_small_table(spark, key_index_path)
+                compact_small_table(spark, key_index_path)
 
             if state["strategy"] == "delta":
                 # O(batch): batch-only fold + associative merge with
@@ -399,18 +400,14 @@ def start_index_stream(
                 # in block order (re-delivered batches re-merge
                 # idempotently)
                 buckets = None
-                incremental_entries_delta(
-                    spark, entries_path, events, entry_buckets=entry_buckets
-                )
+                incremental_entries_delta(spark, entries_path, events)
             else:
                 keys = touched_namehashes(events)
                 log = spark.read.parquet(table_path)
                 buckets = replay_buckets(spark, key_index_path, keys)
-                if buckets is not None and "block_bucket" in log.columns:
+                if buckets is not None:
                     log = log.filter(F.col("block_bucket").isin(buckets))
-                incremental_entries_update(
-                    spark, entries_path, log, events, entry_buckets=entry_buckets
-                )
+                incremental_entries_update(spark, entries_path, log, events)
             if (
                 compact_entries_every
                 and batch_id > 0
@@ -469,7 +466,7 @@ def high_water_mark(spark: SparkSession, table_path: str) -> int | None:
         return None
     df = spark.read.parquet(table_path)
     buckets = _partition_values(table_path, "block_bucket")
-    if buckets and "block_bucket" in df.columns:
+    if buckets:
         df = df.filter(F.col("block_bucket") == max(buckets))
     row = df.agg(F.max("blockNumber").alias("m")).collect()[0]
     return row["m"]

@@ -8,9 +8,12 @@ import json
 import os
 import tempfile
 
+import pytest
+
 from hypermap_etl_spark.cli import main
 from hypermap_etl_spark.sources.raw_logs import build_raw_logs
 from tests.helpers import ev, events_df, h
+from tests.test_merge_serving import _ent_flat
 
 
 def _write_raw(spark, path, n=6):
@@ -55,7 +58,7 @@ def test_cli_extract_status_events_sql_compact(spark, capsys):
 
     main(["compact", "--table", tbl])
     comp = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert comp["partitions_compacted"] == 0  # unpartitioned table: no-op
+    assert comp["partitions_compacted"] == 0  # one small bucket: no-op
 
 
 def test_cli_stream_index_mode(spark, capsys):
@@ -243,7 +246,7 @@ def test_cli_ann_append_and_stats(spark, capsys, tmp_path):
     main(["ann", "--index", idx, "--stats"])
     stats = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()]
     assert sum(s["n_vectors"] for s in stats) == 80
-    # r10: the maintenance hook — defragment the append tail, then the
+    # the maintenance hook — defragment the append tail, then the
     # stats (and any search) still see every vector
     main(["ann", "--index", idx, "--compact"])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
@@ -254,13 +257,8 @@ def test_cli_ann_append_and_stats(spark, capsys, tmp_path):
 
 
 def test_cli_reorg(spark, capsys, tmp_path):
-    import json
-
+    """`reorg` on the tables `index` writes, with the CLI defaults."""
     from hypermap_etl_spark.constants import ROOT_HASH
-    from hypermap_etl_spark.cli import main
-    from hypermap_etl_spark.operators.materialize import materialize_entries
-    from hypermap_etl_spark.operators.merge import with_block_bucket
-    from tests.helpers import ev, events_df, h
 
     P, C = h(1), h(2)
     rows = [
@@ -269,18 +267,89 @@ def test_cli_reorg(spark, capsys, tmp_path):
         ev(eventType="Mint", blockNumber=150_005, logIndex=0,
            parenthash=P, childhash=C, labelhash=h(32), label="c2"),
     ]
-    events = events_df(spark, rows)
+    raw = str(tmp_path / "raw")
     epath, npath = str(tmp_path / "events"), str(tmp_path / "entries")
-    with_block_bucket(events).write.partitionBy("block_bucket").parquet(epath)
-    materialize_entries(events).write.parquet(npath)
+    build_raw_logs(events_df(spark, rows)).write.parquet(raw)
+    main(["index", "--raw", raw, "--table", epath, "--entries", npath])
+    assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) == {
+        "entries": 2
+    }
 
     main(["reorg", "--table", epath, "--fork-block", "100000",
           "--entries", npath])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["eventsDeleted"] == 1 and rep["entriesDeleted"] == 1
+    assert rep["bucketsDropped"] == 1
     assert spark.read.parquet(epath).count() == 1
     left = spark.read.parquet(npath).collect()
     assert [r["namehash"] for r in left] == [P] and left[0]["children"] == []
+
+
+def _full_fold(spark, rows):
+    from hypermap_etl_spark.operators.decode import parse_raw_logs
+    from hypermap_etl_spark.operators.materialize import materialize_entries
+
+    events = parse_raw_logs(build_raw_logs(events_df(spark, rows)))
+    return _ent_flat(materialize_entries(events))
+
+
+_HANDOFF_BLOCK = 16
+
+
+@pytest.fixture(scope="module")
+def handoff_tables(spark, tmp_path_factory):
+    """`index` over blocks <= _HANDOFF_BLOCK, then `stream --entries
+    --once` over the later blocks (one block-ordered source file, the
+    chain-scan layout) on the same --table/--entries paths."""
+    from tests.test_materialize import _fixture_rows
+
+    base = str(tmp_path_factory.mktemp("handoff"))
+    rows = _fixture_rows()
+    raw, src = f"{base}/raw", f"{base}/src"
+    build_raw_logs(events_df(spark, rows)).write.parquet(raw)
+    later = [r for r in rows if r["blockNumber"] > _HANDOFF_BLOCK]
+    build_raw_logs(events_df(spark, later)).coalesce(1).write.parquet(src)
+    tbl, ent = f"{base}/events", f"{base}/entries"
+    main(["index", "--raw", raw, "--to-block", str(_HANDOFF_BLOCK),
+          "--table", tbl, "--entries", ent])
+    main(["stream", "--raw", src, "--table", tbl, "--entries", ent,
+          "--checkpoint", f"{base}/ckpt", "--once", "--timeout", "240"])
+    return rows, tbl, ent
+
+
+def test_cli_index_then_stream_share_tables(spark, handoff_tables):
+    """A stream following `index` on the same paths merges into the
+    tables `index` wrote: together they hold every event and the full
+    fold of the whole log."""
+    from hypermap_etl_spark.operators.decode import parse_raw_logs
+
+    rows, tbl, ent = handoff_tables
+    want_ids = parse_raw_logs(build_raw_logs(events_df(spark, rows)))
+    assert sorted(r["event_id"] for r in spark.read.parquet(tbl).collect()) == sorted(
+        r["event_id"] for r in want_ids.collect()
+    )
+    assert _ent_flat(spark.read.parquet(ent)) == _full_fold(spark, rows)
+
+
+def test_cli_reorg_defaults_on_index_then_stream_tables(spark, capsys, tmp_path,
+                                                         handoff_tables):
+    """`reorg --entries` with the CLI defaults on index-then-stream
+    tables leaves the events at or below the fork and the fold of that
+    surviving log."""
+    import shutil
+
+    rows, tbl, ent = handoff_tables
+    epath, npath = str(tmp_path / "events"), str(tmp_path / "entries")
+    shutil.copytree(tbl, epath)
+    shutil.copytree(ent, npath)
+    fork = 18
+    main(["reorg", "--table", epath, "--fork-block", str(fork),
+          "--entries", npath])
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    surviving = [r for r in rows if r["blockNumber"] <= fork]
+    assert rep["eventsDeleted"] == len(rows) - len(surviving)
+    assert spark.read.parquet(epath).count() == len(surviving)
+    assert _ent_flat(spark.read.parquet(npath)) == _full_fold(spark, surviving)
 
 
 def test_cli_calibrate(spark, capsys, tmp_path):

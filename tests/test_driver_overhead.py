@@ -145,8 +145,8 @@ def _delta_entries(spark, sf: str, work: str):
     path = os.path.join(work, "entries")
     for a, b in zip(cuts, cuts[1:]):
         batch = hm.filter((F.col("blockNumber") > a) & (F.col("blockNumber") <= b))
-        incremental_entries_delta(spark, path, batch, entry_buckets=4)
-    return entries_flat(spark.read.parquet(path).drop("entry_bucket")).select(
+        incremental_entries_delta(spark, path, batch)
+    return entries_flat(spark.read.parquet(path)).select(
         "namehash", "label", F.col("parentHash").alias("parent_hash"),
         "owner", "gene", "notes_kv", "facts_kv", "children_list",
         F.col("n_children").cast("long").alias("n_children"),

@@ -21,6 +21,7 @@ def _flat(df):
         d["children"] = tuple(d["children"])
         d["notes"] = tuple(sorted(d["notes"].items()))
         d["facts"] = tuple(sorted(d["facts"].items()))
+        d.pop("entry_bucket", None)
         out[d["namehash"]] = d
     return out
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from hypermap_etl_spark.constants import ROOT_HASH
 from hypermap_etl_spark.operators.materialize import (
+    _read_entries,
     incremental_entries_delta,
     materialize_entries,
     with_entry_bucket,
@@ -33,7 +34,7 @@ def _flat(df):
     return out
 
 
-def _feed_delta(spark, rows, block_cuts, entry_buckets=None):
+def _feed_delta(spark, rows, block_cuts):
     """Feed the log in block-boundary batches through the delta path;
     incremental_entries_delta bootstraps the missing table itself (and
     parks any bootstrap-batch early writes — a helper-side plain fold
@@ -46,12 +47,8 @@ def _feed_delta(spark, rows, block_cuts, entry_buckets=None):
         prev = cut
         if not batch:
             continue
-        incremental_entries_delta(
-            spark, entries_path, events_df(spark, batch),
-            entry_buckets=entry_buckets,
-        )
-    got = spark.read.parquet(entries_path)
-    return _flat(got.drop("entry_bucket") if entry_buckets else got)
+        incremental_entries_delta(spark, entries_path, events_df(spark, batch))
+    return _flat(_read_entries(spark, entries_path))
 
 
 def test_delta_equals_full_three_batches(spark):
@@ -64,7 +61,7 @@ def test_delta_equals_full_three_batches(spark):
 def test_delta_equals_full_bucketed_many_cuts(spark):
     rows = _fixture_rows()
     expected = _flat(materialize_entries(events_df(spark, rows)))
-    got = _feed_delta(spark, rows, [12, 15, 17, 19, 22, 10**9], entry_buckets=4)
+    got = _feed_delta(spark, rows, [12, 15, 17, 19, 22, 10**9])
     assert got == expected
 
 
@@ -87,7 +84,7 @@ def test_delta_placeholder_upgrades_to_mint(spark):
 
 
 def test_delta_forged_placeholder_label_cannot_be_taken_over(spark):
-    """ADVICE r8 (high): a GENUINE first Mint whose attacker-controlled
+    """A GENUINE first Mint whose attacker-controlled
     label is '[unknown]' under ROOT must NOT be treated as an M3
     placeholder by the delta merge — a later re-Mint of the same key
     must lose, exactly as in the full fold (first-mint-wins). Before
@@ -159,13 +156,10 @@ def test_merge_accepts_legacy_stored_table_without_flag(spark):
 
 def test_legacy_entries_table_read_from_disk_still_merges(spark):
     """The delta path reads stored entries with the known schema, no
-    inference job. A table written before the flag column existed —
-    bucketed or not — is read without the flag, and the merge falls
-    back to value inference exactly as for an in-memory legacy frame."""
-    from hypermap_etl_spark.operators.materialize import (
-        _read_entries,
-        merge_entry_states,
-    )
+    inference job. A table written before the flag column existed is
+    read without the flag, and the merge falls back to value inference
+    exactly as for an in-memory legacy frame."""
+    from hypermap_etl_spark.operators.materialize import merge_entry_states
 
     P = h(65)
     rows1 = [
@@ -181,20 +175,14 @@ def test_legacy_entries_table_read_from_disk_still_merges(spark):
         events_df(spark, rows2), known_extra=legacy.select("namehash")
     )
     expected = _flat(merge_entry_states(legacy, partial))
-    for buckets in (4, None):
-        path = tempfile.mkdtemp() + "/entries"
-        if buckets:
-            with_entry_bucket(legacy, buckets).write.partitionBy(
-                "entry_bucket"
-            ).parquet(path)
-        else:
-            legacy.write.parquet(path)
-        stored = _read_entries(spark, path, buckets)
-        assert "isPlaceholder" not in stored.columns
-        got = _flat(merge_entry_states(stored.drop("entry_bucket"), partial))
-        assert got == expected
-        assert got[P]["label"] == "real"
-        assert got[P]["isPlaceholder"] is False
+    path = tempfile.mkdtemp() + "/entries"
+    with_entry_bucket(legacy).write.partitionBy("entry_bucket").parquet(path)
+    stored = _read_entries(spark, path)
+    assert "isPlaceholder" not in stored.columns
+    got = _flat(merge_entry_states(stored.drop("entry_bucket"), partial))
+    assert got == expected
+    assert got[P]["label"] == "real"
+    assert got[P]["isPlaceholder"] is False
 
 
 def test_delta_repeat_mint_keeps_first_identity(spark):
@@ -332,14 +320,12 @@ def test_delta_early_write_parked_then_applied(spark):
     b2 = [r for r in rows if r["blockNumber"] > 5]
     incremental_entries_delta(spark, entries_path, events_df(spark, b1))
     # batch 1 alone: X does not exist; the writes are parked, not lost
-    assert spark.read.parquet(entries_path).count() == 0 or X not in _flat(
-        spark.read.parquet(entries_path)
-    )
+    assert X not in _flat(_read_entries(spark, entries_path))
     pend = entries_path + "__pending"
     assert os.path.isdir(pend)
     assert spark.read.parquet(pend).count() == 2
     incremental_entries_delta(spark, entries_path, events_df(spark, b2))
-    got = _flat(spark.read.parquet(entries_path))
+    got = _flat(_read_entries(spark, entries_path))
     assert got == expected
     assert got[X]["owner"] == addr(2)
     assert got[X]["facts"] == (("early", "0xee"),)
@@ -425,7 +411,7 @@ def test_delta_crashed_pending_publish_plus_redelivery_equals_full(
     finally:
         mat._swap_pending = real_swap
     expected = _flat(materialize_entries(events_df(spark, rows)))
-    got = _flat(spark.read.parquet(entries_path))
+    got = _flat(_read_entries(spark, entries_path))
     assert got == expected
 
 
@@ -473,7 +459,7 @@ def test_stale_pending_row_not_replayed_after_repeat_mint(
     monkeypatch.setattr(mat, "_swap_pending", real_swap)
     # B's merge landed (X exists, v1 applied) but the stale parked row
     # survived the crash
-    assert _flat(spark.read.parquet(entries_path))[X]["facts"] == (
+    assert _flat(_read_entries(spark, entries_path))[X]["facts"] == (
         ("c", "0xv1"),
     )
     assert spark.read.parquet(entries_path + "__pending").count() == 1
@@ -481,7 +467,7 @@ def test_stale_pending_row_not_replayed_after_repeat_mint(
     incremental_entries_delta(spark, entries_path, events_df(spark, C))
     incremental_entries_delta(spark, entries_path, events_df(spark, D))
     expected = _flat(materialize_entries(events_df(spark, A + B + C + D)))
-    got = _flat(spark.read.parquet(entries_path))
+    got = _flat(_read_entries(spark, entries_path))
     assert got == expected
     assert got[X]["facts"] == (("c", "0xv2"),)  # v1 NOT replayed
     assert got[X]["label"] == "x"  # first mint still wins
@@ -510,7 +496,7 @@ def test_delta_forever_unknown_write_stays_parked(spark):
     incremental_entries_delta(spark, entries_path, events_df(spark, rows1))
     incremental_entries_delta(spark, entries_path, events_df(spark, rows2))
     expected = _flat(materialize_entries(events_df(spark, rows1 + rows2)))
-    got = _flat(spark.read.parquet(entries_path))
+    got = _flat(_read_entries(spark, entries_path))
     assert got == expected
     assert GHOST not in got
     assert (

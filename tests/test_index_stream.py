@@ -67,7 +67,7 @@ def _bucket_fingerprint(table, bucket):
 def test_stream_merge_rewrites_only_touched_buckets(spark):
     """A micro-batch whose blocks land in one bucket must leave every
     other bucket's files byte-identical (the partitioned MERGE wired
-    through the stream — VERDICT r2 task 1)."""
+    through the stream)."""
     from hypermap_etl_spark.streaming.scan import start_ingest_stream
 
     base = tempfile.mkdtemp()
@@ -109,7 +109,7 @@ def test_stream_merge_rewrites_only_touched_buckets(spark):
 
 def test_index_stream_prunes_replay_to_touched_buckets(spark):
     """A batch touching only bucket-2 keys must replay only bucket 2 —
-    the key→bucket side index prunes the log scan (VERDICT r2 task 2)."""
+    the key→bucket side index prunes the log scan."""
     from hypermap_etl_spark.streaming.scan import start_index_stream
 
     base = tempfile.mkdtemp()
@@ -294,7 +294,7 @@ def test_index_stream_autocompacts_key_index(spark):
 
 
 def test_index_stream_bounds_entries_files(spark):
-    """Entries-table maintenance symmetry (VERDICT r3 task 7): across a
+    """Entries-table maintenance symmetry: across a
     many-batch availableNow run with per-batch compaction, every
     entry_bucket partition stays at ≤ 1 file, and the compacted entries
     still equal a batch recompute."""
@@ -399,7 +399,7 @@ def test_streaming_index_delta_strategy_matches_batch(spark):
 
 
 def test_auto_strategy_picks_delta_on_chain_scan_layout(spark):
-    """VERDICT r8 task 3: the default 'auto' strategy detects the
+    """The default 'auto' strategy detects the
     chain-scan writer's one-sorted-file-per-range layout (disjoint
     per-file block spans, mtime order = block order) from parquet
     footers alone and runs the O(batch) delta path — no side-index
@@ -506,7 +506,7 @@ def test_auto_strategy_empty_source_has_no_evidence(spark):
 
 
 def test_layout_mtime_ties_are_no_evidence(spark):
-    """ADVICE r10: equal mtimes between adjacent files fail the layout
+    """Equal mtimes between adjacent files fail the layout
     check — Spark orders equal-timestamp files arbitrarily, so a tie
     proves nothing about pickup order even when block spans are
     disjoint and sorted."""
@@ -536,7 +536,7 @@ def test_layout_mtime_ties_are_no_evidence(spark):
 
 
 def test_delta_demotes_to_replay_on_midstream_disorder(spark):
-    """ADVICE r10: the delta contract is re-verified per micro-batch.
+    """The delta contract is re-verified per micro-batch.
     An attested 'delta' stream that receives a batch whose blocks are
     NOT strictly above the applied high-water mark (a backfill file
     landing late) demotes itself to 'replay' for the rest of the run —

@@ -444,7 +444,7 @@ def test_delete_keys_empties_whole_partition_and_unpartitioned(spark, tmp_path):
 
 
 def test_delete_keys_escaped_string_partitions(spark, tmp_path):
-    """ADVICE r6: Spark percent-escapes special characters in string
+    """Spark percent-escapes special characters in string
     partition directory names (``src=a:b`` -> ``src=a%3Ab``); emptied-
     partition removal must resolve the ESCAPED directory, not the
     naive f-string path, or the stale files survive the delete."""
@@ -508,7 +508,7 @@ def test_null_partition_keeps_other_rows(spark, tmp_path):
 
 
 def test_delete_keys_emptied_partition_vanishes_atomically(spark, tmp_path):
-    """Reader-safety of emptied-partition removal (VERDICT r6 #6): the
+    """Reader-safety of emptied-partition removal: the
     doomed directory is RENAMED into a trash dir before any file is
     deleted, so a root listing taken at any point sees the partition
     either whole or absent — never half-emptied. Simulate the crash
@@ -571,6 +571,23 @@ def _reorg_fixture(spark):
     return P, C, events_df(spark, rows)
 
 
+def _index_tables(events, base):
+    """The events and entries tables of ``events`` in the layout `index`
+    writes them: events by block_bucket, entries by entry_bucket."""
+    from hypermap_etl_spark.operators.materialize import (
+        materialize_entries,
+        with_entry_bucket,
+    )
+    from hypermap_etl_spark.operators.merge import with_block_bucket
+
+    epath, npath = f"{base}/events", f"{base}/entries"
+    with_block_bucket(events).write.partitionBy("block_bucket").parquet(epath)
+    with_entry_bucket(materialize_entries(events)).write.partitionBy(
+        "entry_bucket"
+    ).parquet(npath)
+    return epath, npath
+
+
 def test_reorg_rollback_drops_tail_buckets_and_repairs_entries(spark, tmp_path):
     """Fork below the bucket boundary: whole tail buckets disappear as
     directories, bucket 0 is never rewritten, and the entries repair
@@ -581,15 +598,10 @@ def test_reorg_rollback_drops_tail_buckets_and_repairs_entries(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hypermap_etl_spark.operators.materialize import materialize_entries
-    from hypermap_etl_spark.operators.merge import (
-        reorg_rollback,
-        with_block_bucket,
-    )
+    from hypermap_etl_spark.operators.merge import reorg_rollback
 
     P, C, events = _reorg_fixture(spark)
-    epath, npath = str(tmp_path / "events"), str(tmp_path / "entries")
-    with_block_bucket(events).write.partitionBy("block_bucket").parquet(epath)
-    materialize_entries(events).write.parquet(npath)
+    epath, npath = _index_tables(events, tmp_path)
     b0 = {
         f: os.path.getmtime(os.path.join(epath, "block_bucket=0", f))
         for f in os.listdir(os.path.join(epath, "block_bucket=0"))
@@ -606,7 +618,10 @@ def test_reorg_rollback_drops_tail_buckets_and_repairs_entries(spark, tmp_path):
         f: os.path.getmtime(os.path.join(epath, "block_bucket=0", f))
         for f in os.listdir(os.path.join(epath, "block_bucket=0"))
     }
-    ent = {r["namehash"]: r for r in spark.read.parquet(npath).collect()}
+    ent = {
+        r["namehash"]: r
+        for r in spark.read.parquet(npath).drop("entry_bucket").collect()
+    }
     assert C not in ent
     assert ent[P]["children"] == []
     assert ent[P]["facts"] == {"color": "0xaa"}  # overwrite at 250_001 undone
@@ -628,16 +643,10 @@ def test_reorg_rollback_mid_bucket_and_self_healing(spark, tmp_path):
     crash scenario — events already truncated (entries repair never
     ran): a re-run finds zero discarded events but still repairs the
     stale entries via the lastUpdateBlock widening."""
-    from hypermap_etl_spark.operators.materialize import materialize_entries
-    from hypermap_etl_spark.operators.merge import (
-        reorg_rollback,
-        with_block_bucket,
-    )
+    from hypermap_etl_spark.operators.merge import reorg_rollback
 
     P, C, events = _reorg_fixture(spark)
-    epath, npath = str(tmp_path / "events"), str(tmp_path / "entries")
-    with_block_bucket(events).write.partitionBy("block_bucket").parquet(epath)
-    materialize_entries(events).write.parquet(npath)
+    epath, npath = _index_tables(events, tmp_path)
 
     # crash half: truncate events only (fork mid-bucket-0, drops the
     # fact at 16 too)
@@ -680,47 +689,29 @@ def _ent_flat(df):
     rows=_event_log(),
     stride=st.sampled_from([1, 40_000, 75_000]),
     fork_frac=st.floats(0.0, 1.0),
-    buckets=st.sampled_from([None, 8]),
 )
-def test_reorg_rollback_fuzz_equals_clean_fold(
-    spark, rows, stride, fork_frac, buckets
-):
-    """VERDICT r9 task 6: for ANY random log, ANY reorg depth (fork
-    anywhere from genesis to the tip), and either entries layout,
-    rollback + repair must leave BOTH tables exactly as a fresh index
-    of the surviving log would — the recovery-path analog of the
-    delta fuzzer's semigroup claim. ``stride`` scales blocks so forks
+def test_reorg_rollback_fuzz_equals_clean_fold(spark, rows, stride, fork_frac):
+    """For ANY random log and ANY reorg depth (fork anywhere from
+    genesis to the tip), rollback + repair must leave BOTH tables
+    exactly as a fresh index of the surviving log would — the
+    recovery-path analog of the delta fuzzer's semigroup claim.
+    ``stride`` scales blocks so forks
     land below, inside, and above block-bucket boundaries (tail-bucket
     directory drops, the mid-bucket rewrite, and the no-op all get
     drawn)."""
     import shutil
 
-    from hypermap_etl_spark.operators.materialize import (
-        materialize_entries,
-        with_entry_bucket,
-    )
-    from hypermap_etl_spark.operators.merge import (
-        reorg_rollback,
-        with_block_bucket,
-    )
+    from hypermap_etl_spark.operators.materialize import materialize_entries
+    from hypermap_etl_spark.operators.merge import reorg_rollback
 
     rows = [dict(r, blockNumber=r["blockNumber"] * stride) for r in rows]
     blocks = sorted({r["blockNumber"] for r in rows})
     fork = int(fork_frac * blocks[-1])
     base = tempfile.mkdtemp()
-    epath, npath = f"{base}/events", f"{base}/entries"
     events = events_df(spark, rows)
-    with_block_bucket(events).write.partitionBy("block_bucket").parquet(epath)
-    full = materialize_entries(events)
-    if buckets:
-        with_entry_bucket(full, buckets).repartition("entry_bucket").write \
-            .partitionBy("entry_bucket").parquet(npath)
-    else:
-        full.write.parquet(npath)
+    epath, npath = _index_tables(events, base)
 
-    rep = reorg_rollback(
-        spark, epath, fork, entries_path=npath, entry_buckets=buckets
-    )
+    rep = reorg_rollback(spark, epath, fork, entries_path=npath)
     surviving_rows = [r for r in rows if r["blockNumber"] <= fork]
     assert rep["eventsDeleted"] == len(rows) - len(surviving_rows)
 
@@ -834,35 +825,19 @@ def _swap_case_compact_small_table(spark, base):
     return path, run, rows
 
 
-def _swap_case_reorg_rollback(spark, base):
-    from hypermap_etl_spark.operators.merge import reorg_rollback
-
-    path = f"{base}/events"
-    _reorg_fixture(spark)[2].write.parquet(path)
-
-    def run():
-        reorg_rollback(spark, path, 100_000, partition_col=None)
-
-    def rows():
-        return sorted(
-            tuple(r)
-            for r in spark.read.parquet(path).select("blockNumber", "eventType").collect()
-        )
-
-    return path, run, rows
-
-
 def _swap_case_pending_store(spark, base):
     """The delta path's early-writes store: the run mints X (applying
-    its parked write) and keeps the never-minted Z's write parked, so
-    losing the old store loses Z's row."""
+    its parked write), keeps the never-minted Z's write parked, so
+    losing the old store loses Z's row, and parks its own write to the
+    never-minted W, which a re-run after the rename-in must not park
+    twice."""
     from hypermap_etl_spark.constants import ROOT_HASH
     from hypermap_etl_spark.operators.materialize import (
         entries_flat,
         incremental_entries_delta,
     )
 
-    X, Z = h(61), h(63)
+    X, Z, W = h(61), h(63), h(65)
 
     def fact(block, i, target, data):
         return ev(eventType="Fact", blockNumber=block, logIndex=i,
@@ -876,6 +851,7 @@ def _swap_case_pending_store(spark, base):
     batch = [
         ev(eventType="Mint", blockNumber=6, logIndex=0, parenthash=ROOT_HASH,
            childhash=X, labelhash=h(64), label="x"),
+        fact(6, 1, W, "0x03"),
     ]
 
     def run():
@@ -897,7 +873,6 @@ _SWAP_CASES = {
     "merge": _swap_case_merge,
     "delete_keys": _swap_case_delete_keys,
     "compact_small_table": _swap_case_compact_small_table,
-    "reorg_rollback": _swap_case_reorg_rollback,
     "pending_store": _swap_case_pending_store,
 }
 

@@ -273,7 +273,7 @@ def test_pii_ops_are_single_projection(spark):
 
 
 def test_new_tpch_shapes_plan_right(spark):
-    """The round-3 join-shape sweep keeps its declared physical
+    """The join-shape sweep keeps its declared physical
     strategies: top-20 is TakeOrderedAndProject (q10), the scalar
     threshold/max subqueries are broadcast single-row joins with no
     cartesian blow-up (q11/q15), NOT IN is a broadcast anti join
@@ -344,14 +344,14 @@ def test_ir_and_sketch_plan_shapes(spark):
     assert "CartesianProduct" not in pb
 
     # empty / tokenless corpora must return an empty frame, not raise
-    # on a None avg_len (ADVICE r3)
+    # on a None avg_len
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert bm25_search(empty, ["join"]).count() == 0
     blank = spark.createDataFrame([(1, ""), (2, "   ")], "doc_id long, text string")
     out = bm25_search(blank, ["join"])
     assert out.count() == 0 and out.columns == ["doc_id", "score"]
     # empty QUERY (CLI `search ""` -> ''.split() == []) must early-
-    # return the empty frame, not raise on F.greatest(*[]) (ADVICE r6)
+    # return the empty frame, not raise on F.greatest(*[])
     out = bm25_search(docs, [])
     assert out.count() == 0 and out.columns == ["doc_id", "score"]
 
@@ -595,7 +595,7 @@ def test_native_session_window_boundary_semantics(spark, tmp_path):
 
 
 def test_r6_operator_plan_shapes(spark):
-    """Plan pins for the r6 wave: summary-sized joins broadcast, no
+    """Plan pins: summary-sized joins broadcast, no
     cartesian products, no global (unpartitioned) windows."""
     import re
 
@@ -619,9 +619,9 @@ def test_r6_operator_plan_shapes(spark):
         assert "user_id" in spec, p[:2000]
 
     # weighted median: the offsets frame comes back as ONE broadcast
-    # (r10 folded the group totals into the same whole-partition window
-    # over the psums frame, removing the second broadcast join and a
-    # cache scan — OPTIMIZATION_r10.md), and the corpus-sized
+    # (the group totals fold into the same whole-partition window over
+    # the psums frame, so there is no second broadcast join and no
+    # cache scan), and the corpus-sized
     # cumulative window is (__pid, group)-sliced — the few-groups
     # single-task sort is the scale-killer this pins out (the only
     # window without __pid runs over the P x G psums frame)
@@ -665,7 +665,7 @@ def test_hybrid_rrf_and_hard_negatives_plan_shapes(spark):
 
 
 def test_r7_stats_wave_plans_avoid_single_task_windows(spark):
-    """The r7 stats operators must never plan a window over an
+    """The stats operators must never plan a window over an
     UNPARTITIONED ordering of corpus- or key-sized frames: ranks come
     from windows partitioned by group (or by range slice in
     heavy_coverage), and every `Window` in the plan carries a
@@ -860,15 +860,15 @@ def test_delta_stored_read_is_partition_pruned(spark, tmp_path):
     batch_rows = [r for r in rows if r["blockNumber"] > 19]
     path = str(tmp_path / "entries")
     with_entry_bucket(
-        materialize_entries(events_df(spark, base_rows)), 8
+        materialize_entries(events_df(spark, base_rows))
     ).write.mode("overwrite").partitionBy("entry_bucket").parquet(path)
 
     batch = events_df(spark, batch_rows)
     keys = touched_namehashes(batch)
-    kb = with_entry_bucket(keys, 8)
+    kb = with_entry_bucket(keys)
     buckets = [r[0] for r in kb.select("entry_bucket").distinct().collect()]
     stored = (
-        _read_entries(spark, path, 8)
+        _read_entries(spark, path)
         .filter(F.col("entry_bucket").isin(buckets))
         .drop("entry_bucket")
     )

@@ -1,4 +1,4 @@
-"""VERDICT r9 task 8: one-order-of-magnitude scale probe for the fold
+"""One-order-of-magnitude scale probe for the fold
 and curate paths.
 
 No sf1.0 fixtures exist (TESTDATA.md ships sf0.001/0.01/0.1), so the
@@ -108,17 +108,14 @@ def main() -> None:
         path = os.path.join(tempfile.gettempdir(), f"probe10x_entries{mult}")
         shutil.rmtree(path, ignore_errors=True)
         base = with_entry_bucket(
-            materialize_entries(
-                logx(mult).filter(F.col("blockNumber") <= cut)
-            ),
-            64,
+            materialize_entries(logx(mult).filter(F.col("blockNumber") <= cut))
         )
         base.repartition("entry_bucket").write.partitionBy(
             "entry_bucket"
         ).parquet(path)
         batch = hm.filter(F.col("blockNumber") > cut)
         t0 = time.perf_counter()
-        counts = incremental_entries_delta(spark, path, batch, entry_buckets=64)
+        counts = incremental_entries_delta(spark, path, batch)
         out[f"hm_delta_{mult}x"] = {
             "secs": round(time.perf_counter() - t0, 2), **counts
         }
