@@ -902,69 +902,15 @@ def cmd_curate(args) -> None:
     print(json.dumps(report))
 
 
-def cmd_snapshot(args) -> None:
-    """Versioned corpus snapshots (sources/versioned.py): publish a new
-    blessed version, list/rollback/vacuum, and diff two versions with
-    the fingerprint screen (operators/profile.table_diff)."""
-    from hypermap_etl_spark.operators.profile import diff_summary, table_diff
-    from hypermap_etl_spark.sources import versioned as V
-
-    out = {"table": args.table, "action": args.action}
-    if args.action == "write":
-        if not args.data:
-            raise SystemExit("snapshot write: --data required")
-        spark = _spark(args)
-        out["version"] = V.write_version(spark.read.parquet(args.data), args.table)
-    elif args.action == "list":
-        out["versions"] = V.list_versions(args.table)
-        out["latest"] = V.latest_version(args.table)
-    elif args.action == "rollback":
-        if args.version is None:
-            raise SystemExit("snapshot rollback: --version required")
-        out["latest"] = V.rollback(args.table, args.version)
-    elif args.action == "vacuum":
-        out["removed"] = V.vacuum(args.table, keep=args.keep)
-        out["versions"] = V.list_versions(args.table)
-    elif args.action == "diff":
-        spark = _spark(args)
-        new_v = args.version or V.latest_version(args.table)
-        old_v = args.against or (new_v - 1 if new_v else None)
-        if not old_v or old_v not in V.list_versions(args.table):
-            raise SystemExit("snapshot diff: need two existing versions")
-        d = table_diff(
-            V.read_version(spark, args.table, old_v),
-            V.read_version(spark, args.table, new_v),
-            [c.strip() for c in args.keys.split(",")],
-        )
-        out["old"], out["new"] = old_v, new_v
-        out["summary"] = {
-            r["status"]: r["n"] for r in diff_summary(d).collect()
-        }
-        if args.psi_col:
-            from hypermap_etl_spark.operators.profile import psi_drift
-
-            terms = psi_drift(
-                V.read_version(spark, args.table, old_v),
-                V.read_version(spark, args.table, new_v),
-                args.psi_col,
-            ).collect()
-            out["psi"] = {
-                "column": args.psi_col,
-                "value": round(sum(r["psi_term"] for r in terms), 6),
-                "verdict": (
-                    "stable" if sum(r["psi_term"] for r in terms) < 0.1
-                    else "drifting" if sum(r["psi_term"] for r in terms) < 0.25
-                    else "shifted"
-                ),
-            }
-    print(json.dumps(out))
-
-
 def cmd_manifest(args) -> None:
     """Manifest-committed tables (sources/manifest.py — the
     object-store-safe commit protocol: no data renames, readers
     resolve a manifest, never list): publish/merge/read-count/status/
-    rollback/vacuum, one JSON line each."""
+    rollback/vacuum, and diff two versions with the fingerprint screen
+    (operators/profile.table_diff), one JSON line each. Every version
+    is a snapshot: rollback re-publishes an old one as a new version."""
+    import os
+
     from hypermap_etl_spark.sources import manifest as M
 
     out = {"table": args.table, "action": args.action}
@@ -988,13 +934,12 @@ def cmd_manifest(args) -> None:
         out.update(res)
         out["version"] = M.current_version(args.table)
     elif args.action == "status":
-        v = M.current_version(args.table)
-        out["version"] = v
-        if v is not None:
-            m = M.read_manifest(args.table)
-            out["partition_col"] = m["partition_col"]
-            out["n_partitions"] = len(m["partitions"])
-            out["n_file_sets"] = sum(len(r) for r in m["partitions"].values())
+        m = M.read_manifest(args.table)
+        out["version"] = m["version"]
+        out["versions"] = M.manifest_versions(args.table)
+        out["partition_col"] = m["partition_col"]
+        out["n_partitions"] = len(m["partitions"])
+        out["n_file_sets"] = sum(len(r) for r in m["partitions"].values())
     elif args.action == "count":
         spark = _spark(args)
         out["version"] = args.version or M.current_version(args.table)
@@ -1008,6 +953,48 @@ def cmd_manifest(args) -> None:
     elif args.action == "vacuum":
         out["removed"] = M.vacuum_table(args.table, keep=args.keep)
         out["version"] = M.current_version(args.table)
+    elif args.action == "diff":
+        from hypermap_etl_spark.operators.profile import diff_summary, psi_drift, table_diff
+
+        if not args.keys:
+            raise SystemExit("manifest diff: --keys required")
+        new_v = (
+            args.version if args.version is not None
+            else M.read_manifest(args.table)["version"]
+        )
+        old_v = args.against if args.against is not None else new_v - 1
+        # both sides are checked before Spark reads either one
+        for side, v in (("old", old_v), ("new", new_v)):
+            try:
+                parts = M.read_manifest(args.table, v)["partitions"]
+            except FileNotFoundError:
+                raise SystemExit(
+                    f"manifest diff: {side} version {v} of {args.table} "
+                    "has no manifest"
+                ) from None
+            if not all(
+                os.path.isdir(os.path.join(args.table, rel))
+                for rels in parts.values() for rel in rels
+            ):
+                raise SystemExit(
+                    f"manifest diff: {side} version {v} of {args.table} "
+                    "was vacuumed"
+                )
+        spark = _spark(args)
+        old = M.read_table(spark, args.table, version=old_v)
+        new = M.read_table(spark, args.table, version=new_v)
+        d = table_diff(old, new, [c.strip() for c in args.keys.split(",")])
+        out["old"], out["new"] = old_v, new_v
+        out["summary"] = {
+            r["status"]: r["n"] for r in diff_summary(d).collect()
+        }
+        if args.psi_col:
+            terms = psi_drift(old, new, args.psi_col).collect()
+            psi = sum(r["psi_term"] for r in terms)
+            verdict = "stable" if psi < 0.1 else "drifting" if psi < 0.25 else "shifted"
+            out["psi"] = {
+                "column": args.psi_col, "value": round(psi, 6), "verdict": verdict,
+            }
     print(json.dumps(out))
 
 
@@ -2149,39 +2136,28 @@ def main(argv=None) -> None:
                         "bands (needs --id-col for the tie-break)")
     p.add_argument("--id-col", default="doc_id")
 
-    p = sub.add_parser("snapshot",
-                       help="versioned corpus snapshots: write/list/"
+    p = sub.add_parser("manifest",
+                       help="manifest-committed, versioned tables (object-"
+                            "store-safe): write/merge/status/count/"
                             "rollback/vacuum/diff")
     p.add_argument("action",
-                   choices=["write", "list", "rollback", "vacuum", "diff"])
-    p.add_argument("--table", required=True, help="versioned table root")
-    p.add_argument("--data", default=None, help="parquet to publish (write)")
+                   choices=["write", "merge", "status", "count",
+                            "rollback", "vacuum", "diff"])
+    p.add_argument("--table", required=True, help="manifest table root")
+    p.add_argument("--data", default=None, help="parquet to publish/merge")
+    p.add_argument("--keys", default=None,
+                   help="comma-separated key columns (merge, diff)")
+    p.add_argument("--partition-col", default=None,
+                   help="partition column (write/merge)")
     p.add_argument("--version", type=int, default=None,
-                   help="target version (rollback; diff new side)")
+                   help="target version (rollback; count pins a version; "
+                        "diff new side, default current)")
     p.add_argument("--against", type=int, default=None,
                    help="diff old side (default: version-1)")
-    p.add_argument("--keys", default="doc_id",
-                   help="comma-separated diff key columns")
     p.add_argument("--keep", type=int, default=2, help="vacuum retention")
     p.add_argument("--psi-col", default=None,
                    help="diff: also report PSI distribution drift of "
                         "this numeric column between the two versions")
-    p = sub.add_parser("manifest",
-                       help="manifest-committed tables (object-store-"
-                            "safe): write/merge/status/count/rollback/"
-                            "vacuum")
-    p.add_argument("action",
-                   choices=["write", "merge", "status", "count",
-                            "rollback", "vacuum"])
-    p.add_argument("--table", required=True, help="manifest table root")
-    p.add_argument("--data", default=None, help="parquet to publish/merge")
-    p.add_argument("--keys", default=None,
-                   help="comma-separated merge key columns")
-    p.add_argument("--partition-col", default=None,
-                   help="partition column (write/merge)")
-    p.add_argument("--version", type=int, default=None,
-                   help="target version (rollback; count pins a version)")
-    p.add_argument("--keep", type=int, default=2, help="vacuum retention")
     p = sub.add_parser("pseudo",
                        help="keyed pseudonymization of identifier columns")
     p.add_argument("--table", required=True, help="input parquet")
@@ -2404,7 +2380,7 @@ def main(argv=None) -> None:
         "decontam": cmd_decontam, "ann": cmd_ann,
         "dedup-index": cmd_dedup_index, "embed": cmd_embed,
         "bpe": cmd_bpe, "stream": cmd_stream,
-        "buckets": cmd_buckets, "snapshot": cmd_snapshot, "pseudo": cmd_pseudo,
+        "buckets": cmd_buckets, "pseudo": cmd_pseudo,
         "manifest": cmd_manifest,
         "check": cmd_check, "report": cmd_report, "bff": cmd_bff,
         "link": cmd_link,

@@ -578,6 +578,25 @@ def _swap_pending(pend: DataFrame, pending_path: str) -> None:
     _swap_in(pend, pending_path)
 
 
+def drop_pending_above(spark, entries_path: str, fork_block: int) -> None:
+    """Reorg step: drop the parked early writes above ``fork_block``.
+    Their events were discarded, and a later Mint of their target
+    would otherwise retry them. Rows with a NULL block stay, as they
+    stay in the events table. Idempotent; a missing store is left
+    missing."""
+    from hypermap_etl_spark.operators.merge import _has_parquet_files, _recover_interrupted_swap
+
+    pending_path = _pending_path(entries_path)
+    _recover_interrupted_swap(pending_path)
+    if not _has_parquet_files(pending_path):
+        return
+    pend = spark.read.parquet(pending_path)
+    _swap_pending(
+        pend.filter(~F.coalesce(F.col("blockNumber") > fork_block, F.lit(False))),
+        pending_path,
+    )
+
+
 def _write_target() -> "F.Column":
     """The entry key a Fact/Note/Gene/Transfer row writes to."""
     def build():

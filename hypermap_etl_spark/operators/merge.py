@@ -674,15 +674,18 @@ def reorg_rollback(
     table writes self-healing: re-running the same rollback finds no
     discarded events but still repairs the stale entries.
 
+    Pending store (with entries): the delta path's parked early writes
+    above the fork are dropped last — their events are gone, and a
+    later Mint of their target would otherwise retry them. The trim is
+    idempotent, so a re-run after a crash converges.
+
     Returns {"eventsDeleted", "bucketsDropped", "bucketsRewritten",
     "entriesUpserted", "entriesDeleted"}.
     """
     from hypermap_etl_spark.operators.materialize import (
         _read_entries,
-        events_referencing,
-        materialize_entries,
+        drop_pending_above,
         touched_namehashes,
-        with_entry_bucket,
     )
 
     # the entries table is read, and its layout checked, before any
@@ -742,9 +745,36 @@ def reorg_rollback(
                     )
                     out["bucketsRewritten"] = 1
 
-    if stored is None:
-        return out
+    if stored is not None:
+        out.update(
+            _reorg_repair_entries(
+                spark, events_path, entries_path, stored, keys, fork_block
+            )
+        )
+    if entries_path is not None:
+        drop_pending_above(spark, entries_path, fork_block)
+    return out
 
+
+def _reorg_repair_entries(
+    spark: SparkSession,
+    events_path: str,
+    entries_path: str,
+    stored: DataFrame,
+    keys: DataFrame | None,
+    fork_block: int,
+) -> dict[str, int]:
+    """reorg_rollback's keyed entries repair over the truncated events
+    table: refold the repair keys from the surviving log, MERGE them,
+    delete the keys nothing survives for. Returns {"entriesUpserted",
+    "entriesDeleted"}."""
+    from hypermap_etl_spark.operators.materialize import (
+        events_referencing,
+        materialize_entries,
+        with_entry_bucket,
+    )
+
+    out = {"entriesUpserted": 0, "entriesDeleted": 0}
     # widen with entries the STORE says were touched above the fork —
     # self-healing if a previous rollback truncated events but died
     # before this repair

@@ -12,7 +12,7 @@ is also unsafe: a reader that lists a prefix mid-commit sees a torn
 mix of old and new files.
 
 The manifest construction (the Iceberg/Delta core idea, rebuilt
-dependency-free the way sources/versioned.py rebuilds time travel):
+dependency-free on plain parquet directories):
 
     table/
       data/<token>/…part-*.parquet   immutable, uniquely-named file sets
@@ -40,10 +40,13 @@ dependency-free the way sources/versioned.py rebuilds time travel):
   on a real object store the equivalent is one conditional PUT of a
   tiny object, which S3/GCS support natively.
 
-Rollback/reorg: flipping ``_latest`` back to an older manifest is a
-complete, already-consistent restore (the reorg story without any
-data movement). ``vacuum`` keeps the last ``keep`` manifests' file
-sets and deletes only data referenced by none of them.
+Versions double as corpus snapshots: ``read_table(version=)`` is a
+pinned read, and two versions diff through profile.table_diff (the
+``manifest diff`` CLI). Rollback re-publishes an older manifest's file
+sets as a NEW version — a complete, already-consistent restore with no
+data movement, and the pointer only ever moves forward. ``vacuum``
+keeps the last ``keep`` manifests' file sets (the current version is
+always the newest) and deletes only data referenced by none of them.
 """
 
 from __future__ import annotations
@@ -69,19 +72,24 @@ def _mpath(table: str, version: int) -> str:
     return os.path.join(table, "manifests", f"m-{version:08d}.json")
 
 
+def manifest_versions(table: str) -> list[int]:
+    """The manifest versions on disk, ascending (vacuumed versions
+    included: their manifests stay as tombstones)."""
+    mdir = os.path.join(table, "manifests")
+    if not os.path.isdir(mdir):
+        return []
+    return sorted(
+        int(n[2:-5])
+        for n in os.listdir(mdir)
+        if n.startswith("m-") and n.endswith(".json")
+    )
+
+
 def _max_manifest_version(table: str) -> int | None:
     """Highest manifest ON DISK — what optimistic writers base on (the
     pointer can lag a just-created manifest by a losing writer's slow
     flip; basing on the pointer would resurrect lost updates)."""
-    mdir = os.path.join(table, "manifests")
-    if not os.path.isdir(mdir):
-        return None
-    vs = [
-        int(n[2:-5])
-        for n in os.listdir(mdir)
-        if n.startswith("m-") and n.endswith(".json")
-    ]
-    return max(vs, default=None)
+    return max(manifest_versions(table), default=None)
 
 
 def current_version(table: str) -> int | None:
@@ -167,27 +175,45 @@ def _publish_cas(
         parts = {k: v for k, v in cur_parts.items() if k not in touched}
         parts.update(entries)
         v = (cur_v or 0) + 1
-        manifest = {
-            "version": v,
-            "partition_col": partition_col,
-            "partition_dtype": partition_dtype,
-            "partitions": parts,
-        }
-        mp = _mpath(table, v)
-        tmp = f"{mp}.tmp.{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh, sort_keys=True)
-        try:
-            os.link(tmp, mp)
-        except FileExistsError:
-            os.unlink(tmp)
-            continue  # lost the CAS: rebase on the new current and retry
-        os.unlink(tmp)
-        _flip_pointer(table, v)
-        return v
+        if _link_manifest(table, v, partition_col, partition_dtype, parts):
+            _flip_pointer(table, v)
+            return v
+        # lost the CAS: rebase on the new current and retry
     raise ConcurrentCommitError(
         f"gave up after {max_retries} CAS retries on {table}"
     )
+
+
+def _link_manifest(
+    table: str,
+    v: int,
+    partition_col: str | None,
+    partition_dtype: str | None,
+    parts: dict[str, list[str]],
+) -> bool:
+    """Write manifest ``v`` to a private tmp file, then link it into
+    place. False when another writer already took ``v``."""
+    mp = _mpath(table, v)
+    tmp = f"{mp}.tmp.{uuid.uuid4().hex[:8]}"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(
+                {
+                    "version": v,
+                    "partition_col": partition_col,
+                    "partition_dtype": partition_dtype,
+                    "partitions": parts,
+                },
+                fh,
+                sort_keys=True,
+            )
+        os.link(tmp, mp)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
 
 
 def _flip_pointer(table: str, v: int) -> None:
@@ -236,7 +262,12 @@ def _flip_pointer(table: str, v: int) -> None:
         os.rmdir(lock)
 
 
-def _publish(table: str, manifest: dict) -> int:
+def _publish(
+    table: str,
+    partition_col: str | None,
+    partition_dtype: str | None,
+    parts: dict[str, list[str]],
+) -> int:
     """Write the complete manifest, then flip the pointer — on an
     object store both writes become single small conditional PUTs.
 
@@ -249,26 +280,9 @@ def _publish(table: str, manifest: dict) -> int:
     can't race each other, but they CAN land on a version a crashed or
     optimistic writer already took — link-EEXIST just advances past it."""
     os.makedirs(os.path.join(table, "manifests"), exist_ok=True)
-    v = _max_manifest_version(table) or 0
-    tmp = None
-    try:
-        while True:
-            v += 1
-            manifest = {**manifest, "version": v}
-            mp = _mpath(table, v)
-            tmp = f"{mp}.tmp.{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump(manifest, fh, sort_keys=True)
-            try:
-                os.link(tmp, mp)
-            except FileExistsError:
-                os.unlink(tmp)
-                tmp = None
-                continue  # version taken (crashed/optimistic writer)
-            break
-    finally:
-        if tmp is not None and os.path.exists(tmp):
-            os.unlink(tmp)
+    v = (_max_manifest_version(table) or 0) + 1
+    while not _link_manifest(table, v, partition_col, partition_dtype, parts):
+        v += 1  # version taken (crashed/optimistic writer)
     _flip_pointer(table, v)
     return v
 
@@ -341,14 +355,7 @@ def write_table(
     publish a manifest naming it. Returns the new version."""
     with _merge_lock(table):
         entries = _write_token(df, table, partition_col)
-        return _publish(
-            table,
-            {
-                "partition_col": partition_col,
-                "partition_dtype": _pdtype(df, partition_col),
-                "partitions": entries,
-            },
-        )
+        return _publish(table, partition_col, _pdtype(df, partition_col), entries)
 
 
 def read_table(
@@ -438,14 +445,7 @@ def merge_table(
             if optimistic:
                 _publish_cas(table, partition_col, dtype, entries, {})
             else:
-                _publish(
-                    table,
-                    {
-                        "partition_col": partition_col,
-                        "partition_dtype": dtype,
-                        "partitions": entries,
-                    },
-                )
+                _publish(table, partition_col, dtype, entries)
             return {"upsertedCount": new_df.count(), "modifiedCount": 0}
 
         # optimistic writers base on the max ON-DISK manifest (the
@@ -523,14 +523,7 @@ def merge_table(
                 parts.update(entries)
             else:
                 parts = entries
-            _publish(
-                table,
-                {
-                    "partition_col": partition_col,
-                    "partition_dtype": dtype,
-                    "partitions": parts,
-                },
-            )
+            _publish(table, partition_col, dtype, parts)
         if existing is not None:
             matched = _obs_count(obs_exist) - _obs_count(obs_surv)
         else:
@@ -558,23 +551,16 @@ def delete_keys_table(
         m = read_manifest(table)
         if m["partition_col"] != partition_col:
             raise ValueError("partition_col mismatch")
-        has_pcol = (
-            partition_col is not None and partition_col in keys_df.columns
-        )
-        if has_pcol:
-            touched_vals = [
-                r[0]
-                for r in keys_df.select(partition_col).distinct().collect()
-            ]
-        keys_df = keys_df.select(*key_cols).distinct()
         if partition_col is not None:
-            if not has_pcol:
-                touched_vals = None
-            if touched_vals is None:
+            if partition_col in keys_df.columns:
+                touched_keys = {
+                    json.dumps(r[0])
+                    for r in keys_df.select(partition_col).distinct().collect()
+                }
+            else:
                 # keys don't carry the partition value: every partition
                 # is suspect — still a manifest-pruned read, no listing
-                touched_vals = [json.loads(k) for k in m["partitions"]]
-            touched_keys = {json.dumps(v) for v in touched_vals}
+                touched_keys = set(m["partitions"])
             present = [k for k in touched_keys if k in m["partitions"]]
             if not present:
                 return 0
@@ -588,9 +574,9 @@ def delete_keys_table(
         key = [F.col(f"e.{k}") == F.col(f"k.{k}") for k in key_cols]
         obs_exist, obs_surv = Observation(), Observation()
         existing = existing.observe(obs_exist, F.count(F.lit(1)).alias("n"))
-        join_cols = [k for k in key_cols]
         survivors = existing.alias("e").join(
-            F.broadcast(keys_df.select(*join_cols).alias("k")), key, "left_anti"
+            F.broadcast(keys_df.select(*key_cols).distinct().alias("k")),
+            key, "left_anti",
         ).observe(obs_surv, F.count(F.lit(1)).alias("n"))
         entries = _write_token(survivors, table, partition_col)
         if partition_col is not None:
@@ -602,29 +588,19 @@ def delete_keys_table(
             parts.update(entries)
         else:
             parts = entries
-        _publish(
-            table,
-            {
-                "partition_col": partition_col,
-                "partition_dtype": m.get("partition_dtype"),
-                "partitions": parts,
-            },
-        )
+        _publish(table, partition_col, m.get("partition_dtype"), parts)
         return int(_obs_count(obs_exist) - _obs_count(obs_surv))
 
 
 def rollback_table(table: str, version: int) -> int:
     """Reorg/restore: re-publish an OLD manifest's contents as the new
-    current version — no data moves, instantly consistent."""
+    current version — no data moves, instantly consistent. Returns the
+    NEW version number; the pointer never moves backwards."""
     old = read_manifest(table, version)
     with _merge_lock(table):
         return _publish(
-            table,
-            {
-                "partition_col": old["partition_col"],
-                "partition_dtype": old.get("partition_dtype"),
-                "partitions": old["partitions"],
-            },
+            table, old["partition_col"], old.get("partition_dtype"),
+            old["partitions"],
         )
 
 
@@ -635,15 +611,11 @@ def vacuum_table(table: str, keep: int = 2) -> list[str]:
     ENTRY — a partition subdir for partitioned tables — because a
     merge's carry-forward means one token prefix can hold both a live
     partition and a superseded one. Returns removed relative dirs."""
-    cur = current_version(table)
-    if cur is None:
+    if keep < 1:
+        raise ValueError(f"vacuum_table: need keep >= 1, got {keep}")
+    versions = manifest_versions(table)
+    if not versions:
         return []
-    mdir = os.path.join(table, "manifests")
-    versions = sorted(
-        int(n[2:-5])
-        for n in os.listdir(mdir)
-        if n.startswith("m-") and n.endswith(".json")
-    )
     live: set[str] = set()
     for v in versions[-keep:]:
         for rels in read_manifest(table, v)["partitions"].values():

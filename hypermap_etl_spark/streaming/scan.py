@@ -124,13 +124,15 @@ def start_ingest_stream(
 def batch_key_buckets(events: DataFrame) -> DataFrame:
     """(namehash, block_bucket) pairs a bucketed batch writes — the index
     rows that let a later batch find every bucket holding a key's
-    events. One map-side explode, distinct within the batch."""
+    events. One map-side explode, distinct within the batch. Buckets
+    are longs, as with_block_bucket types them (an events table read
+    from disk infers an int): mixed types fail the index's reads."""
     from hypermap_etl_spark.operators.materialize import ENTRY_KEY_COLS
 
     return (
         events.select(
             F.explode(F.array(*[F.col(c) for c in ENTRY_KEY_COLS])).alias("namehash"),
-            "block_bucket",
+            F.col("block_bucket").cast("long").alias("block_bucket"),
         )
         .filter(F.col("namehash").isNotNull())
         .distinct()
@@ -138,17 +140,19 @@ def batch_key_buckets(events: DataFrame) -> DataFrame:
 
 
 def rebuild_key_index(spark: SparkSession, table_path: str, key_index_path: str) -> None:
-    """One-off full-scan backfill of the key index for a pre-existing
-    events table (e.g. built by batch `extract` before streaming)."""
+    """Full-scan rebuild of the key index from the events table. The
+    index stream runs it at the first replay batch of each run, so
+    events another writer added between runs (batch `extract`, a
+    delta-path run) are indexed too."""
     log = spark.read.parquet(table_path)
     batch_key_buckets(log).write.mode("overwrite").parquet(key_index_path)
 
 
 def replay_buckets(
     spark: SparkSession, key_index_path: str, touched_keys: DataFrame
-) -> list[int] | None:
+) -> list[int]:
     """Buckets containing any event referencing a touched key, from the
-    side index. None = index absent → caller must not prune.
+    side index.
 
     The index is append-written per batch (blind append, no read on the
     write path — duplicate (key, bucket) pairs across batches are
@@ -156,8 +160,6 @@ def replay_buckets(
     semi-join broadcasts the (small) batch key set, so this lookup costs
     one scan of the index, which is orders of magnitude smaller than
     the log (keys × buckets-touched, not events)."""
-    if not os.path.exists(key_index_path):
-        return None
     idx = spark.read.parquet(key_index_path)
     rows = (
         idx.join(F.broadcast(touched_keys), "namehash", "left_semi")
@@ -256,8 +258,8 @@ def start_index_stream(
     block_bucket, entries by entry_bucket), so a stream can follow
     `index` on the same paths; a table in another layout fails the
     first batch's MERGE with a column error. The side tables sit next
-    to the entries table: ``<entries>__keyidx`` (key index) and
-    ``<entries>__pending`` (the delta path's early writes).
+    to the entries table: ``<entries>__keyidx`` (the replay path's key
+    index) and ``<entries>__pending`` (the delta path's early writes).
 
     Per-batch cost at scale (entries_strategy='replay'):
       write  O(touched block buckets)   — dynamic partition overwrite
@@ -296,11 +298,16 @@ def start_index_stream(
     micro-batches in arbitrary order, which the associative merge
     cannot repair; 'replay' is indifferent to it.
 
-    The key index is blind-appended per batch (no read on the write
-    path), so it accumulates one small file and some duplicate pairs
-    per batch; every ``compact_index_every`` batches it is rewritten
-    distinct into one file (compact_small_table) — long-running tails
-    never degrade into thousands-of-tiny-files scans. 0 disables.
+    The key index exists only for the replay path, which alone reads
+    it. The first replay batch of each run rebuilds it from the events
+    table after its events MERGE (rebuild_key_index), so events other
+    writers added since the last run (batch `extract`, delta batches,
+    which do not write it) are found. Later replay batches of the run
+    blind-append their pairs (no read on the write path), so it
+    accumulates one small file and some duplicate pairs per batch;
+    every ``compact_index_every`` batches it is rewritten distinct into
+    one file (compact_small_table) — long-running tails never degrade
+    into thousands-of-tiny-files scans. 0 disables.
 
     The entries table needs the same maintenance: each batch's dynamic
     partition overwrite rewrites every touched entry bucket with as many
@@ -346,7 +353,8 @@ def start_index_stream(
     # The FIRST batch of a run is exempt: after a crash Spark redelivers
     # the last uncommitted batch, whose span legitimately overlaps the
     # applied rows (the delta merge is idempotent for exact redelivery).
-    state = {"strategy": entries_strategy, "hw": None, "fallback_at": None}
+    # "indexed": the key index was rebuilt in this run
+    state = {"strategy": entries_strategy, "hw": None, "fallback_at": None, "indexed": False}
     span_aggs = [
         F.count(F.lit(1)).alias("n"),
         F.min("blockNumber").alias("lo"),
@@ -380,19 +388,9 @@ def start_index_stream(
                         if state["hw"] is None
                         else max(span["hi"], state["hw"])
                     )
-            if os.path.exists(table_path) and not os.path.exists(key_index_path):
-                # the table predates the index (built by batch `index`):
-                # one full-scan backfill, then appends keep it current
-                rebuild_key_index(spark, table_path, key_index_path)
             res = merge_into_parquet(
                 spark, table_path, events, ["event_id"], partition_col="block_bucket"
             )
-            batch_key_buckets(events).write.mode("append").parquet(key_index_path)
-            if compact_index_every and batch_id > 0 and batch_id % compact_index_every == 0:
-                from hypermap_etl_spark.operators.merge import compact_small_table
-
-                compact_small_table(spark, key_index_path)
-
             if state["strategy"] == "delta":
                 # O(batch): batch-only fold + associative merge with
                 # the stored rows — no history replay, no side-index
@@ -402,11 +400,20 @@ def start_index_stream(
                 buckets = None
                 incremental_entries_delta(spark, entries_path, events)
             else:
+                if state["indexed"]:
+                    batch_key_buckets(events).write.mode("append").parquet(key_index_path)
+                else:
+                    rebuild_key_index(spark, table_path, key_index_path)
+                    state["indexed"] = True
+                if compact_index_every and batch_id > 0 and batch_id % compact_index_every == 0:
+                    from hypermap_etl_spark.operators.merge import compact_small_table
+
+                    compact_small_table(spark, key_index_path)
                 keys = touched_namehashes(events)
-                log = spark.read.parquet(table_path)
                 buckets = replay_buckets(spark, key_index_path, keys)
-                if buckets is not None:
-                    log = log.filter(F.col("block_bucket").isin(buckets))
+                log = spark.read.parquet(table_path).filter(
+                    F.col("block_bucket").isin(buckets)
+                )
                 incremental_entries_update(spark, entries_path, log, events)
             if (
                 compact_entries_every

@@ -635,6 +635,8 @@ def test_cli_curate_html(spark, capsys):
 
 
 def test_cli_snapshot_lifecycle(spark, capsys):
+    """Manifest versions as corpus snapshots: two writes, a diff of the
+    two versions, then a rollback that re-publishes v1 as v3."""
     base = tempfile.mkdtemp()
     src1, src2, tbl = f"{base}/v1src", f"{base}/v2src", f"{base}/tbl"
     spark.createDataFrame(
@@ -644,21 +646,27 @@ def test_cli_snapshot_lifecycle(spark, capsys):
         [(1, "a"), (2, "B"), (3, "c")], "doc_id long, text string"
     ).write.parquet(src2)
 
-    main(["snapshot", "write", "--table", tbl, "--data", src1])
-    main(["snapshot", "write", "--table", tbl, "--data", src2])
+    main(["manifest", "write", "--table", tbl, "--data", src1])
+    main(["manifest", "write", "--table", tbl, "--data", src2])
     outs = [json.loads(l) for l in capsys.readouterr().out.strip().splitlines()
             if l.startswith("{")]
     assert [o["version"] for o in outs] == [1, 2]
 
-    main(["snapshot", "diff", "--table", tbl])
+    main(["manifest", "diff", "--table", tbl, "--keys", "doc_id"])
     d = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert d["old"] == 1 and d["new"] == 2
     assert d["summary"] == {"unchanged": 1, "changed": 1, "added": 1}
 
-    main(["snapshot", "rollback", "--table", tbl, "--version", "1"])
-    main(["snapshot", "list", "--table", tbl])
-    lst = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert lst["latest"] == 1 and lst["versions"] == [1, 2]
+    main(["manifest", "rollback", "--table", tbl, "--version", "1"])
+    main(["manifest", "status", "--table", tbl])
+    st = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert st["version"] == 3 and st["versions"] == [1, 2, 3]
+    from hypermap_etl_spark.sources.manifest import read_table
+
+    def rows(version=None):
+        return sorted(tuple(r) for r in read_table(spark, tbl, version).collect())
+
+    assert rows() == rows(1)
 
 
 def test_cli_curate_gopher(spark, capsys):
@@ -682,20 +690,34 @@ def test_cli_curate_gopher(spark, capsys):
 
 
 def test_cli_snapshot_diff_psi(spark, capsys):
-    from hypermap_etl_spark.sources import versioned as V
+    """``manifest diff --psi-col`` between two identical versions, then
+    a missing side, a vacuumed side and no ``--keys``: each exits with
+    a message naming the problem."""
+    import pytest
+
+    from hypermap_etl_spark.sources.manifest import vacuum_table, write_table
 
     base = tempfile.mkdtemp()
     tbl = f"{base}/tbl"
     a = spark.createDataFrame(
         [(i, float(i % 20)) for i in range(200)], "doc_id long, value double"
     )
-    V.write_version(a, tbl)
-    V.write_version(a, tbl)  # identical second drop
-    main(["snapshot", "diff", "--table", tbl, "--keys", "doc_id",
+    write_table(a, tbl)
+    write_table(a, tbl)  # identical second drop
+    main(["manifest", "diff", "--table", tbl, "--keys", "doc_id",
           "--psi-col", "value"])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["summary"] == {"unchanged": 200}
     assert rep["psi"]["value"] == 0.0 and rep["psi"]["verdict"] == "stable"
+
+    with pytest.raises(SystemExit, match="old version 0 .* no manifest"):
+        main(["manifest", "diff", "--table", tbl, "--keys", "doc_id",
+              "--version", "1"])
+    vacuum_table(tbl, keep=1)
+    with pytest.raises(SystemExit, match="old version 1 .* vacuumed"):
+        main(["manifest", "diff", "--table", tbl, "--keys", "doc_id"])
+    with pytest.raises(SystemExit, match="--keys required"):
+        main(["manifest", "diff", "--table", tbl])
 
 
 def test_cli_check(spark, capsys, tmp_path):

@@ -165,6 +165,48 @@ def test_index_stream_prunes_replay_to_touched_buckets(spark):
         assert got[k]["notes"] == expected[k]["notes"]
 
 
+def test_replay_stream_indexes_events_written_between_runs(spark):
+    """Events a batch `extract` MERGEs between two replay runs are in
+    the key index the second run prunes its replay with: P's fact from
+    the extract survives the second run's refold of P."""
+    from hypermap_etl_spark.operators.decode import parse_raw_logs
+    from hypermap_etl_spark.operators.merge import (
+        merge_into_parquet,
+        with_block_bucket,
+    )
+
+    base = tempfile.mkdtemp()
+    src, tbl, ent, ckpt = f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
+    os.makedirs(src)
+    P = h(10)
+    mint = [ev(eventType="Mint", blockNumber=10, logIndex=0, parenthash=ROOT_HASH,
+               childhash=P, labelhash=h(11), label="p")]
+    fact = [ev(eventType="Fact", blockNumber=150_000, logIndex=0, parenthash=P,
+               facthash=h(21), labelhash=h(22), label="color", data="0xbb")]
+    note = [ev(eventType="Note", blockNumber=250_010, logIndex=0, parenthash=P,
+               notehash=h(31), labelhash=h(32), label="note1", data="0x01")]
+
+    build_raw_logs(events_df(spark, mint)).write.mode("append").parquet(src)
+    start_index_stream(
+        spark, src, tbl, ent, ckpt, entries_strategy="replay"
+    ).awaitTermination(240)
+    extracted = with_block_bucket(parse_raw_logs(build_raw_logs(events_df(spark, fact))))
+    merge_into_parquet(spark, tbl, extracted, ["event_id"], partition_col="block_bucket")
+    build_raw_logs(events_df(spark, note)).write.mode("append").parquet(src)
+    start_index_stream(
+        spark, src, tbl, ent, ckpt, entries_strategy="replay"
+    ).awaitTermination(240)
+
+    expected = materialize_entries(
+        parse_raw_logs(build_raw_logs(events_df(spark, mint + fact + note)))
+    ).filter(F.col("namehash") == P).first()
+    got = spark.read.parquet(ent).filter(F.col("namehash") == P).first()
+    assert expected["facts"] == {"color": "0xbb"}
+    assert got["facts"] == expected["facts"]
+    assert got["notes"] == expected["notes"]
+    assert got["lastUpdateBlock"] == expected["lastUpdateBlock"]
+
+
 def test_replay_scan_partition_pruned(spark):
     """The pruned replay frame's physical plan must carry a partition
     filter on block_bucket (scan I/O bounded by touched buckets)."""
@@ -261,8 +303,9 @@ def test_descendants_bfs(spark):
 
 
 def test_index_stream_autocompacts_key_index(spark):
-    """With compact_index_every=1 the blind-appended key index collapses
-    to one distinct file after the second batch."""
+    """With compact_index_every=1 the key index collapses to one
+    distinct file after a batch that blind-appended to it (the second
+    replay batch of a run; the first rebuilds it)."""
     import glob
 
     from hypermap_etl_spark.streaming.scan import start_index_stream
@@ -277,13 +320,16 @@ def test_index_stream_autocompacts_key_index(spark):
         for i in range(2)
     ]
     build_raw_logs(events_df(spark, rows)).write.mode("append").parquet(src)
-    start_index_stream(spark, src, tbl, ent, ckpt,
-                       compact_index_every=1).awaitTermination(240)
+    # the key index exists only on the replay path
+    start_index_stream(spark, src, tbl, ent, ckpt, compact_index_every=1,
+                       entries_strategy="replay").awaitTermination(240)
 
-    more = [ev(eventType="Mint", blockNumber=20, logIndex=0, parenthash=h(1),
-               childhash=h(30), label="b")]
-    build_raw_logs(events_df(spark, more)).write.mode("append").parquet(src)
-    q = start_index_stream(spark, src, tbl, ent, ckpt, compact_index_every=1)
+    for i in range(2):  # two files, one batch each: rebuild, then append
+        more = [ev(eventType="Mint", blockNumber=20 + i, logIndex=0,
+                   parenthash=h(1), childhash=h(30 + i), label=f"b{i}")]
+        build_raw_logs(events_df(spark, more)).write.mode("append").parquet(src)
+    q = start_index_stream(spark, src, tbl, ent, ckpt, compact_index_every=1,
+                           max_files_per_trigger=1, entries_strategy="replay")
     q.awaitTermination(240)
 
     files = glob.glob(f"{idx}/*.parquet")

@@ -664,6 +664,42 @@ def test_reorg_rollback_mid_bucket_and_self_healing(spark, tmp_path):
     assert ent[P]["facts"] == {} and ent[P]["lastUpdateBlock"] == 10
 
 
+def test_reorg_rollback_drops_parked_writes_above_fork(spark, tmp_path):
+    """A delta-path early write parked above the fork goes with its
+    event: after the rollback, a Mint of its target must not retry it.
+    Re-running the rollback converges to the same state."""
+    from hypermap_etl_spark.constants import ROOT_HASH
+    from hypermap_etl_spark.operators.materialize import (
+        incremental_entries_delta,
+        materialize_entries,
+    )
+    from hypermap_etl_spark.operators.merge import reorg_rollback, with_block_bucket
+
+    P, T = h(1), h(2)
+    epath, npath = f"{tmp_path}/events", f"{tmp_path}/entries"
+
+    def apply(rows):
+        events = with_block_bucket(events_df(spark, rows))
+        merge_into_parquet(spark, epath, events, ["event_id"], "block_bucket")
+        incremental_entries_delta(spark, npath, events)
+
+    mint_p = ev(eventType="Mint", blockNumber=10, logIndex=0,
+                parenthash=ROOT_HASH, childhash=P, labelhash=h(31), label="p")
+    mint_t = ev(eventType="Mint", blockNumber=255, logIndex=0,
+                parenthash=P, childhash=T, labelhash=h(32), label="t")
+    apply([mint_p])
+    # T is not minted yet: the write is parked in <entries>__pending
+    apply([ev(eventType="Fact", blockNumber=320, logIndex=0, parenthash=T,
+              facthash=h(21), labelhash=h(22), label="color", data="0xaa")])
+    reorg_rollback(spark, epath, fork_block=200, entries_path=npath)
+    reorg_rollback(spark, epath, fork_block=200, entries_path=npath)
+    apply([mint_t])
+
+    got = _ent_flat(spark.read.parquet(npath))
+    assert dict(dict(got[T])["facts"]) == {}
+    assert got == _ent_flat(materialize_entries(events_df(spark, [mint_p, mint_t])))
+
+
 # --- hypothesis: reorg rollback == clean fold, any log, any depth --------
 
 from hypothesis import HealthCheck, given, settings
