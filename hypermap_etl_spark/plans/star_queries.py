@@ -8146,7 +8146,9 @@ def events_type_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed power iterations): where a long session spends its time.
     Each v·M product quantizes to decimal before the per-state sum
     and each renormalization divides exact totals once — the oracle
-    unrolls the identical 8 steps."""
+    unrolls the identical 8 steps (its CTEs MATERIALIZED: each step is
+    read twice, and inlined they re-run the transition lineage 2^8
+    times)."""
     from hypermap_etl_spark.operators.graph import markov_stationary
 
     tr = events_type_bigrams(spark, sf_dir)
@@ -8159,12 +8161,12 @@ EVENTS_STATIONARY_ORACLE = """WITH seq AS (
                                ORDER BY ts ASC, event_id ASC) AS from_type
   FROM events WHERE user_id IS NOT NULL
 ),
-tr AS (
+tr AS MATERIALIZED (
   SELECT from_type, event_type AS to_type, CAST(COUNT(*) AS BIGINT) AS n
   FROM seq WHERE from_type IS NOT NULL GROUP BY 1, 2
 ),
 ot AS (SELECT from_type, CAST(SUM(n) AS BIGINT) AS ci FROM tr GROUP BY 1),
-m AS (
+m AS MATERIALIZED (
   SELECT tr.from_type, tr.to_type,
          CAST(tr.n AS DOUBLE) / CAST(ot.ci AS DOUBLE) AS pij
   FROM tr JOIN ot USING (from_type)
@@ -8175,7 +8177,7 @@ v0 AS (
   SELECT st, CAST(ROUND(1.0 / CAST(s AS DOUBLE), 12) AS DECIMAL(38,12)) AS p
   FROM states CROSS JOIN ns
 ),
-u1 AS (
+u1 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v0.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8187,7 +8189,7 @@ v1 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u1 CROSS JOIN t1
 ),
-u2 AS (
+u2 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v1.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8199,7 +8201,7 @@ v2 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u2 CROSS JOIN t2
 ),
-u3 AS (
+u3 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v2.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8211,7 +8213,7 @@ v3 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u3 CROSS JOIN t3
 ),
-u4 AS (
+u4 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v3.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8223,7 +8225,7 @@ v4 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u4 CROSS JOIN t4
 ),
-u5 AS (
+u5 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v4.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8235,7 +8237,7 @@ v5 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u5 CROSS JOIN t5
 ),
-u6 AS (
+u6 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v5.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8247,7 +8249,7 @@ v6 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u6 CROSS JOIN t6
 ),
-u7 AS (
+u7 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v6.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p
@@ -8259,7 +8261,7 @@ v7 AS (
                   AS DECIMAL(38,12)) AS p
   FROM u7 CROSS JOIN t7
 ),
-u8 AS (
+u8 AS MATERIALIZED (
   SELECT m.to_type AS st,
     CAST(SUM(CAST(ROUND(CAST(v7.p AS DOUBLE) * m.pij, 12)
                   AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS p

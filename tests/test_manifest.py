@@ -128,6 +128,60 @@ def test_rollback_is_pointer_only(spark):
     assert _snap(spark, t) == [(1, "a", 0)]
 
 
+def test_rollback_keeps_superseded_version_data(spark):
+    """Rollback moves no data: the version it supersedes keeps its
+    manifest and its data dirs, so it stays readable by pin, and the
+    next write lands above the rollback."""
+    t = os.path.join(tempfile.mkdtemp(), "t")
+    write_table(_rows(spark, [(1, "a", 0)]), t)
+    write_table(_rows(spark, [(2, "b", 0)]), t)
+    v2_dirs = [
+        rel for rels in read_manifest(t, 2)["partitions"].values() for rel in rels
+    ]
+    assert rollback_table(t, 1) == 3
+    assert read_manifest(t, 3)["partitions"] == read_manifest(t, 1)["partitions"]
+    assert v2_dirs and all(os.path.isdir(os.path.join(t, rel)) for rel in v2_dirs)
+    assert write_table(_rows(spark, [(3, "c", 0)]), t) == 4
+
+
+def test_commits_leave_no_tmp_files(spark):
+    """Manifests and the pointer are written to private tmp files and
+    linked or renamed into place; no tmp file, pointer lock or writer
+    lock survives a write, a merge or a rollback."""
+    t = os.path.join(tempfile.mkdtemp(), "t")
+    write_table(_rows(spark, [(1, "a", 0)]), t)
+    merge_table(spark, t, _rows(spark, [(2, "b", 0)]), ["k"])
+    rollback_table(t, 1)
+    left = [
+        os.path.join(d, n)
+        for d, dirs, files in os.walk(os.path.dirname(t))
+        for n in dirs + files
+        if ".tmp." in n or n.endswith((".lock", "__lock"))
+    ]
+    assert left == []
+    with open(os.path.join(t, "_latest")) as fh:
+        assert int(fh.read().strip()) == current_version(t) == 3
+
+
+def test_lost_pointer_falls_back_to_newest_manifest(spark):
+    """A missing, garbled or dangling ``_latest`` resolves to the newest
+    manifest on disk, never to a crashed writer's unpublished prefix."""
+    from hypermap_etl_spark.sources.manifest import _write_token
+
+    t = os.path.join(tempfile.mkdtemp(), "t")
+    write_table(_rows(spark, [(1, "a", 0)]), t)
+    write_table(_rows(spark, [(2, "b", 0)]), t)
+    _write_token(_rows(spark, [(99, "zz", 9)]), t, None)  # never published
+    ptr = os.path.join(t, "_latest")
+    os.remove(ptr)
+    assert current_version(t) == 2
+    for bad in ("garbage", "9"):
+        with open(ptr, "w") as fh:
+            fh.write(bad)
+        assert current_version(t) == 2
+    assert _snap(spark, t) == [(2, "b", 0)]
+
+
 def test_pinned_read_and_missing_version(spark):
     """Version 1 stays readable by pin after version 2 lands; a version
     that was never written raises instead of reading nothing."""
