@@ -537,23 +537,28 @@ def cmd_embed(args) -> None:
 
 
 def cmd_ann(args) -> None:
-    """Persisted ANN: `--build` writes the index from an embeddings
-    parquet — IVF (centroids + partition-pruned inverted lists) by
-    default, or `--pq` for the product-quantized index (codebooks +
-    128×-compressed codes, no raw vectors); otherwise searches the
-    index with a query embeddings parquet and writes
-    (query_id, neighbor_id, sim, rank). PQ search refines exactly when
-    `--rescore-with` names a raw-vector parquet, else returns the ADC
-    ranking."""
+    """Persisted ANN index (similarity.ivf_index_*). `--build` writes it
+    from an embeddings parquet: centroids plus `--centroids`
+    partition-pruned inverted lists of raw vectors, or of PQ codes with
+    `--pq` (`--centroids 1` is a full-scan PQ index). `--append`,
+    `--compact` and `--stats` maintain it; otherwise a query embeddings
+    parquet is searched and (query_id, neighbor_id, sim, rank) written.
+    Every call after the build reads the code type from the index.
+    `--rescore-with` names a raw-vector parquet that re-ranks the top
+    candidates exactly."""
     from hypermap_etl_spark.operators.similarity import (
         ivf_index_append,
+        ivf_index_compact,
         ivf_index_search,
         ivf_index_stats,
         ivf_index_write,
-        pq_index_search,
-        pq_index_write,
     )
 
+    if args.pq and not args.build:
+        raise SystemExit(
+            "ann --pq applies to --build only: append, compact, stats and "
+            "search read the code type from the index"
+        )
     if (args.build or args.append) and not args.embeddings:
         raise SystemExit("ann --build/--append requires --embeddings")
     if not (args.build or args.append or args.stats or args.compact) and not (
@@ -566,45 +571,23 @@ def cmd_ann(args) -> None:
             print(json.dumps(r.asDict()))
         return
     if args.compact:
-        from hypermap_etl_spark.operators.similarity import (
-            ivf_index_compact,
-            pq_index_compact,
-        )
-
-        if args.pq:
-            rep = {"rows": pq_index_compact(spark, args.index)}
-        else:
-            rep = ivf_index_compact(spark, args.index)
-        print(json.dumps(rep))
+        print(json.dumps(ivf_index_compact(spark, args.index)))
         return
     if args.append:
-        from hypermap_etl_spark.operators.similarity import pq_index_append
-
         emb = spark.read.parquet(args.embeddings)
-        fn = pq_index_append if args.pq else ivf_index_append
-        rep = fn(emb, args.index, vec_col=args.vec_col, id_col=args.id_col)
+        rep = ivf_index_append(
+            emb, args.index, vec_col=args.vec_col, id_col=args.id_col
+        )
         print(json.dumps(rep))
         return
     if args.build:
         emb = spark.read.parquet(args.embeddings)
-        if args.pq:
-            pq_index_write(
-                emb, args.index, m=args.pq_m, k_codes=args.pq_codes,
-                vec_col=args.vec_col, id_col=args.id_col,
-            )
-            print(json.dumps({
-                "built": args.index, "pq": True,
-                "subspaces": args.pq_m, "codes": args.pq_codes,
-                "vectors": spark.read.parquet(
-                    f"{args.index}/codes.parquet"
-                ).count(),
-            }))
-            return
         ivf_index_write(
             emb, args.index, n_centroids=args.centroids,
             vec_col=args.vec_col, id_col=args.id_col,
+            m=args.pq_m if args.pq else None, k_codes=args.pq_codes,
         )
-        print(json.dumps({
+        rep = {
             "built": args.index,
             # actual count: empty hash buckets can leave fewer than
             # the requested --centroids
@@ -612,29 +595,23 @@ def cmd_ann(args) -> None:
                 f"{args.index}/centroids.parquet"
             ).count(),
             "vectors": spark.read.parquet(f"{args.index}/lists").count(),
-        }))
+            "pq": bool(args.pq),
+        }
+        if args.pq:
+            rep.update(subspaces=args.pq_m, codes=args.pq_codes)
+        print(json.dumps(rep))
         return
     queries = spark.read.parquet(args.queries)
-    if args.pq:
-        rescore = (
-            spark.read.parquet(args.rescore_with)
-            if args.rescore_with
-            else None
-        )
-        out = pq_index_search(
-            spark, args.index, queries, k=args.k,
-            rescore_with=rescore, vec_col=args.vec_col, id_col=args.id_col,
-        )
-    else:
-        out = ivf_index_search(
-            spark, args.index, queries, k=args.k, n_probe=args.probe,
-            vec_col=args.vec_col, id_col=args.id_col,
-        )
+    rescore = spark.read.parquet(args.rescore_with) if args.rescore_with else None
+    out = ivf_index_search(
+        spark, args.index, queries, k=args.k, n_probe=args.probe,
+        rescore_with=rescore, vec_col=args.vec_col, id_col=args.id_col,
+    )
     out.write.mode("overwrite").parquet(args.out)
     print(json.dumps({
         "queries": queries.count(),
         "results": spark.read.parquet(args.out).count(),
-        "k": args.k, "probe": args.probe, "pq": bool(args.pq),
+        "k": args.k, "probe": args.probe,
     }))
 
 
@@ -2062,18 +2039,18 @@ def main(argv=None) -> None:
     p.add_argument("--out", required=True, help="embeddings output parquet")
     p.add_argument("--dim", type=int, default=64)
     p.add_argument("--ngrams", type=int, default=1)
-    p = sub.add_parser("ann", help="persisted-IVF ANN index build/search")
+    p = sub.add_parser("ann", help="persisted IVF ANN index build/search")
     p.add_argument("--index", required=True, help="index directory")
     p.add_argument("--build", action="store_true", help="build instead of search")
     p.add_argument("--append", action="store_true",
-                   help="append a new embeddings batch to the standing IVF "
-                        "index (pinned centroids, touched lists only)")
+                   help="append a new embeddings batch to the standing "
+                        "index (pinned model, touched lists only)")
     p.add_argument("--stats", action="store_true",
                    help="print per-list size/share/imbalance (rebuild signal)")
     p.add_argument("--compact", action="store_true",
                    help="defragment the append tail: collapse oversized "
-                        "posting lists (IVF) or the codes table (--pq) — "
-                        "results are bit-identical, only file counts change")
+                        "posting lists — results are bit-identical, only "
+                        "file counts change")
     p.add_argument("--embeddings", default=None, help="corpus embeddings parquet (build)")
     p.add_argument("--queries", default=None, help="query embeddings parquet (search)")
     p.add_argument("--out", default=None, help="results parquet (search)")
@@ -2081,11 +2058,13 @@ def main(argv=None) -> None:
     p.add_argument("--k", type=int, default=5)
     p.add_argument("--probe", type=int, default=2)
     p.add_argument("--pq", action="store_true",
-                   help="product-quantized index (128x-compressed codes)")
+                   help="build with product-quantized lists (128x-compressed "
+                        "codes); later calls read the code type from the index")
     p.add_argument("--pq-m", type=int, default=8, help="PQ subspaces")
     p.add_argument("--pq-codes", type=int, default=16, help="codes per subspace")
     p.add_argument("--rescore-with", default=None,
-                   help="raw-vector parquet for exact PQ refinement")
+                   help="raw-vector parquet for exact refinement of the "
+                        "top candidates")
     p.add_argument("--vec-col", default="embedding")
     p.add_argument("--id-col", default="vec_id")
     p = sub.add_parser("decontam", help="benchmark decontamination report")

@@ -1,18 +1,35 @@
-"""Similarity search over embedding columns (north-star set).
+"""Similarity search over embedding columns.
 
 Embeddings are `array<float>`; all kernels cast to double and use
 zip_with/aggregate HOFs — JVM-evaluated, no Python on the hot path.
 
+In-memory top-k, each returning (query_id, neighbor_id, sim, rank):
+
   brute_force_topk   exact cosine top-k: the correctness baseline.
                      Query side is small (sampled) and broadcast; the
-                     corpus side streams — no shuffle of the big side,
-                     per-partition top-k via window over (query, sim).
-  lsh_topk           sign-random-projection buckets (deterministic
-                     md5-derived hyperplanes) — the scale path: each
-                     query only scores its bucket's corpus slice.
-  cosine_neardup     all-pairs cosine ≥ threshold; exact, with the
-                     corpus-side self-join keyed by id inequality.
-  knn_label_vote     majority label of the exact top-k (simple kNN).
+                     corpus side streams — no shuffle of the big side.
+  lsh_topk(_banded)  sign-random-projection buckets (deterministic
+                     md5-derived hyperplanes): each query only scores
+                     its buckets' corpus slice.
+  ivf_topk           inverted lists around deterministic centroids;
+                     each query probes its n_probe nearest lists.
+  quantized_topk     coarse scan over int8 / product-quantized
+  pq_topk            reconstructions, exact rescore of the candidates.
+
+The persisted ANN index, ivf_index_write / search / append / compact /
+stats: a centroid table plus inverted lists stored as ``cid=``
+partition directories, so a search reads only its probed lists. Two
+code types, chosen at build time and read back from the index:
+
+  flat   lists hold the raw vectors (neighbor_id, cv, cn)
+  PQ     lists hold product-quantization codes (neighbor_id, codes)
+         against a codebooks.parquet beside the centroids; one list
+         is the full-scan PQ index
+
+Also here: near-duplicate pairs (cosine_neardup_pairs,
+srp_neardup_pairs), kNN label vote, k-means and semdedup, PCA and JL
+projections, and recall evaluators (topk_recall,
+truncated_topk_recall).
 
 Determinism: similarities are rounded to 6 dp and ranked by
 (rounded sim desc, vec_id asc) so results are reproducible across
@@ -20,6 +37,9 @@ engines for the DuckDB oracle.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -70,6 +90,55 @@ def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _sim() -> Column:
+    """Rounded cosine of the query columns (qv, qn) against the
+    candidate columns (cv, cn) — every top-k path's score."""
+    return F.round(
+        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
+    ).alias("sim")
+
+
+def _query_rows(nq: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(query_id, qv, qn) from a with_norm'd query frame."""
+    return nq.select(
+        F.col(id_col).alias("query_id"),
+        _vd(vec_col).alias("qv"),
+        F.col("__norm").alias("qn"),
+    )
+
+
+def _score(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, sim) of joined query and candidate rows:
+    self-matches dropped, one row per pair — a vector stored twice
+    scores once."""
+    return (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", _sim())
+        .dropDuplicates(["query_id", "neighbor_id"])
+    )
+
+
+def _rescore(
+    cand: DataFrame, q: DataFrame, raw: DataFrame, k: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Exact re-rank of a candidate top-list (the FAISS refine stage):
+    each (query_id, neighbor_id) candidate re-scored against the raw
+    vectors of ``raw``, the exact-k ranking returned. Joins only
+    queries × candidates rows."""
+    exact = with_norm(fan_out(raw), vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        _vd(vec_col).alias("cv"),
+        F.col("__norm").alias("cn"),
+    )
+    rescored = (
+        cand.select("query_id", "neighbor_id")
+        .join(q, "query_id")
+        .join(exact, "neighbor_id")
+        .select("query_id", "neighbor_id", _sim())
+    )
+    return _rank_topk(rescored, k)
+
+
 def brute_force_topk(
     emb: DataFrame,
     k: int = 5,
@@ -96,23 +165,15 @@ def brute_force_topk(
         )
     nemb = with_norm(fan_out(emb), vec_col)
     q = nemb.filter(query_filter) if query_filter is not None else nemb
-    q = q.select(
-        F.col(id_col).alias("query_id"),
-        _vd(vec_col).alias("qv"),
-        F.col("__norm").alias("qn"),
-    )
     c = nemb.select(
         F.col(id_col).alias("neighbor_id"),
         _vd(vec_col).alias("cv"),
         F.col("__norm").alias("cn"),
     )
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
     scored = (
-        F.broadcast(q)
+        F.broadcast(_query_rows(q, vec_col, id_col))
         .join(c, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
+        .select("query_id", "neighbor_id", _sim())
     )
     return _rank_topk(scored, k)
 
@@ -433,12 +494,12 @@ def _pick_centroids(nemb: DataFrame, n_centroids: int, vec_col: str, id_col: str
     uniform hash buckets — a k-means init without refinement. Returns
     driver-side [(cid, vector, norm)] (n_centroids x dim, model-sized).
 
-    min_by keyed by id (r11, guide §2.3 aggregate-before-you-shuffle):
-    the previous row_number window shuffled the WHOLE corpus into
-    n_centroids partitions and sorted each just to keep one row per
-    bucket; the min_by aggregate combines map-side, so the exchange
-    carries ≤ n_centroids partial rows per task and nothing sorts.
-    Identical pick: ids are unique, so argmin-by-id IS the rank-1 row.
+    A min_by aggregate keyed by id, not a row_number window: the window
+    would shuffle the WHOLE corpus into n_centroids partitions and sort
+    each just to keep one row per bucket, while min_by combines
+    map-side, so the exchange carries ≤ n_centroids partial rows per
+    task and nothing sorts. Identical pick: ids are unique, so
+    argmin-by-id IS the rank-1 row.
     """
     rows = (
         nemb.withColumn(
@@ -467,9 +528,8 @@ def _model_df(spark, rows, schema: str) -> DataFrame:
     handful of rows over defaultParallelism Python-RDD slices; any
     later coalesce(1) then computes all those slices SEQUENTIALLY in
     one task, paying one Python-worker round trip EACH (~180 ms x 32
-    measured — the r10 single-file-centroid write cost ~6 s of
-    ivf_build, the driver-visible regression). One slice = one
-    round trip and one output file, no coalesce needed."""
+    measured, ~6 s of an sf0.1 index build). One slice = one round
+    trip and one output file, no coalesce needed."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
@@ -493,6 +553,75 @@ def _nearest_centroids(cent, vec: Column, norm: Column, n: int) -> Column:
     return F.transform(top, lambda t: t["cid"])
 
 
+def _probes(q: DataFrame, cent, n_probe: int) -> DataFrame:
+    """Query rows exploded to one row per probed list (cid)."""
+    return q.withColumn(
+        "cid",
+        F.explode(_nearest_centroids(cent, F.col("qv"), F.col("qn"), n_probe)),
+    )
+
+
+def _list_rows(nemb: DataFrame, cent, books, vec_col: str, id_col: str) -> DataFrame:
+    """One inverted-list row per vector: neighbor_id, the list payload
+    — the raw vector and its norm (cv, cn) for a flat index, the PQ
+    codes for a PQ one (``books`` set) — and the nearest centroid's
+    cid. Build, append and ivf_topk share it, so an appended row is
+    assigned and coded exactly like a built one."""
+    vec = _vd(vec_col)
+    payload = (
+        [vec.alias("cv"), F.col("__norm").alias("cn")]
+        if books is None
+        else [_pq_codes(books, vec).alias("codes")]
+    )
+    return nemb.select(
+        F.col(id_col).alias("neighbor_id"),
+        *payload,
+        _nearest_centroids(cent, vec, F.col("__norm"), 1).getItem(0).alias("cid"),
+    )
+
+
+def _write_lists(rows: DataFrame, path: str, files_per_list: int, mode: str) -> None:
+    """Write list rows into the ``cid=`` directories, clustered by list.
+    The assignment runs map-side at full scan parallelism, but writing
+    from those tasks leaves one file per task per touched list
+    (measured 256 files for an 8-list sf0.1 index — pure open/footer
+    overhead for every probe scan, and each unclustered append added
+    ~tasks more per list). One exchange keyed by (cid, salt) bounds it
+    to files_per_list files per list; the salt derives from the row id,
+    never rand(), so a retried task reproduces the layout.
+    files_per_list=1 is right while a list fits one task's write; raise
+    it when corpus_size/n_centroids outgrows a ~100 MB-1 GB file."""
+    (
+        rows.repartition(
+            F.col("cid"),
+            F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(files_per_list)),
+        )
+        .write.mode(mode)
+        .partitionBy("cid")
+        .parquet(f"{path}/lists")
+    )
+
+
+def _read_centroids(spark, path: str):
+    return [
+        (int(r["cid"]), list(r["cv"]), float(r["cn"]))
+        for r in spark.read.parquet(f"{path}/centroids.parquet").collect()
+    ]
+
+
+def _read_codebooks(spark, path: str):
+    """The index's PQ codebooks (books[j][code] = sub-centroid), or None
+    for a flat index: the code type is whether codebooks.parquet
+    exists."""
+    src = f"{path}/codebooks.parquet"
+    if not os.path.exists(src):
+        return None
+    by_j: dict = {}
+    for r in spark.read.parquet(src).collect():
+        by_j.setdefault(r["j"], {})[r["code"]] = [float(x) for x in r["cent"]]
+    return [[by_j[j][c] for c in sorted(by_j[j])] for j in sorted(by_j)]
+
+
 def ivf_index_write(
     emb: DataFrame,
     path: str,
@@ -500,58 +629,68 @@ def ivf_index_write(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     files_per_list: int = 1,
+    m: int | None = None,
+    k_codes: int = 16,
+    n_iter: int = 3,
 ) -> None:
-    """Build and PERSIST the IVF index — the embedding-side analog of
+    """Build and PERSIST the ANN index — the embedding-side analog of
     the MinHash signature store: pay the corpus pass once, serve every
     later query batch from the standing index.
 
     Layout:
       path/centroids.parquet            (cid, cv, cn) — model-sized
-      path/lists/cid=<c>/...parquet     (neighbor_id, cv, cn) — the
-                                        inverted lists as PARTITION
+      path/codebooks.parquet            (j, code, cent) — PQ only
+      path/lists/cid=<c>/...parquet     the inverted lists as PARTITION
                                         DIRECTORIES, so a search
                                         probing n_probe lists scans
                                         ONLY those directories
                                         (partition pruning, the file-
                                         level analog of FAISS's list
-                                        structure).
+                                        structure): (neighbor_id, cv,
+                                        cn) flat, (neighbor_id, codes)
+                                        PQ.
 
-    Same deterministic centroid construction as ivf_topk, so a search
-    over the persisted index returns bit-identical results to the
-    in-memory operator (pinned by test).
+    ``m`` picks the code type: unset stores raw vectors (IVF-flat);
+    set, :func:`pq_fit` fits ``m`` subspace codebooks of ``k_codes``
+    codes and the lists store only m·log2(k_codes)-bit codes (IVF-PQ,
+    FAISS's IVFPQ shape). Exact refinement joins back to wherever the
+    raw vectors already live (``rescore_with`` in
+    :func:`ivf_index_search`) instead of duplicating them into the
+    index. n_centroids=1 is the full-scan PQ index.
+
+    Deviation from FAISS: codes quantize the RAW vectors against global
+    codebooks, not per-list residuals. Residual encoding buys precision
+    at the same bit budget but couples codebooks to lists; global ones
+    keep :func:`ivf_index_append` O(batch) against PINNED model files.
+
+    Same deterministic centroid construction as ivf_topk (and the same
+    fit and encoding as pq_topk), so a search over the persisted index
+    returns bit-identical results to the in-memory operator (pinned by
+    test).
     """
     nemb = with_norm(fan_out(emb), vec_col)
     cent = _pick_centroids(nemb, n_centroids, vec_col, id_col)
+    books = None
+    if m is not None:
+        books = pq_fit(
+            emb, m=m, k_codes=k_codes, n_iter=n_iter, vec_col=vec_col, id_col=id_col
+        )
     spark = emb.sparkSession
-    # single-slice write (see _model_df): one file — the r10 goal of
-    # coalesce(1) — without the per-slice Python round trips coalesce
-    # paid on a 32-slice parallelize
-    _model_df(
-        spark, [(c, v, n) for c, v, n in cent], "cid int, cv array<double>, cn double"
-    ).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-    corpus = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv"),
-        F.col("__norm").alias("cn"),
-        _nearest_centroids(cent, _vd(vec_col), F.col("__norm"), 1)
-        .getItem(0)
-        .alias("cid"),
+    _model_df(spark, cent, "cid int, cv array<double>, cn double").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/centroids.parquet")
+    if books is None:
+        # a flat rebuild over a PQ index must not read back as PQ
+        shutil.rmtree(f"{path}/codebooks.parquet", ignore_errors=True)
+    else:
+        _model_df(
+            spark,
+            [(j, c, cv) for j, book in enumerate(books) for c, cv in enumerate(book)],
+            "j int, code int, cent array<double>",
+        ).write.mode("overwrite").parquet(f"{path}/codebooks.parquet")
+    _write_lists(
+        _list_rows(nemb, cent, books, vec_col, id_col), path, files_per_list, "overwrite"
     )
-    # cluster the write by list (r10, guide §6): the assignment runs
-    # map-side at full scan parallelism, but writing from those tasks
-    # leaves one file per task per touched list (measured 256 files for
-    # an 8-list sf0.1 index — pure open/footer overhead for every probe
-    # scan). One exchange keyed by (cid, salt) bounds it to
-    # files_per_list files per list; salt derives deterministically
-    # from the row id (guide §2.5 — never rand()), so retried tasks
-    # reproduce the layout. files_per_list=1 is right while a list fits
-    # one task's write; raise it when corpus_size/n_centroids outgrows
-    # a ~100 MB-1 GB file.
-    corpus = corpus.repartition(
-        F.col("cid"),
-        F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(files_per_list)),
-    )
-    corpus.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/lists")
 
 
 def ivf_index_search(
@@ -560,51 +699,147 @@ def ivf_index_search(
     queries: DataFrame,
     k: int = 5,
     n_probe: int = 2,
+    candidates: int = 128,
+    rescore_with: DataFrame | None = None,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Approximate top-k over a PERSISTED IVF index (ivf_index_write).
+    """Approximate top-k over a PERSISTED index (ivf_index_write), of
+    either code type.
 
     Probe selection evaluates against the (collected, model-sized)
     centroid table; the inverted-list scan is filtered to the distinct
     probed cids, which Spark turns into PartitionFilters — a small
     query batch reads only its probed list directories, not the corpus
-    (plan-asserted in tests). Identical scoring/rank construction to
-    ivf_topk, so results match the in-memory operator bit-for-bit.
-    """
-    cent = [
-        (int(r["cid"]), list(r["cv"]), float(r["cn"]))
-        for r in spark.read.parquet(f"{path}/centroids.parquet").collect()
-    ]
-    from hypermap_etl_spark.util import tracked_persist
+    (plan-asserted in tests). The query batch is small and broadcast,
+    so the lists side never shuffles. Flat lists score the raw vectors,
+    PQ lists their codebook reconstructions (asymmetric distance).
+    With ``rescore_with`` (a raw-vector frame — the FAISS refine stage)
+    the top ``candidates`` per query are re-scored exactly and the
+    exact-k ranking returned; without it a PQ index returns its ADC
+    ranking (the memory-bound serving mode — lower recall, zero
+    raw-vector storage).
 
+    A flat search is bit-identical to ivf_topk, and a one-list PQ
+    search with ``rescore_with`` to pq_topk (pinned by tests). A
+    neighbor stored twice (a redelivered append) scores once.
+    """
+    cent = _read_centroids(spark, path)
+    books = _read_codebooks(spark, path)
+    base = _query_rows(with_norm(queries, vec_col), vec_col, id_col)
     # persisted: the probe expression (n_centroids cosines per query
     # row) would otherwise evaluate twice — once for the probed-cid
     # collect below and again in the scoring join
-    q = tracked_persist(
-        with_norm(queries, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            _vd(vec_col).alias("qv"),
-            F.col("__norm").alias("qn"),
-            F.explode(
-                _nearest_centroids(cent, _vd(vec_col), F.col("__norm"), n_probe)
-            ).alias("cid"),
-        )
-    )
+    q = tracked_persist(_probes(base, cent, n_probe))
     # distinct probed lists: ≤ n_centroids values, one tiny job — the
     # scan filter below is what prunes the list directories
     probed = [r["cid"] for r in q.select("cid").distinct().collect()]
     lists = spark.read.parquet(f"{path}/lists").filter(F.col("cid").isin(probed))
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
-    scored = (
-        q.join(lists, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
-        .dropDuplicates(["query_id", "neighbor_id"])
+    if books is not None:
+        lists = _reconstructed(lists, books)
+    # the hint goes on a projection of q: a hint placed directly on a
+    # cached frame is dropped when the cache substitutes the frame
+    coarse = _score(F.broadcast(q.select("*")).join(lists, "cid"))
+    if rescore_with is None:
+        return _rank_topk(coarse, k)
+    return _rescore(
+        _rank_topk(coarse, candidates), base, rescore_with, k, vec_col, id_col
     )
-    return _rank_topk(scored, k)
+
+
+def ivf_index_append(
+    emb: DataFrame,
+    path: str,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    files_per_list: int = 1,
+) -> dict[str, int]:
+    """Incremental maintenance: assign a NEW batch of vectors to the
+    index's PINNED centroids (and, for a PQ index, encode it with the
+    PINNED codebooks) and append parquet files to exactly the touched
+    list directories — the 100 TB contract, where the standing index
+    absorbs each arrival batch without a corpus re-pass and stays
+    serveable throughout (appends are new files in existing cid=
+    partitions; a concurrent search reads a consistent snapshot of
+    whatever files it listed).
+
+    The model is NOT retrained — assignment drift is the rebuild
+    signal, surfaced by :func:`ivf_index_stats` (same posture as
+    FAISS's add-vs-train split). Append-only contract mirrors the
+    MinHash signature store: the caller routes only NEW ids here
+    (re-appending an id stores it twice in its list; search scores it
+    once).
+
+    Returns {"appended": rows, "listsTouched": distinct cids}.
+    """
+    spark = emb.sparkSession
+    cent = _read_centroids(spark, path)
+    books = _read_codebooks(spark, path)
+    batch = tracked_persist(
+        _list_rows(with_norm(fan_out(emb), vec_col), cent, books, vec_col, id_col)
+    )
+    # write first (materializes the persisted batch), then ONE agg job
+    # served from the cache for both counters — three batch passes
+    # (count, distinct, write) collapse to two
+    _write_lists(batch, path, files_per_list, "append")
+    row = batch.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_distinct("cid").alias("touched"),
+    ).collect()[0]
+    return {"appended": int(row["n"]), "listsTouched": int(row["touched"])}
+
+
+def ivf_index_compact(
+    spark, path: str, max_files: int = 8
+) -> dict[str, int]:
+    """Posting-list defragmentation for a persisted index — the
+    maintenance hook every append-only store here has (the MinHash
+    signature store's signature_store_compact, the index stream's
+    compact_partitions): each :func:`ivf_index_append` adds one file
+    set to every touched ``cid=`` directory, so a long append tail
+    turns the probed-list scan into parquet open/footer overhead.
+
+    Delegates to the shared merge-lock compaction: only lists
+    exceeding ``max_files`` files are rewritten (one file per cid),
+    untouched lists are never opened, and a racing append fails
+    loudly rather than reading deleted files. The model files are
+    untouched and rows are rewritten as they are (a redelivered
+    duplicate stays), so compaction never changes search results,
+    only file counts (pinned by test)."""
+    from hypermap_etl_spark.operators.merge import compact_partitions
+
+    return compact_partitions(spark, f"{path}/lists", "cid", max_files)
+
+
+def ivf_index_stats(spark, path: str) -> DataFrame:
+    """Per-list health of a persisted index: (cid, n_vectors, share,
+    imbalance) where imbalance = n_vectors / mean list size. A list
+    whose imbalance grows past ~a few × after appends is the
+    retrain-and-rebuild signal — searches probing it scan that much
+    more than the index's design point. One partition-pruned count
+    aggregate over the lists table; vector and code payloads are never
+    read.
+    """
+    lists = spark.read.parquet(f"{path}/lists").select("cid")
+    per = lists.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
+    tot = per.agg(
+        F.sum("n_vectors").alias("__t"), F.count(F.lit(1)).alias("__lists")
+    )
+    return (
+        per.join(F.broadcast(tot))
+        .select(
+            "cid",
+            "n_vectors",
+            F.round(F.col("n_vectors") / F.col("__t"), 6).alias("share"),
+            F.round(
+                F.col("n_vectors")
+                * F.col("__lists").cast("double")
+                / F.col("__t"),
+                6,
+            ).alias("imbalance"),
+        )
+        .orderBy("cid")
+    )
 
 
 def ivf_topk(
@@ -624,35 +859,16 @@ def ivf_topk(
     first in each of n_centroids uniform hash buckets — a k-means init
     without iterative refinement; swap in real k-means offline when
     recall matters more). Corpus side shuffles once on centroid id;
-    each query scores |corpus|·(n_probe/n_centroids) candidates.
+    each query scores |corpus|·(n_probe/n_centroids) candidates. The
+    in-memory form of a flat persisted index, which returns the same
+    rows.
     """
     nemb = with_norm(fan_out(emb), vec_col)
     cent = _pick_centroids(nemb, n_centroids, vec_col, id_col)
-
-    def _nearest(vec: Column, norm: Column, n: int) -> Column:
-        return _nearest_centroids(cent, vec, norm, n)
-
-    corpus = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv"),
-        F.col("__norm").alias("cn"),
-        _nearest(_vd(vec_col), F.col("__norm"), 1).getItem(0).alias("cid"),
-    )
+    corpus = _list_rows(nemb, cent, None, vec_col, id_col)
     q = nemb.filter(query_filter) if query_filter is not None else nemb
-    queries = q.select(
-        F.col(id_col).alias("query_id"),
-        _vd(vec_col).alias("qv"),
-        F.col("__norm").alias("qn"),
-        F.explode(_nearest(_vd(vec_col), F.col("__norm"), n_probe)).alias("cid"),
-    )
-    sim = F.round(cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6).alias("sim")
-    scored = (
-        queries.join(corpus, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    return _rank_topk(scored, k)
+    queries = _probes(_query_rows(q, vec_col, id_col), cent, n_probe)
+    return _rank_topk(_score(queries.join(corpus, "cid")), k)
 
 
 def knn_label_vote(
@@ -749,37 +965,13 @@ def quantized_topk(
             )
         ),
     )
-    nemb = with_norm(fan_out(emb), vec_col)
-    q = nemb.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        _vd(vec_col).alias("qv"),
-        F.col("__norm").alias("qn"),
-    )
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
+    q = _query_rows(with_norm(fan_out(emb), vec_col).filter(query_filter), vec_col, id_col)
     coarse = (
         F.broadcast(q)
         .join(deq, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
+        .select("query_id", "neighbor_id", _sim())
     )
-    cand = _rank_topk(coarse, candidates).select("query_id", "neighbor_id")
-
-    qv = q
-    cv = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv2"),
-        F.col("__norm").alias("cn2"),
-    )
-    exact_sim = F.round(
-        cosine(F.col("qv"), F.col("cv2"), F.col("qn"), F.col("cn2")), 6
-    ).alias("sim")
-    rescored = (
-        cand.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", exact_sim)
-    )
-    return _rank_topk(rescored, k)
+    return _rescore(_rank_topk(coarse, candidates), q, emb, k, vec_col, id_col)
 
 
 def pq_fit(
@@ -803,11 +995,15 @@ def pq_fit(
     in m·log2(k_codes) BITS (m=8, k=16 → 4 bytes vs 512 for 64
     float64s, 128×), while quantize_int8 stops at 4×.
 
-    Scale shape: m independent k-means fits, each the bounded-shuffle
-    Lloyd loop of :func:`kmeans` over a SLICED (dim/m-wide) projection
-    of the corpus — subspace fits see narrower rows, not more of them.
+    Scale shape: one collect of the k_codes md5-smallest FULL vectors
+    seeds every subspace (md5 ranks ids, so each subspace's seeds are
+    the same rows, sliced), then m independent fits, each the
+    bounded-shuffle Lloyd loop of :func:`kmeans` over a SLICED
+    (dim/m-wide) projection of the corpus — subspace fits see narrower
+    rows, not more of them.
     """
-    dim = len(emb.select(_vd(vec_col).alias("__v")).first()["__v"])
+    seeds = _md5_seeds(emb, k_codes, vec_col, id_col)
+    dim = len(seeds[0])
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     sub = dim // m
@@ -817,30 +1013,18 @@ def pq_fit(
             F.col(id_col),
             F.slice(_vd(vec_col), j * sub + 1, sub).alias(vec_col),
         )
-        _assigned, cents = kmeans(
-            sliced, k=k_codes, n_iter=n_iter, vec_col=vec_col, id_col=id_col
+        _assigned, cents = _lloyd(
+            sliced, [s[j * sub:(j + 1) * sub] for s in seeds], n_iter, vec_col, id_col
         )
         books.append([[float(x) for x in c] for c in cents])
     return books
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """PQ-encode every vector: per subspace, the index of the nearest
-    sub-centroid (squared L2) — (id, codes array<int>), codes[j] ∈
-    [0, k_codes). One pure projection against the broadcast codebook
-    literals; no shuffle, no Python. Ties break to the lowest code
-    (array_position finds the first minimum), so encoding is
-    deterministic and layout-independent."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    vec = _vd(vec_col)
+def _pq_codes(books: list[list[list[float]]], vec: Column) -> Column:
+    """Column: the PQ codes array of a vector column (see pq_encode)."""
+    sub = len(books[0][0])
     codes = []
-    for j, book in enumerate(codebooks):
+    for j, book in enumerate(books):
         sv = F.slice(vec, j * sub + 1, sub)
         dists = F.array(
             *[
@@ -859,7 +1043,24 @@ def pq_encode(
         codes.append(
             (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
         )
-    return emb.select(F.col(id_col), F.array(*codes).alias("codes"))
+    return F.array(*codes)
+
+
+def pq_encode(
+    emb: DataFrame,
+    codebooks: list[list[list[float]]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """PQ-encode every vector: per subspace, the index of the nearest
+    sub-centroid (squared L2) — (id, codes array<int>), codes[j] ∈
+    [0, k_codes). One pure projection against the broadcast codebook
+    literals; no shuffle, no Python. Ties break to the lowest code
+    (array_position finds the first minimum), so encoding is
+    deterministic and layout-independent."""
+    return emb.select(
+        F.col(id_col), _pq_codes(codebooks, _vd(vec_col)).alias("codes")
+    )
 
 
 def _pq_reconstruct(books: list[list[list[float]]], codes_col: str = "codes"):
@@ -875,111 +1076,19 @@ def _pq_reconstruct(books: list[list[list[float]]], codes_col: str = "codes"):
     return F.flatten(F.array(*parts))
 
 
-def pq_index_write(
-    emb: DataFrame,
-    path: str,
-    m: int = 8,
-    k_codes: int = 16,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """Build and PERSIST the PQ index — the compressed sibling of
-    :func:`ivf_index_write`: pay the fit + encode pass once, serve
-    every later query batch from the standing codes.
-
-    Layout:
-      path/codebooks.parquet   (j, code, cent) — model-sized
-      path/codes.parquet       (neighbor_id, codes array<int>) — the
-                               corpus at m·log2(k_codes) bits/vector
-
-    No raw vectors are stored — that is the point: the serving-side
-    footprint is 128× smaller (m=8, k=16, 64-d float64). Exact
-    refinement, when wanted, joins back to wherever the raw vectors
-    already live (`rescore_with` in :func:`pq_index_search`), instead
-    of duplicating them into the index.
-    """
-    books = pq_fit(emb, m=m, k_codes=k_codes, n_iter=n_iter, vec_col=vec_col, id_col=id_col)
-    spark = emb.sparkSession
-    _model_df(
-        spark,
-        [(j, c, books[j][c]) for j in range(len(books)) for c in range(len(books[j]))],
-        "j int, code int, cent array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks.parquet")
-    pq_encode(emb, books, vec_col=vec_col, id_col=id_col).select(
-        F.col(id_col).alias("neighbor_id"), "codes"
-    ).write.mode("overwrite").parquet(f"{path}/codes.parquet")
-
-
-def pq_index_search(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    candidates: int = 128,
-    rescore_with: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Search the persisted PQ index with a batch of EXACT query
-    vectors: asymmetric-distance scan of queries against codebook
-    reconstructions. With ``rescore_with`` (a raw-vector frame — the
-    FAISS refine pattern) the top ``candidates`` per query are
-    re-scored exactly and the exact-k ranking returned — bit-identical
-    to the in-memory :func:`pq_topk` given the same corpus (pinned by
-    test); without it, the ADC ranking itself is returned (the
-    memory-bound serving mode — lower recall, zero raw-vector
-    storage).
-
-    Queries broadcast (a query batch is small); the codes scan is the
-    only corpus-sized input, at 128× compression.
-    """
-    brows = spark.read.parquet(f"{path}/codebooks.parquet").collect()
-    by_j: dict = {}
-    for r in brows:
-        by_j.setdefault(r["j"], {})[r["code"]] = [float(x) for x in r["cent"]]
-    books = [
-        [by_j[j][c] for c in sorted(by_j[j])] for j in sorted(by_j)
-    ]
-    recon = (
-        spark.read.parquet(f"{path}/codes.parquet")
-        .select("neighbor_id", _pq_reconstruct(books).alias("cv"))
+def _reconstructed(rows: DataFrame, books: list[list[list[float]]]) -> DataFrame:
+    """Code rows → scoring rows: ``codes`` replaced by the reconstruction
+    ``cv`` and its norm ``cn``. Scoring an exact query against cv is
+    the PQ paper's asymmetric distance computation; its per-query
+    lookup table is a CPU-cache optimization of the same quantity."""
+    return (
+        rows.withColumn("cv", _pq_reconstruct(books))
         .withColumn(
             "cn",
             F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda a, x: a + x * x)),
         )
+        .drop("codes")
     )
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _vd(vec_col).alias("qv"),
-        F.col("__norm").alias("qn"),
-    )
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
-    coarse = (
-        F.broadcast(q)
-        .join(recon, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
-    )
-    if rescore_with is None:
-        return _rank_topk(coarse, k)
-    cand = _rank_topk(coarse, candidates).select("query_id", "neighbor_id")
-    nemb = with_norm(fan_out(rescore_with), vec_col)
-    cv = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv2"),
-        F.col("__norm").alias("cn2"),
-    )
-    exact_sim = F.round(
-        cosine(F.col("qv"), F.col("cv2"), F.col("qn"), F.col("cn2")), 6
-    ).alias("sim")
-    rescored = (
-        cand.join(q, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", exact_sim)
-    )
-    return _rank_topk(rescored, k)
 
 
 def pq_topk(
@@ -995,13 +1104,11 @@ def pq_topk(
 ) -> DataFrame:
     """Two-stage ANN over the PQ-compressed corpus: coarse-score exact
     queries against RECONSTRUCTED corpus vectors (each vector replaced
-    by its m sub-centroids — scoring against the reconstruction is
-    mathematically the asymmetric-distance computation of the PQ
-    paper; the per-query lookup-table formulation is a CPU-cache
-    optimization of the same quantity, and here the reconstruction is
-    an equally JVM-side literal element_at), keep ``candidates`` per
-    query, rescore those pairs exactly — quantized_topk's shape with a
-    128×-smaller index payload instead of 4×.
+    by its m sub-centroids, see _reconstructed), keep ``candidates``
+    per query, rescore those pairs exactly — quantized_topk's shape
+    with a 128×-smaller index payload instead of 4×. The in-memory form
+    of a one-list PQ index (ivf_index_write(n_centroids=1, m=...)),
+    which returns the same rows.
 
     The defaults (m=8, k_codes=16, candidates=128) are tuned on the
     near-isotropic fixture embeddings — PQ's worst case (a flat
@@ -1016,43 +1123,15 @@ def pq_topk(
             "every query against the corpus"
         )
     books = pq_fit(emb, m=m, k_codes=k_codes, n_iter=n_iter, vec_col=vec_col, id_col=id_col)
-    codes = pq_encode(emb, books, vec_col=vec_col, id_col=id_col)
-    recon = codes.select(
-        F.col(id_col).alias("neighbor_id"),
-        _pq_reconstruct(books).alias("cv"),
-    ).withColumn(
-        "cn",
-        F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda a, x: a + x * x)),
+    corpus = _reconstructed(
+        pq_encode(emb, books, vec_col=vec_col, id_col=id_col).withColumnRenamed(
+            id_col, "neighbor_id"
+        ),
+        books,
     )
-    nemb = with_norm(fan_out(emb), vec_col)
-    q = nemb.filter(query_filter).select(
-        F.col(id_col).alias("query_id"),
-        _vd(vec_col).alias("qv"),
-        F.col("__norm").alias("qn"),
-    )
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
-    coarse = (
-        F.broadcast(q)
-        .join(recon, F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
-    )
-    cand = _rank_topk(coarse, candidates).select("query_id", "neighbor_id")
-    cv = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv2"),
-        F.col("__norm").alias("cn2"),
-    )
-    exact_sim = F.round(
-        cosine(F.col("qv"), F.col("cv2"), F.col("qn"), F.col("cn2")), 6
-    ).alias("sim")
-    rescored = (
-        cand.join(q, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", exact_sim)
-    )
-    return _rank_topk(rescored, k)
+    q = _query_rows(with_norm(fan_out(emb), vec_col).filter(query_filter), vec_col, id_col)
+    coarse = _score(F.broadcast(q).crossJoin(corpus))
+    return _rescore(_rank_topk(coarse, candidates), q, emb, k, vec_col, id_col)
 
 
 def label_centroids(
@@ -1083,45 +1162,27 @@ def label_centroids(
     return cent.join(n, label_col)
 
 
-def kmeans(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> tuple[DataFrame, list[list[float]]]:
-    """Lloyd's k-means over the embedding column, Spark-first:
-
-      init       k seeds = the vectors whose md5(id) ranks smallest
-                 (deterministic, layout-independent)
-      assign     map-side argmin of squared L2 against the k broadcast
-                 centroid literals — one projection, no shuffle
-      recompute  (cluster, dim) partial-averaged posexplode, the same
-                 bounded-shuffle shape as label_centroids
-      repeat     centroids collect to the driver between rounds
-                 (k × dim floats — bytes, not data)
-
-    Returns (assignments DataFrame (id, cluster), final centroids).
-    Per iteration: one narrow projection + one shuffle bounded by
-    k × dims × tasks. The iteration count is fixed (no convergence
-    probe actions); callers needing convergence run another call from
-    the returned centroids. Unit-tested on planted blobs; approximate
-    and iterative, so exercised by recall tests rather than a SQL
-    oracle (same policy as lsh_topk/ivf_topk).
-    """
+def _md5_seeds(emb: DataFrame, k: int, vec_col: str, id_col: str) -> list[list[float]]:
+    """The k vectors whose md5(id) ranks smallest — the deterministic,
+    layout-independent k-means init. One collect of k rows."""
     md5rank = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-    seeds = [
+    return [
         [float(x) for x in r[0]]
-        for r in emb.select(
-            F.col(vec_col).cast("array<double>").alias("__v"), md5rank.alias("__r")
-        )
+        for r in emb.select(_vd(vec_col).alias("__v"), md5rank.alias("__r"))
         .orderBy("__r")
         .limit(k)
         .select("__v")
         .collect()
     ]
-    cents = seeds
-    vec = F.col(vec_col).cast("array<double>")
+
+
+def _lloyd(
+    emb: DataFrame, cents: list[list[float]], n_iter: int, vec_col: str, id_col: str
+) -> tuple[DataFrame, list[list[float]]]:
+    """n_iter Lloyd rounds from the given initial centroids (see
+    :func:`kmeans`). Returns (assignments (id, cluster), centroids); a
+    cluster left empty keeps its previous centroid."""
+    vec = _vd(vec_col)
     assigned = None
     for _ in range(n_iter):
         dists = F.array(
@@ -1153,8 +1214,37 @@ def kmeans(
             .collect()
         )
         by_cluster = {r["cluster"]: list(r["c"]) for r in new}
-        cents = [by_cluster.get(i, cents[i]) for i in range(k)]
+        cents = [by_cluster.get(i, c) for i, c in enumerate(cents)]
     return assigned.select(id_col, "cluster"), cents
+
+
+def kmeans(
+    emb: DataFrame,
+    k: int = 8,
+    n_iter: int = 5,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> tuple[DataFrame, list[list[float]]]:
+    """Lloyd's k-means over the embedding column, Spark-first:
+
+      init       k seeds = the vectors whose md5(id) ranks smallest
+                 (deterministic, layout-independent)
+      assign     map-side argmin of squared L2 against the k broadcast
+                 centroid literals — one projection, no shuffle
+      recompute  (cluster, dim) partial-averaged posexplode, the same
+                 bounded-shuffle shape as label_centroids
+      repeat     centroids collect to the driver between rounds
+                 (k × dim floats — bytes, not data)
+
+    Returns (assignments DataFrame (id, cluster), final centroids).
+    Per iteration: one narrow projection + one shuffle bounded by
+    k × dims × tasks. The iteration count is fixed (no convergence
+    probe actions); callers needing convergence run another call from
+    the returned centroids. Unit-tested on planted blobs; approximate
+    and iterative, so exercised by recall tests rather than a SQL
+    oracle (same policy as lsh_topk/ivf_topk).
+    """
+    return _lloyd(emb, _md5_seeds(emb, k, vec_col, id_col), n_iter, vec_col, id_col)
 
 
 def semdedup(
@@ -1705,173 +1795,6 @@ def hard_negative_pairs(
     )
 
 
-def ivf_index_append(
-    emb: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    files_per_list: int = 1,
-) -> dict[str, int]:
-    """Incremental IVF maintenance: assign a NEW batch of vectors to
-    the index's PINNED centroids and append parquet files to exactly
-    the touched list directories — the 100 TB contract, where the
-    standing index absorbs each arrival batch without a corpus
-    re-pass and stays serveable throughout (appends are new files in
-    existing cid= partitions; a concurrent search reads a consistent
-    snapshot of whatever files it listed).
-
-    Centroids are NOT retrained — assignment drift is the rebuild
-    signal, surfaced by :func:`ivf_index_stats` (same posture as
-    FAISS's add-vs-train split). Append-only contract mirrors the
-    MinHash signature store: the caller routes only NEW ids here
-    (re-appending an id duplicates it in its list).
-
-    Returns {"appended": rows, "listsTouched": distinct cids}.
-    """
-    spark = emb.sparkSession
-    cent = [
-        (int(r["cid"]), list(r["cv"]), float(r["cn"]))
-        for r in spark.read.parquet(f"{path}/centroids.parquet").collect()
-    ]
-    nemb = with_norm(fan_out(emb), vec_col)
-    batch = tracked_persist(
-        nemb.select(
-            F.col(id_col).alias("neighbor_id"),
-            _vd(vec_col).alias("cv"),
-            F.col("__norm").alias("cn"),
-            _nearest_centroids(cent, _vd(vec_col), F.col("__norm"), 1)
-            .getItem(0)
-            .alias("cid"),
-        )
-    )
-    # write first (materializes the persisted batch), then ONE agg job
-    # served from the cache for both counters — three batch passes
-    # (count, distinct, write) collapse to two. The write is clustered
-    # by (cid, deterministic salt) exactly like ivf_index_write (r10,
-    # guide §6/§2.5): an unclustered append leaves one file per scan
-    # task per touched list, so every append batch added ~tasks files
-    # per list and the probed-list scan (and the compaction hook)
-    # degraded with the append tail.
-    (
-        batch.repartition(
-            F.col("cid"),
-            F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(files_per_list)),
-        )
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(f"{path}/lists")
-    )
-    row = batch.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct("cid").alias("touched"),
-    ).collect()[0]
-    return {"appended": int(row["n"]), "listsTouched": int(row["touched"])}
-
-
-def ivf_index_compact(
-    spark, path: str, max_files: int = 8
-) -> dict[str, int]:
-    """Posting-list defragmentation for a persisted IVF index — the
-    maintenance hook every append-only store here has (the MinHash
-    signature store's signature_store_compact, the index stream's
-    compact_partitions): each :func:`ivf_index_append` adds one file
-    set to every touched ``cid=`` directory, so a long append tail
-    turns the probed-list scan into parquet open/footer overhead
-    (measured at sf0.1: the base write alone leaves one file per
-    shuffle task per list — 256 files for a 4,750-vector index — and
-    each append adds ~10 more per list).
-
-    Delegates to the shared merge-lock compaction: only lists
-    exceeding ``max_files`` files are rewritten (one file per cid),
-    untouched lists are never opened, and a racing append fails
-    loudly rather than reading deleted files. Centroids are untouched
-    — compaction never changes search results, only file counts
-    (pinned by test)."""
-    from hypermap_etl_spark.operators.merge import compact_partitions
-
-    return compact_partitions(spark, f"{path}/lists", "cid", max_files)
-
-
-def ivf_index_stats(spark, path: str) -> DataFrame:
-    """Per-list health of a persisted IVF index: (cid, n_vectors,
-    share, imbalance) where imbalance = n_vectors / mean list size.
-    A list whose imbalance grows past ~a few × after appends is the
-    retrain-and-rebuild signal — searches probing it scan that much
-    more than the index's design point. One partition-pruned count
-    aggregate over the lists table; centroid payloads are never read.
-    """
-    lists = spark.read.parquet(f"{path}/lists").select("cid")
-    per = lists.groupBy("cid").agg(F.count(F.lit(1)).cast("long").alias("n_vectors"))
-    tot = per.agg(
-        F.sum("n_vectors").alias("__t"), F.count(F.lit(1)).alias("__lists")
-    )
-    return (
-        per.join(F.broadcast(tot))
-        .select(
-            "cid",
-            "n_vectors",
-            F.round(F.col("n_vectors") / F.col("__t"), 6).alias("share"),
-            F.round(
-                F.col("n_vectors")
-                * F.col("__lists").cast("double")
-                / F.col("__t"),
-                6,
-            ).alias("imbalance"),
-        )
-        .orderBy("cid")
-    )
-
-
-def pq_index_append(
-    emb: DataFrame,
-    path: str,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> dict[str, int]:
-    """Incremental PQ maintenance — the compressed sibling of
-    :func:`ivf_index_append`: encode a NEW batch against the index's
-    PINNED codebooks (model-sized, one driver read) and append the
-    codes as new parquet files. O(batch) work, no re-fit, no corpus
-    re-pass, and the standing index keeps serving throughout. Codebook
-    drift (a batch distribution the pinned centroids fit poorly) is a
-    rebuild decision, same posture as the IVF side; append-only
-    contract mirrors it too.
-
-    Returns {"appended": rows}.
-    """
-    spark = emb.sparkSession
-    rows = spark.read.parquet(f"{path}/codebooks.parquet").collect()
-    m = 1 + max(r["j"] for r in rows)
-    books = [dict() for _ in range(m)]
-    for r in rows:
-        books[r["j"]][r["code"]] = list(r["cent"])
-    books = [[b[c] for c in sorted(b)] for b in books]
-    batch = tracked_persist(
-        pq_encode(emb, books, vec_col=vec_col, id_col=id_col).select(
-            F.col(id_col).alias("neighbor_id"), "codes"
-        )
-    )
-    # write first, count from the cache — one encode pass, not two
-    batch.write.mode("append").parquet(f"{path}/codes.parquet")
-    return {"appended": batch.count()}
-
-
-def pq_index_compact(spark, path: str, num_files: int = 1) -> int:
-    """Code-table defragmentation for a persisted PQ index — the
-    compressed sibling of :func:`ivf_index_compact`: every
-    :func:`pq_index_append` adds a file set to ``codes.parquet``, so a
-    long append tail turns the full-codes scan into open/footer
-    overhead. Staged-swap rewrite (shared compact_small_table: lock-
-    guarded, crash-recoverable, distinct) into ``num_files`` files;
-    codebooks are untouched and search results cannot change (codes
-    are (neighbor_id, codes) facts — pinned by test). The distinct
-    also drops exact duplicate rows a crash-redelivered append left.
-    Returns the row count after compaction."""
-    from hypermap_etl_spark.operators.merge import compact_small_table
-
-    return compact_small_table(spark, f"{path}/codes.parquet", num_files)
-
-
 def truncated_topk_recall(
     emb: DataFrame,
     dims: int = 16,
@@ -1924,159 +1847,6 @@ def truncated_topk_recall(
             6,
         ).alias("recall"),
     )
-
-
-def ivfpq_index_write(
-    emb: DataFrame,
-    path: str,
-    n_centroids: int = 8,
-    m: int = 8,
-    k_codes: int = 16,
-    n_iter: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """IVF coarse partitioning over PQ-COMPRESSED lists — the composed
-    billion-vector serving layout (FAISS IVFPQ shape): probe selection
-    prunes to n_probe list directories AND each list stores only
-    m·log2(k_codes)-bit codes, so a query batch reads a few small
-    partitions of a 128×-compressed corpus.
-
-    Deviation from FAISS, documented: codes quantize the RAW vectors
-    against global codebooks (IVF-Flat-ADC), not per-list residuals —
-    residual encoding buys precision at the same bit budget but makes
-    codebooks list-coupled; the global variant keeps append
-    (ivf/pq_index_append) O(batch) with PINNED model artifacts, the
-    maintenance contract this engine ships. Exact refinement joins
-    back to the caller's raw vectors (`rescore_with`), as in
-    pq_index_search.
-
-    Layout:
-      path/centroids.parquet              (cid, cv, cn) — model-sized
-      path/codebooks.parquet              (j, code, cent) — model-sized
-      path/lists/cid=<c>/...parquet       (neighbor_id, codes)
-    """
-    nemb = with_norm(fan_out(emb), vec_col)
-    cent = _pick_centroids(nemb, n_centroids, vec_col, id_col)
-    spark = emb.sparkSession
-    _model_df(
-        spark, [(c, v, n) for c, v, n in cent], "cid int, cv array<double>, cn double"
-    ).write.mode("overwrite").parquet(f"{path}/centroids.parquet")
-    books = pq_fit(
-        emb, m=m, k_codes=k_codes, n_iter=n_iter, vec_col=vec_col, id_col=id_col
-    )
-    _model_df(
-        spark,
-        [
-            (j, c, books[j][c])
-            for j in range(len(books))
-            for c in range(len(books[j]))
-        ],
-        "j int, code int, cent array<double>",
-    ).write.mode("overwrite").parquet(f"{path}/codebooks.parquet")
-    assigned = nemb.select(
-        F.col(id_col),
-        _vd(vec_col).alias("__v"),
-        _nearest_centroids(cent, _vd(vec_col), F.col("__norm"), 1)
-        .getItem(0)
-        .alias("cid"),
-    )
-    coded = pq_encode(
-        assigned.select(F.col(id_col), F.col("__v").alias(vec_col)),
-        books,
-        vec_col=vec_col,
-        id_col=id_col,
-    )
-    (
-        assigned.select(F.col(id_col), "cid")
-        .join(coded, id_col)
-        .select(F.col(id_col).alias("neighbor_id"), "cid", "codes")
-        .write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{path}/lists")
-    )
-
-
-def ivfpq_index_search(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    candidates: int = 64,
-    rescore_with: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Search the persisted IVF-PQ index: probe n_probe lists via the
-    model-sized centroid table (partition-pruned scan, like
-    ivf_index_search), score candidates by asymmetric distance against
-    codebook reconstructions (like pq_index_search), and — with
-    ``rescore_with`` — re-rank the top ``candidates`` exactly (the
-    FAISS refine stage). The scan reads only probed cid= directories
-    of code rows: the two pruning axes compose multiplicatively."""
-    cent = [
-        (int(r["cid"]), list(r["cv"]), float(r["cn"]))
-        for r in spark.read.parquet(f"{path}/centroids.parquet").collect()
-    ]
-    brows = spark.read.parquet(f"{path}/codebooks.parquet").collect()
-    by_j: dict = {}
-    for r in brows:
-        by_j.setdefault(r["j"], {})[r["code"]] = [float(x) for x in r["cent"]]
-    books = [[by_j[j][c] for c in sorted(by_j[j])] for j in sorted(by_j)]
-
-    q = tracked_persist(
-        with_norm(queries, vec_col).select(
-            F.col(id_col).alias("query_id"),
-            _vd(vec_col).alias("qv"),
-            F.col("__norm").alias("qn"),
-            F.explode(
-                _nearest_centroids(cent, _vd(vec_col), F.col("__norm"), n_probe)
-            ).alias("cid"),
-        )
-    )
-    probed = [r["cid"] for r in q.select("cid").distinct().collect()]
-    lists = (
-        spark.read.parquet(f"{path}/lists")
-        .filter(F.col("cid").isin(probed))
-        .select(
-            "cid",
-            "neighbor_id",
-            _pq_reconstruct(books).alias("cv"),
-        )
-        .withColumn(
-            "cn",
-            F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda a, x: a + x * x)),
-        )
-    )
-    sim = F.round(
-        cosine(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")), 6
-    ).alias("sim")
-    coarse = (
-        q.join(lists, "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim)
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    if rescore_with is None:
-        return _rank_topk(coarse, k)
-    cand = _rank_topk(coarse, candidates).select("query_id", "neighbor_id")
-    nemb = with_norm(fan_out(rescore_with), vec_col)
-    cv = nemb.select(
-        F.col(id_col).alias("neighbor_id"),
-        _vd(vec_col).alias("cv2"),
-        F.col("__norm").alias("cn2"),
-    )
-    qv = q.select("query_id", "qv", "qn").dropDuplicates(["query_id"])
-    exact_sim = F.round(
-        cosine(F.col("qv"), F.col("cv2"), F.col("qn"), F.col("cn2")), 6
-    ).alias("sim")
-    rescored = (
-        cand.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", exact_sim)
-    )
-    return _rank_topk(rescored, k)
 
 
 def centroid_drift(

@@ -3169,7 +3169,7 @@ FROM packs GROUP BY bucket ORDER BY bucket""",
 
 @plan_cache
 def emb_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of a search over the PERSISTED IVF index
+    """Recall@5 of a search over the PERSISTED index with flat lists
     (similarity.ivf_index_write → ivf_index_search) vs the exact
     top-k — certifies the standing-index path end to end: index build,
     partition-pruned list scan, probe/scoring parity with ivf_topk
@@ -4792,8 +4792,8 @@ ORDER BY d.doc_id
 
 
 def emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 of the COMPOSED IVF-PQ index (similarity.
-    ivfpq_index_write -> ivfpq_index_search with exact refine) vs the
+    """Recall@5 of the persisted index with PQ lists (similarity.
+    ivf_index_write(m=8) -> ivf_index_search with exact refine) vs the
     exact top-k: probe pruning and 128x code compression stack, then
     the FAISS-style rescore recovers exact ranks for the survivors.
     Same derived-property pattern/threshold family as
@@ -4809,9 +4809,9 @@ def emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"hypermap_ivfpq_gate_{os.path.basename(sf_dir.rstrip('/'))}",
     )
     if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
-        similarity.ivfpq_index_write(emb, path, n_centroids=8, m=8, k_codes=16)
+        similarity.ivf_index_write(emb, path, n_centroids=8, m=8, k_codes=16)
     exact = similarity.brute_force_topk(emb, k=5, query_filter=qf)
-    approx = similarity.ivfpq_index_search(
+    approx = similarity.ivf_index_search(
         spark, path, emb.filter(qf), k=5, n_probe=4, candidates=64,
         rescore_with=emb,
     )

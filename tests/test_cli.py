@@ -218,7 +218,10 @@ def test_cli_search_hybrid(spark, capsys):
         assert abs(l["rrf_score"] - round(exp, 6)) < 1e-12
 
 
-def test_cli_ann_append_and_stats(spark, capsys, tmp_path):
+@pytest.mark.parametrize(
+    "code_args", [[], ["--pq", "--pq-m", "2", "--pq-codes", "4"]], ids=["flat", "pq"]
+)
+def test_cli_ann_append_and_stats(spark, capsys, tmp_path, code_args):
     import json
 
     import numpy as np
@@ -238,8 +241,11 @@ def test_cli_ann_append_and_stats(spark, capsys, tmp_path):
     ).write.parquet(more)
     idx = str(tmp_path / "idx")
     main(["ann", "--index", idx, "--build", "--embeddings", base,
-          "--centroids", "4"])
+          "--centroids", "4", *code_args])
     capsys.readouterr()
+    if code_args:
+        with pytest.raises(SystemExit, match="code type from the index"):
+            main(["ann", "--index", idx, "--stats", "--pq"])
     main(["ann", "--index", idx, "--append", "--embeddings", more])
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert rep["appended"] == 20 and rep["listsTouched"] >= 1

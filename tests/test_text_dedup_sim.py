@@ -1140,10 +1140,13 @@ def test_pq_topk_recall_on_fixture(spark):
 
 
 def test_pq_index_search_matches_in_memory_operator(spark, tmp_path):
-    """Persisted PQ index: search with exact refine must be
-    bit-identical to the in-memory pq_topk over the same corpus
-    (shared fit/encode/reconstruct construction); ADC-only mode
-    (no rescore_with) still ranks and returns k rows per query."""
+    """A one-list PQ index (the full-scan PQ index): search with exact
+    refine must be bit-identical to the in-memory pq_topk over the same
+    corpus (shared fit/encode/reconstruct construction), and the query
+    side is broadcast, so no SortMergeJoin on cid; ADC-only mode (no
+    rescore_with) still ranks and returns k rows per query."""
+    import re
+
     from pyspark.sql import functions as F
 
     from hypermap_etl_spark.operators import similarity
@@ -1151,12 +1154,12 @@ def test_pq_index_search_matches_in_memory_operator(spark, tmp_path):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     path = str(tmp_path / "pq")
-    similarity.pq_index_write(emb, path)
+    similarity.ivf_index_write(emb, path, n_centroids=1, m=8)
     qf = F.col("vec_id") % 20 == 0
     queries = emb.filter(qf)
     got = sorted(
         (r["query_id"], r["neighbor_id"], r["sim"], r["rank"])
-        for r in similarity.pq_index_search(
+        for r in similarity.ivf_index_search(
             spark, path, queries, k=5, rescore_with=emb
         ).collect()
     )
@@ -1165,7 +1168,20 @@ def test_pq_index_search_matches_in_memory_operator(spark, tmp_path):
         for r in similarity.pq_topk(emb, k=5, query_filter=qf).collect()
     )
     assert got == want and len(got) > 0
-    adc = similarity.pq_index_search(spark, path, queries, k=5).collect()
+    # planned with size-based broadcasting off: the hint, not the
+    # batch's size, must broadcast the query side
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = similarity.ivf_index_search(
+            spark, path, queries, k=5, rescore_with=emb
+        )._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    assert re.search(r"BroadcastHashJoin \[cid#", plan), plan
+    assert not re.search(r"SortMergeJoin \[cid#", plan), plan
+    adc = similarity.ivf_index_search(spark, path, queries, k=5).collect()
     per_q = {}
     for r in adc:
         per_q.setdefault(r["query_id"], []).append(r["rank"])
@@ -1915,11 +1931,15 @@ def test_prefix_filter_matches_quadratic_jaccard(spark, seed, threshold):
     assert got == expected
 
 
-def test_ivf_index_append_equals_full_build(spark, tmp_path):
+@pytest.mark.parametrize("m", [None, 4], ids=["flat", "pq"])
+def test_ivf_index_append_equals_full_build(spark, tmp_path, m):
     """Incremental maintenance is exact: with append ids above every
     base id, the pinned centroids equal a full rebuild's (lowest-id-
     per-bucket picker), so build(A)+append(B) must serve IDENTICAL
-    results to build(A∪B) — and the stats report sees the growth."""
+    results to build(A∪B) — and the stats report sees the growth.
+    Codebooks fit on A and on A∪B differ, so the PQ case rescores every
+    candidate exactly: what must match is that each appended vector
+    landed in its list."""
     import numpy as np
 
     from hypermap_etl_spark.operators import similarity
@@ -1932,10 +1952,10 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
     full = A.unionByName(B)
 
     inc, ref = str(tmp_path / "inc"), str(tmp_path / "ref")
-    similarity.ivf_index_write(A, inc, n_centroids=8)
+    similarity.ivf_index_write(A, inc, n_centroids=8, m=m, k_codes=8)
     rep = similarity.ivf_index_append(B, inc)
     assert rep["appended"] == 60 and 1 <= rep["listsTouched"] <= 8
-    similarity.ivf_index_write(full, ref, n_centroids=8)
+    similarity.ivf_index_write(full, ref, n_centroids=8, m=m, k_codes=8)
 
     # precondition the equality rests on: same pinned centroids
     ci = sorted(
@@ -1947,14 +1967,17 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
     assert ci == cr
 
     qf = full.filter(F.col("vec_id") % 40 == 0)
-    got = sorted(
-        tuple(r)
-        for r in similarity.ivf_index_search(spark, inc, qf, k=5, n_probe=3).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in similarity.ivf_index_search(spark, ref, qf, k=5, n_probe=3).collect()
-    )
+    exact = {} if m is None else {"candidates": 260, "rescore_with": full}
+
+    def search(path):
+        return sorted(
+            tuple(r)
+            for r in similarity.ivf_index_search(
+                spark, path, qf, k=5, n_probe=3, **exact
+            ).collect()
+        )
+
+    got, want = search(inc), search(ref)
     assert got == want and len(got) > 0
 
     stats = similarity.ivf_index_stats(spark, inc).collect()
@@ -1963,7 +1986,7 @@ def test_ivf_index_append_equals_full_build(spark, tmp_path):
     assert all(r["imbalance"] > 0 for r in stats)
 
 
-def test_pq_index_append_encodes_with_pinned_codebooks(spark, tmp_path):
+def test_pq_append_encodes_with_pinned_codebooks(spark, tmp_path):
     """Appending encodes the batch with the STANDING codebooks — the
     stored codes equal a direct pq_encode against those books, the
     totals account, and a search over the grown index ranks an
@@ -1981,10 +2004,10 @@ def test_pq_index_append_encodes_with_pinned_codebooks(spark, tmp_path):
     B = spark.createDataFrame(b_rows, "vec_id long, embedding array<float>")
 
     path = str(tmp_path / "pq")
-    similarity.pq_index_write(A, path, m=4, k_codes=8)
-    rep = similarity.pq_index_append(B, path)
+    similarity.ivf_index_write(A, path, n_centroids=1, m=4, k_codes=8)
+    rep = similarity.ivf_index_append(B, path)
     assert rep["appended"] == 21
-    codes = spark.read.parquet(f"{path}/codes.parquet")
+    codes = spark.read.parquet(f"{path}/lists")
     assert codes.count() == 101
 
     # stored codes for the batch == direct encode with the pinned books
@@ -2007,7 +2030,7 @@ def test_pq_index_append_encodes_with_pinned_codebooks(spark, tmp_path):
     # search FROM vec 7 ranks id 100 with the same (maximal) ADC score
     # as any same-code vector — it must appear in the top-k
     q = A.filter(F.col("vec_id") == 7)
-    res = similarity.pq_index_search(spark, path, q, k=3).collect()
+    res = similarity.ivf_index_search(spark, path, q, k=3).collect()
     assert 100 in {r["neighbor_id"] for r in res}
 
 
@@ -2094,8 +2117,8 @@ def test_ivfpq_full_probe_with_rescore_is_exact(spark, tmp_path):
     qf = F.col("vec_id") % 30 == 0
 
     path = str(tmp_path / "ivfpq")
-    similarity.ivfpq_index_write(emb, path, n_centroids=4, m=4, k_codes=8)
-    got = similarity.ivfpq_index_search(
+    similarity.ivf_index_write(emb, path, n_centroids=4, m=4, k_codes=8)
+    got = similarity.ivf_index_search(
         spark, path, emb.filter(qf), k=5, n_probe=4, candidates=150,
         rescore_with=emb,
     )
@@ -2105,7 +2128,7 @@ def test_ivfpq_full_probe_with_rescore_is_exact(spark, tmp_path):
     assert a == b and len(a) == 5 * 5
 
     # subset probing prunes list directories
-    pruned = similarity.ivfpq_index_search(
+    pruned = similarity.ivf_index_search(
         spark, path, emb.filter(qf), k=5, n_probe=1
     )
     plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -2461,11 +2484,15 @@ def test_semdedup_prunes_cliques_keeps_singletons(spark):
     assert all(r["keep"] for r in all_keep.collect())
 
 
-def test_ivf_compact_preserves_results(spark, tmp_path):
-    """ivf_index_compact (r10, the ivf_serve watch item): posting-list
-    defragmentation collapses every over-fragmented cid= directory to
-    one file and changes NOTHING about search — same rows, same sims,
-    same ranks — while stats still account for every vector."""
+@pytest.mark.parametrize("m", [None, 4], ids=["flat", "pq"])
+def test_ivf_compact_preserves_results(spark, tmp_path, m):
+    """ivf_index_compact: posting-list defragmentation collapses every
+    over-fragmented cid= directory to one file and changes NOTHING
+    about search — same rows, same sims, same ranks — while stats
+    still account for every stored row. A crash-redelivered append
+    stores its batch twice; search scores each pair once, so results
+    equal the clean ones before and after compaction (which keeps the
+    duplicate rows)."""
     import os
 
     import numpy as np
@@ -2482,7 +2509,7 @@ def test_ivf_compact_preserves_results(spark, tmp_path):
         "vec_id long, embedding array<float>",
     )
     path = str(tmp_path / "idx")
-    similarity.ivf_index_write(A, path, n_centroids=4)
+    similarity.ivf_index_write(A, path, n_centroids=4, m=m, k_codes=8)
     similarity.ivf_index_append(B, path)
 
     def files():
@@ -2496,71 +2523,27 @@ def test_ivf_compact_preserves_results(spark, tmp_path):
         }
 
     qf = A.unionByName(B).filter(F.col("vec_id") % 37 == 0)
-    before = sorted(
-        tuple(r)
-        for r in similarity.ivf_index_search(spark, path, qf, k=5, n_probe=2).collect()
-    )
+
+    def search():
+        return sorted(
+            tuple(r)
+            for r in similarity.ivf_index_search(
+                spark, path, qf, k=5, n_probe=2
+            ).collect()
+        )
+
+    clean = search()
+    similarity.ivf_index_append(B, path)  # redelivered
+    assert search() == clean and len(clean) > 0
     pre_files = files()
     assert sum(pre_files.values()) > 4 * 1  # fragmented: >1 file/list
     rep = similarity.ivf_index_compact(spark, path, max_files=1)
     assert rep["partitions_compacted"] >= 1
     post_files = files()
     assert all(n == 1 for n in post_files.values()), post_files
-    after = sorted(
-        tuple(r)
-        for r in similarity.ivf_index_search(spark, path, qf, k=5, n_probe=2).collect()
-    )
-    assert after == before and len(after) > 0
+    assert search() == clean
     stats = similarity.ivf_index_stats(spark, path).collect()
-    assert sum(r["n_vectors"] for r in stats) == 280
+    assert sum(r["n_vectors"] for r in stats) == 280 + 80
     # idempotent: nothing left over max_files
     rep2 = similarity.ivf_index_compact(spark, path, max_files=1)
     assert rep2["partitions_compacted"] == 0
-
-
-def test_pq_compact_preserves_results(spark, tmp_path):
-    """pq_index_compact: the append-fragmented codes table collapses
-    to one file with IDENTICAL search results (codes are facts; only
-    the file layout changes), duplicate rows from a redelivered
-    append are dropped, and the count accounts for every vector."""
-    import glob
-    import os
-
-    import numpy as np
-
-    from hypermap_etl_spark.operators import similarity
-
-    rng = np.random.RandomState(17)
-    A = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(8)]) for i in range(150)],
-        "vec_id long, embedding array<float>",
-    )
-    B = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(8)]) for i in range(150, 200)],
-        "vec_id long, embedding array<float>",
-    )
-    path = str(tmp_path / "pq")
-    similarity.pq_index_write(A, path, m=4, k_codes=8)
-    similarity.pq_index_append(B, path)
-
-    def nfiles():
-        return len(glob.glob(os.path.join(path, "codes.parquet", "*.parquet")))
-
-    qf = A.filter(F.col("vec_id") % 29 == 0)
-    clean = sorted(
-        tuple(r)
-        for r in similarity.pq_index_search(spark, path, qf, k=5).collect()
-    )
-    # crash-redelivered append: duplicate rows occupy extra rank slots,
-    # so the fragmented index serves POLLUTED results...
-    similarity.pq_index_append(B, path)
-    assert nfiles() > 1
-    # ...and compaction's distinct both defragments and heals that
-    n = similarity.pq_index_compact(spark, path)
-    assert n == 200  # redelivered duplicates dropped
-    assert nfiles() == 1
-    after = sorted(
-        tuple(r)
-        for r in similarity.pq_index_search(spark, path, qf, k=5).collect()
-    )
-    assert after == clean and len(after) > 0
