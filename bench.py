@@ -143,6 +143,7 @@ def build_bench() -> dict:
         from hypermap_etl_spark.operators.materialize import (
             incremental_entries_update,
             materialize_entries,
+            touched_namehashes,
             with_entry_bucket,
         )
         from hypermap_etl_spark.plans.hm_derive import hm_events_df
@@ -167,7 +168,9 @@ def build_bench() -> dict:
             ).partitionBy("entry_bucket").parquet(entries_path)
             _BUILT_STORES.add(f"bench_hm_entries_{sf_tag}_{tag}")
         batch = hm.filter(F.col("blockNumber") > cut)
-        counts = incremental_entries_update(spark, entries_path, hm, batch)
+        counts = incremental_entries_update(
+            spark, entries_path, hm, touched_namehashes(batch)
+        )
         return spark.createDataFrame([counts])
 
     def hm_incremental_bench(spark, sf_dir):

@@ -777,8 +777,10 @@ def cmd_stream(args) -> None:
 
     With --entries this is the continuous `index-events` mode: every
     micro-batch also incrementally updates the materialized entries
-    (touched namehashes only, replay pruned by the key→bucket side
-    index) with periodic entries-bucket compaction. Both tables have
+    (touched namehashes only: the delta merge when the source files are
+    block-aligned, else a replay pruned by the key→bucket side index,
+    picked at the first non-empty batch) with periodic entries-bucket
+    compaction. Both tables have
     the layout `index` writes, so a stream can follow `index` on the
     same --table/--entries paths."""
     from hypermap_etl_spark.streaming.scan import start_index_stream, start_ingest_stream
@@ -801,7 +803,6 @@ def cmd_stream(args) -> None:
         q = start_index_stream(
             spark, args.raw, args.table, args.entries, args.checkpoint, trigger,
             on_progress=progress_printer(),
-            entries_strategy=getattr(args, "entries_strategy", "auto"),
         )
     else:
         q = start_ingest_stream(
@@ -2327,19 +2328,14 @@ def main(argv=None) -> None:
     p.add_argument("--checkpoint", required=True)
     p.add_argument("--entries", default=None,
                    help="also materialize entries incrementally per batch "
-                        "(continuous index-events mode)")
+                        "(continuous index-events mode; the O(batch) delta "
+                        "merge on block-aligned source files, else a "
+                        "restricted replay, detected at the first batch)")
     p.add_argument("--once", action="store_true", help="catch-up then stop")
     p.add_argument("--interval", type=int, default=30)
     p.add_argument("--timeout", type=int, default=None)
     p.add_argument("--progress-interval", type=float, default=15.0,
                    help="engine status-line cadence, seconds (T5)")
-    p.add_argument("--entries-strategy", default="auto",
-                   choices=["auto", "replay", "delta"],
-                   help="entries maintenance: 'delta' = O(batch) "
-                        "associative merge (needs block-aligned source "
-                        "files), 'replay' = restricted history replay "
-                        "(any layout, the backfill mode), 'auto' = "
-                        "detect the layout from parquet footers")
 
     args = ap.parse_args(argv)
     {

@@ -339,31 +339,34 @@ def incremental_entries_update(
     spark,
     entries_path: str,
     events_table: DataFrame,
-    new_events: DataFrame,
+    keys: DataFrame,
     root_hash: str = ROOT_HASH,
 ) -> dict[str, int]:
-    """Streaming-scale materialization: recompute ONLY the entries the
-    new batch touches, then MERGE them into the stored entries table.
+    """Restricted replay: recompute ONLY the entries in ``keys`` (a
+    namehash column) from ``events_table``, then MERGE them into the
+    stored entries table. The one keyed refold of the program: the
+    index stream passes its batch's touched_namehashes, reorg_rollback
+    its repair keys.
 
     The fold is a pure function of the log restricted to an entry's own
     events (every M1-M8 aggregate is keyed by namehash), so replaying
-    just the touched keys' events from the full log yields exactly the
-    rows a full recompute would produce for those keys. Work per batch
-    is O(events of touched entries), not O(full log) — the difference
+    just the keys' events from the full log yields exactly the rows a
+    full recompute would produce for those keys. Work per batch is
+    O(events of touched entries), not O(full log) — the difference
     between a 100 TB nightly recompute and a seconds-level upsert.
     Callers that hold a bucketed log (streaming/scan.start_index_stream)
     additionally prune ``events_table`` to the buckets containing the
-    touched keys' events before passing it in, so the SCAN is also
-    O(touched), not O(log).
+    keys' events before passing it in, so the SCAN is also O(touched),
+    not O(log).
 
-    The event log is append-only, so entries never disappear — MERGE
-    (upsert) is sufficient, no delete branch.
+    MERGE (upsert) only: a key the replay no longer produces keeps its
+    stored row. The stream's log is append-only, so that never
+    happens there; reorg_rollback deletes such rows itself.
     """
     from hypermap_etl_spark.operators.merge import merge_into_parquet
 
     from hypermap_etl_spark.util import release_local_checkpoint
 
-    keys = touched_namehashes(new_events)
     # Materialize the restricted log ONCE: the M1-M9 fold references
     # its input from every per-type aggregate and join, and an
     # uncached events_referencing lineage would re-run its key join
@@ -372,10 +375,10 @@ def incremental_entries_update(
     relevant = events_referencing(events_table, keys).localCheckpoint(
         eager=True
     )
-    # the restricted replay is complete for TOUCHED keys but also emits
-    # partial rows for untouched entries that merely co-occur (e.g. the
+    # the restricted replay is complete for the keys but also emits
+    # partial rows for other entries that merely co-occur (e.g. the
     # parent of a touched child, seen through only that child's mints) —
-    # keep only the touched keys' rows for the merge
+    # keep only the keys' rows for the merge
     updated = materialize_entries(relevant, root_hash).join(
         F.broadcast(keys), "namehash", "left_semi"
     )
@@ -384,8 +387,8 @@ def incremental_entries_update(
     # x bucket — steady-state file counts stay flat
     updated = with_entry_bucket(updated).repartition("entry_bucket")
     # Materialize ONCE before the merge: merge_into_parquet runs
-    # several actions over the batch frame (dedupe, touched-partition
-    # collect, matched/upserted counts, the swap write) and each would
+    # several actions over the batch frame (touched-partition collect,
+    # the observed partition overwrite) and each would
     # otherwise re-execute the whole restricted fold. The frame is
     # touched-keys-sized, so the eager checkpoint is tiny; both
     # checkpoints release as soon as the merge lands.
@@ -402,12 +405,7 @@ def incremental_entries_update(
         release_local_checkpoint(relevant)
 
 
-_PLACEHOLDER_LABEL = "[unknown]"
-
-
-def merge_entry_states(
-    stored: DataFrame, partial: DataFrame, root_hash: str = ROOT_HASH
-) -> DataFrame:
+def merge_entry_states(stored: DataFrame, partial: DataFrame) -> DataFrame:
     """Combine a STORED entries row set with a BATCH-ONLY partial fold
     into exactly the rows a full refold over (stored history + batch)
     would produce for those keys — the associative-merge half of true
@@ -427,9 +425,7 @@ def merge_entry_states(
                        '[unknown]' under ROOT and must NOT be
                        upgradable) upgrades to a batch Mint identity,
                        matching the full fold's
-                       minted-beats-placeholder resolution; tables
-                       written before the flag existed fall back to
-                       the legacy value inference, documented lossy
+                       minted-beats-placeholder resolution
       children (M2)    set union
       facts/notes      per-label: batch value wins unless the batch's
       (M4/M5)          last write for that label was NULL data (the
@@ -441,8 +437,8 @@ def merge_entry_states(
     """
     s_cols, b_cols = tuple(stored.columns), tuple(partial.columns)
     x = jvm_cached(
-        ("merge_states", root_hash, s_cols, b_cols),
-        lambda: _merge_state_exprs(root_hash, s_cols, b_cols),
+        ("merge_states", s_cols, b_cols),
+        lambda: _merge_state_exprs(s_cols, b_cols),
     )
     return (
         stored.select(*x.s)
@@ -452,35 +448,20 @@ def merge_entry_states(
 
 
 def _merge_state_exprs(
-    root_hash: str, s_cols: tuple[str, ...], b_cols: tuple[str, ...]
+    s_cols: tuple[str, ...], b_cols: tuple[str, ...]
 ) -> SimpleNamespace:
-    """The Columns of merge_entry_states — pure functions of ``root_hash``
-    and the two sides' column names, so built once per JVM."""
+    """The Columns of merge_entry_states — pure functions of the two
+    sides' column names, so built once per JVM."""
 
     def _side(tag, cols):
-        out = [F.col("namehash")] + [
+        return [F.col("namehash")] + [
             F.col(n).alias(f"__{tag}_{n}") for n in cols if n != "namehash"
         ]
-        if "isPlaceholder" not in cols:
-            # legacy tables written before the flag column: NULL, so
-            # the coalesce below falls back to the value heuristic
-            out.append(F.lit(None).cast("boolean").alias(f"__{tag}_isPlaceholder"))
-        return out
 
     has_s = F.col("__s_creationBlock").isNotNull()
     has_b = F.col("__b_creationBlock").isNotNull()
-
-    def _placeholder(side: str) -> "F.Column":
-        # the persisted flag decides; the value heuristic survives ONLY
-        # as the fallback for legacy rows written before the flag
-        # column existed (where it is genuinely ambiguous)
-        legacy = (F.col(f"__{side}_label") == _PLACEHOLDER_LABEL) & (
-            F.col(f"__{side}_parentHash") == root_hash
-        )
-        return F.coalesce(F.col(f"__{side}_isPlaceholder"), legacy)
-
-    placeholder_s = _placeholder("s")
-    placeholder_b = _placeholder("b")
+    placeholder_s = F.col("__s_isPlaceholder")
+    placeholder_b = F.col("__b_isPlaceholder")
     use_b = (~has_s) | (placeholder_s & has_b & ~placeholder_b)
 
     def ident(name):
@@ -535,9 +516,7 @@ def _merge_state_exprs(
         F.greatest(
             F.col("__s_lastUpdateBlock"), F.col("__b_lastUpdateBlock")
         ).alias("lastUpdateBlock"),
-        # the RESOLVED placeholder-ness (flag when persisted, legacy
-        # heuristic for pre-flag rows), so the merged row carries a
-        # concrete flag forward for every future merge
+        # the winning side's flag, carried forward for every future merge
         F.when(use_b, placeholder_b)
         .otherwise(placeholder_s)
         .alias("isPlaceholder"),
@@ -555,8 +534,8 @@ def _read_pending(spark, pending_path: str, schema) -> DataFrame | None:
     crashed ``_swap_pending`` is healed first, by the same recovery as
     every other staged swap (merge._recover_interrupted_swap).
 
-    POSIX-only scope: the store commits via directory renames, like
-    the unpartitioned MERGE (see operators/merge.py)."""
+    POSIX-only scope: the store commits via directory renames (see
+    operators/merge.py)."""
     import os as _os
 
     from hypermap_etl_spark.operators.merge import (
@@ -815,7 +794,7 @@ def incremental_entries_delta(
             partial = materialize_entries(
                 events_in, root_hash, known_extra=stored_keys
             )
-            updated = merge_entry_states(stored_touched, partial, root_hash)
+            updated = merge_entry_states(stored_touched, partial)
         updated = (
             with_entry_bucket(updated)
             .repartition("entry_bucket")
@@ -867,17 +846,21 @@ def incremental_entries_delta(
 
 def _read_entries(spark, entries_path: str) -> DataFrame:
     """The stored entries table, read with its known schema (ENTRY_SCHEMA
-    plus the ``entry_bucket`` partition column). A table written before
-    the ``isPlaceholder`` column existed is read without it;
-    merge_entry_states falls back to value inference for such rows."""
+    plus the ``entry_bucket`` partition column). A table without the
+    ``isPlaceholder`` column predates the persisted flag the delta merge
+    needs to tell a placeholder from a Mint; it raises ValueError
+    naming the table (rebuild it with `index`)."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     from hypermap_etl_spark.operators.merge import _table_columns, read_parquet_as
     from hypermap_etl_spark.schemas import ENTRY_SCHEMA
 
-    fields = [*ENTRY_SCHEMA.fields, StructField("entry_bucket", LongType())]
     if "isPlaceholder" not in (_table_columns(entries_path) or ["isPlaceholder"]):
-        fields = [f for f in fields if f.name != "isPlaceholder"]
+        raise ValueError(
+            f"entries table {entries_path} has no isPlaceholder column; "
+            "it was written before the flag existed — rebuild it with `index`"
+        )
+    fields = [*ENTRY_SCHEMA.fields, StructField("entry_bucket", LongType())]
     return read_parquet_as(spark, entries_path, StructType(fields))
 
 

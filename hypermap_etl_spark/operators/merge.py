@@ -16,36 +16,34 @@ whenNotMatchedInsertAll); this container has no Delta jars, so
 and reports (upserted, modified) counts like bulkWrite does.
 
 SINGLE WRITER, ENFORCED: like the reference's one scan loop per
-deployment, a table must have at most ONE merge in flight — recovery
-(_recover_interrupted_swap) deletes ALL sibling __staging_/__old_ dirs
-at merge start, so a racing writer's live staging dir would be
-destroyed mid-write. merge_into_parquet therefore takes an atomic-
-mkdir lock (``<table>__lock``) and raises ConcurrentMergeError on
-contention; locks older than LOCK_STALE_SECS (crashed writer) are
+deployment, a table must have at most ONE writer in flight.
+merge_into_parquet, delete_keys and the compactions therefore take an
+atomic-mkdir lock (``<table>__lock``) and raise ConcurrentMergeError
+on contention; locks older than LOCK_STALE_SECS (crashed writer) are
 taken over. The streaming path serializes merges per table via
 foreachBatch anyway; multi-writer deployments need a table format
 with optimistic concurrency (Delta/Iceberg) instead.
 
-Durability: with ``partition_col`` the merge is a DYNAMIC PARTITION
-OVERWRITE — only partitions present in the incoming batch are
-rewritten; untouched partition files are never touched. Without it,
-the rewrite goes through ``_swap_in``, the ONE whole-table commit of
-every unpartitioned rewrite here (merge, delete_keys,
-compact_small_table) and of the delta path's pending store: stage,
-rename the table away, rename the staging dir in, drop the old dir.
-The swap is NOT atomic (a crash between the renames leaves the data in
-a ``__old_`` dir), so every caller first runs
-``_recover_interrupted_swap``. Both paths assume a local/HDFS-like
+Durability: every MERGE and delete is a DYNAMIC PARTITION OVERWRITE on
+the table's partition column — only partitions present in the
+incoming batch are rewritten; untouched partition files are never
+touched, and the table directory itself is never renamed. The one
+whole-table commit, ``_swap_in`` (stage, rename the table away,
+rename the staging dir in, drop the old dir), serves only the two
+unpartitioned side tables: the stream's key index
+(compact_small_table) and the delta path's pending store. The swap is
+NOT atomic (a crash between the renames leaves the data in a
+``__old_`` dir), so its callers first run
+``_recover_interrupted_swap``. Both commits assume a local/HDFS-like
 filesystem — object stores without atomic rename need a table format
 (sources/manifest.py, Delta/Iceberg) instead.
 
-Scale note: rewriting the full table per merge is the plain-parquet
-cost; the Delta MERGE path (file-level pruning on the key's min/max
-stats) is the 100 TB answer and is a drop-in swap. For append-mostly
-event logs, `partition_col` (block bucket) IS the parquet-native
-incremental MERGE: per-batch cost is proportional to touched buckets,
-not table size. Requires the partition value to be stable per key
-(true for block-derived buckets: a key's blockNumber never changes).
+Scale note: the partition column (block bucket, entry bucket) IS the
+parquet-native incremental MERGE: per-batch cost is proportional to
+touched buckets, not table size; the Delta MERGE path (file-level
+pruning on the key's min/max stats) is the 100 TB answer and is a
+drop-in swap. Requires the partition value to be stable per key (true
+for block-derived buckets: a key's blockNumber never changes).
 """
 
 from __future__ import annotations
@@ -94,8 +92,8 @@ class ConcurrentMergeError(RuntimeError):
 
 
 # a crashed writer's lock is considered stale after this many seconds
-# and taken over (the staged-swap design means a crash never leaves the
-# table itself inconsistent — recovery handles the dirs)
+# and taken over (a crashed partition overwrite leaves the untouched
+# partitions intact; the replayed call rewrites the touched ones)
 LOCK_STALE_SECS = 3600.0
 
 
@@ -103,10 +101,9 @@ class _merge_lock:
     """Single-writer enforcement via atomic mkdir of ``<table>__lock``.
 
     Merges were always documented single-writer per table; this makes a
-    violation a loud ConcurrentMergeError instead of a silent race
-    (_recover_interrupted_swap deletes ALL sibling staging dirs, so a
-    concurrent writer's live staging dir would be destroyed
-    mid-write). mkdir is atomic on POSIX and HDFS-likes;
+    violation a loud ConcurrentMergeError instead of a silent race (two
+    overwrites of one partition, or a compaction deleting the files a
+    merge is scanning). mkdir is atomic on POSIX and HDFS-likes;
     locks older than LOCK_STALE_SECS are treated as crashed writers and
     taken over.
     """
@@ -134,10 +131,11 @@ class _merge_lock:
 
 
 def _swap_in(df: DataFrame, path: str) -> None:
-    """Replace the unpartitioned table at ``path`` with ``df``: write
-    it to a ``__staging_`` dir, rename the table away to an ``__old_``
-    dir, rename the staging dir in, drop the old dir. A missing table
-    is simply created by the second rename. Not atomic — a crash
+    """Replace the unpartitioned side table at ``path`` (the key index,
+    the pending store) with ``df``: write it to a ``__staging_`` dir,
+    rename the table away to an ``__old_`` dir, rename the staging dir
+    in, drop the old dir. A missing table is simply created by the
+    second rename. Not atomic — a crash
     leaves sibling dirs that ``_recover_interrupted_swap`` heals, so
     callers run it before they read ``path``."""
     tok = uuid.uuid4().hex[:8]
@@ -156,8 +154,8 @@ def _recover_interrupted_swap(path: str) -> None:
     A crash between the two renames leaves no table at ``path`` and the
     full data in the ``__old_`` dir — restore the newest one (by mtime:
     tokens are random, not ordered). When ``path`` exists every
-    ``__old_`` dir is a leak (crash after the second rename, or an
-    orphaned partition trash dir) and is swept, or a LATER mid-swap
+    ``__old_`` dir is a leak (crash after the second rename) and is
+    swept, or a LATER mid-swap
     crash could restore that stale snapshot over the live one. Stale
     ``__staging_`` dirs (crash before the first rename) are deleted:
     the table at ``path`` is still the authoritative prior state.
@@ -255,16 +253,15 @@ def _remove_partition_dirs(path: str, partition_col: str, values) -> int:
     join misses it. Resolve directories from the ACTUAL listing and
     compare the percent-decoded suffix against ``str(value)``.
 
-    Listing safety: each doomed directory is renamed into a sibling
-    ``__old_`` trash dir first, then the trash is deleted — a reader
-    that lists the table root mid-delete sees each partition either
-    whole or gone, never half-emptied (rename is atomic; rmtree is
-    not). Readers that captured file paths BEFORE the delete still
-    race it — in-place maintenance is single-writer and assumes no
-    concurrent reader holds a pre-delete listing (snapshot isolation
-    needs a manifest format: Delta/Iceberg). A trash dir orphaned by
-    a crash is swept by _recover_interrupted_swap on the next
-    lock-guarded operation, same as interrupted swaps.
+    Listing safety: each doomed directory is renamed into the sibling
+    ``__trash`` dir first, then the trash is deleted — a reader that
+    lists the table root mid-delete sees each partition either whole
+    or gone, never half-emptied (rename is atomic; rmtree is not).
+    Readers that captured file paths BEFORE the delete still race it —
+    in-place maintenance is single-writer and assumes no concurrent
+    reader holds a pre-delete listing (snapshot isolation needs a
+    manifest format: Delta/Iceberg). A trash dir a crash left behind
+    holds only deleted partitions; the next call empties it first.
     """
     from urllib.parse import unquote
 
@@ -281,7 +278,8 @@ def _remove_partition_dirs(path: str, partition_col: str, values) -> int:
     ]
     if not doomed:
         return 0
-    trash = f"{path}__old_{uuid.uuid4().hex[:8]}"
+    trash = f"{path}__trash"
+    shutil.rmtree(trash, ignore_errors=True)
     os.makedirs(trash)
     for name in doomed:
         os.rename(os.path.join(path, name), os.path.join(trash, name))
@@ -315,19 +313,20 @@ def merge_into_parquet(
     path: str,
     new_df: DataFrame,
     key_cols: list[str],
-    partition_col: str | None = None,
+    partition_col: str,
     assume_unique: bool = False,
 ) -> dict[str, int]:
-    """MERGE new_df into the parquet table at ``path`` keyed on key_cols.
+    """MERGE new_df into the parquet table at ``path`` keyed on key_cols,
+    partitioned by ``partition_col``.
 
     Returns {"upsertedCount": n_inserted, "modifiedCount": n_updated} to
     match the reference's bulkWrite report (extract-events.ts:126-136).
 
-    With ``partition_col``: dynamic partition overwrite — existing rows
-    are scanned and rewritten ONLY in partitions the batch touches
-    (partition filters prune the rest at the scan). The partition value
-    must be a pure function of the key's row (block bucket), otherwise
-    a key that 'moved' partitions would survive in its old partition.
+    Dynamic partition overwrite: existing rows are scanned and
+    rewritten ONLY in partitions the batch touches (partition filters
+    prune the rest at the scan). The partition value must be a pure
+    function of the key's row (block bucket), otherwise a key that
+    'moved' partitions would survive in its old partition.
 
     ``assume_unique``: the caller guarantees new_df already holds one
     row per key (an aggregate keyed on key_cols, e.g. the entries
@@ -337,7 +336,7 @@ def merge_into_parquet(
     lineage proves it.
 
     Single-writer per table, ENFORCED: a concurrent merge raises
-    ConcurrentMergeError instead of racing the recovery sweep.
+    ConcurrentMergeError instead of racing it.
     """
     with _merge_lock(path):
         return _merge_unlocked(
@@ -350,10 +349,9 @@ def _merge_unlocked(
     path: str,
     new_df: DataFrame,
     key_cols: list[str],
-    partition_col: str | None = None,
-    assume_unique: bool = False,
+    partition_col: str,
+    assume_unique: bool,
 ) -> dict[str, int]:
-    _recover_interrupted_swap(path)
     if not assume_unique:
         new_df = dedupe_new(new_df, key_cols)
 
@@ -361,40 +359,33 @@ def _merge_unlocked(
         # the row count is observed on the write itself, so the batch
         # plan runs once
         obs = Observation()
-        observed = new_df.observe(obs, F.count(F.lit(1)).alias("n"))
-        writer = observed.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(path)
+        (
+            new_df.observe(obs, F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
         return {"upsertedCount": _obs_count(obs), "modifiedCount": 0}
 
     existing = read_parquet_as(spark, path, new_df.schema)
-    if partition_col:
-        # the ONE pre-write action: touched partition values (needed to
-        # BUILD the pruned plan) and the batch row count ride the same
-        # tiny aggregate; the matched/upserted counts are observed on
-        # the write itself, so a steady-state merge runs two actions
-        per_part = (
-            new_df.groupBy(partition_col)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        )
-        if not per_part:
-            # empty batch: nothing to write — and the observed plan
-            # nodes below would be optimized away entirely (an isin([])
-            # filter folds the subtree to an empty relation), leaving
-            # Observation.get with no metrics row to return
-            return {"upsertedCount": 0, "modifiedCount": 0}
-        touched = [r[0] for r in per_part]
-        batch_total = sum(r["__c"] for r in per_part)
-        existing = existing.filter(_in_partitions(partition_col, touched))
-        obs_new = None
-    else:
-        # no partition pruning to drive — the batch count is observed
-        # on the write like everything else (zero pre-write actions)
-        obs_new = Observation()
-        new_df = new_df.observe(obs_new, F.count(F.lit(1)).alias("n"))
-        batch_total = None
+    # the ONE pre-write action: touched partition values (needed to
+    # BUILD the pruned plan) and the batch row count ride the same
+    # tiny aggregate; the matched/upserted counts are observed on
+    # the write itself, so a steady-state merge runs two actions
+    per_part = (
+        new_df.groupBy(partition_col)
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .collect()
+    )
+    if not per_part:
+        # empty batch: nothing to write — and the observed plan
+        # nodes below would be optimized away entirely (an isin([])
+        # filter folds the subtree to an empty relation), leaving
+        # Observation.get with no metrics row to return
+        return {"upsertedCount": 0, "modifiedCount": 0}
+    touched = [r[0] for r in per_part]
+    batch_total = sum(r["__c"] for r in per_part)
+    existing = existing.filter(_in_partitions(partition_col, touched))
 
     key = [F.col(f"n.{k}") == F.col(f"e.{k}") for k in key_cols]
 
@@ -405,7 +396,7 @@ def _merge_unlocked(
     existing = existing.observe(obs_exist, F.count(F.lit(1)).alias("n"))
     obs_surv = Observation()
     batch_keys = new_df.select(*key_cols)
-    if batch_total is not None and batch_total <= _BROADCAST_KEYS_MAX:
+    if batch_total <= _BROADCAST_KEYS_MAX:
         # checkpointed batches carry no stats — without the hint the
         # planner can sort-merge this anti-join and shuffle the stored
         # side for a few thousand batch keys
@@ -413,43 +404,20 @@ def _merge_unlocked(
     survivors = existing.alias("e").join(
         batch_keys.alias("n"), key, "left_anti"
     ).observe(obs_surv, F.count(F.lit(1)).alias("n"))
-    merged = survivors.unionByName(new_df)
-
-    if partition_col:
-        # rewrite only the touched partitions in place; untouched
-        # partition files are never opened or replaced
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-    else:
-        _swap_in(merged, path)
-    if batch_total is None:
-        batch_total = _obs_count(obs_new)
+    # rewrite only the touched partitions in place; untouched
+    # partition files are never opened or replaced
+    (
+        survivors.unionByName(new_df)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
     matched = _obs_count(obs_exist) - _obs_count(obs_surv)
     return {
         "upsertedCount": int(batch_total - matched),
         "modifiedCount": int(matched),
     }
-
-
-def append_if_absent(
-    spark: SparkSession, path: str, new_df: DataFrame, key_cols: list[str]
-) -> int:
-    """Insert-only variant (S5 insertMany with dup tolerance): append rows
-    whose key is not already present; returns inserted count."""
-    new_df = dedupe_new(new_df, key_cols)
-    if not os.path.exists(path):
-        new_df.write.mode("overwrite").parquet(path)
-        return new_df.count()
-    existing_keys = spark.read.parquet(path).select(*key_cols)
-    fresh = new_df.join(existing_keys, key_cols, "left_anti")
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").parquet(path)
-    return n
 
 
 # ------------------------------------------------------------ maintenance ----
@@ -566,82 +534,63 @@ def delete_keys(
     path: str,
     keys_df: DataFrame,
     key_cols: list[str],
-    partition_col: str | None = None,
+    partition_col: str,
 ) -> dict[str, int]:
     """Right-to-be-forgotten propagation: remove every row of the
     parquet table at ``path`` whose key appears in ``keys_df`` — the
     deletion half of the MERGE sink (a GDPR/CCPA erasure request is a
     keyed anti-join, not a full rebuild).
 
-    With ``partition_col``: a column-pruned (keys + partition) scan
-    semi-joined against the delete set finds the TOUCHED partitions —
-    unlike merge, the partition is generally NOT a function of the
-    delete key (users, not block buckets), so touched partitions are
-    discovered from the data; then dynamic partition overwrite
-    rewrites only those. Untouched partition files are never opened
-    for the rewrite. Without it: the staged swap (``_swap_in``).
+    A column-pruned (keys + partition) scan semi-joined against the
+    delete set finds the TOUCHED partitions — unlike merge, the
+    partition is generally NOT a function of the delete key (users,
+    not block buckets), so touched partitions are discovered from the
+    data; then dynamic partition overwrite rewrites only those.
+    Untouched partition files are never opened for the rewrite.
 
     Same single-writer lock as merge — a concurrent writer raises
     instead of racing. Returns {"deletedCount", "partitionsRewritten"}.
     """
     with _merge_lock(path):
-        _recover_interrupted_swap(path)
         if not os.path.exists(path):
             return {"deletedCount": 0, "partitionsRewritten": 0}
         keys = keys_df.select(*key_cols).distinct()
         existing = spark.read.parquet(path)
         key = [F.col(f"e.{k}").eqNullSafe(F.col(f"n.{k}")) for k in key_cols]
-
-        if partition_col:
-            # the semi-join that finds the touched partitions also
-            # counts the doomed rows: each matching stored row is
-            # emitted once, so the per-partition counts sum to exactly
-            # what the rewrite below removes
-            per_part = (
-                existing.select(*key_cols, partition_col)
-                .alias("e")
-                .join(keys.alias("n"), key, "left_semi")
-                .groupBy(partition_col)
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .collect()
-            )
-            if not per_part:
-                return {"deletedCount": 0, "partitionsRewritten": 0}
-            touched = [r[0] for r in per_part]
-            scoped = existing.filter(_in_partitions(partition_col, touched))
-            survivors = scoped.alias("e").join(keys.alias("n"), key, "left_anti")
-            # dynamic overwrite only replaces partitions PRESENT in the
-            # output: a touched partition whose every row is deleted
-            # would otherwise keep its old files — compute the emptied
-            # set first and remove those directories explicitly
-            kept = {
-                r[0]
-                for r in survivors.select(partition_col).distinct().collect()
-            }
-            (
-                survivors.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
-            _remove_partition_dirs(path, partition_col, set(touched) - kept)
-            return {
-                "deletedCount": sum(r["__c"] for r in per_part),
-                "partitionsRewritten": len(touched),
-            }
-
-        # deleted = stored − survivors, both observed on the swap write
-        obs_exist, obs_surv = Observation(), Observation()
-        survivors = (
-            existing.observe(obs_exist, F.count(F.lit(1)).alias("n"))
+        # the semi-join that finds the touched partitions also counts
+        # the doomed rows: each matching stored row is emitted once, so
+        # the per-partition counts sum to exactly what the rewrite
+        # below removes
+        per_part = (
+            existing.select(*key_cols, partition_col)
             .alias("e")
-            .join(keys.alias("n"), key, "left_anti")
-            .observe(obs_surv, F.count(F.lit(1)).alias("n"))
+            .join(keys.alias("n"), key, "left_semi")
+            .groupBy(partition_col)
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .collect()
         )
-        _swap_in(survivors, path)
+        if not per_part:
+            return {"deletedCount": 0, "partitionsRewritten": 0}
+        touched = [r[0] for r in per_part]
+        scoped = existing.filter(_in_partitions(partition_col, touched))
+        survivors = scoped.alias("e").join(keys.alias("n"), key, "left_anti")
+        # dynamic overwrite only replaces partitions PRESENT in the
+        # output: a touched partition whose every row is deleted would
+        # otherwise keep its old files — compute the emptied set first
+        # and remove those directories explicitly
+        kept = {
+            r[0] for r in survivors.select(partition_col).distinct().collect()
+        }
+        (
+            survivors.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
+        _remove_partition_dirs(path, partition_col, set(touched) - kept)
         return {
-            "deletedCount": _obs_count(obs_exist) - _obs_count(obs_surv),
-            "partitionsRewritten": 0,
+            "deletedCount": sum(r["__c"] for r in per_part),
+            "partitionsRewritten": len(touched),
         }
 
 
@@ -663,16 +612,18 @@ def reorg_rollback(
     opened, the fork's own bucket is the single partition rewrite, and
     every bucket below is untouched — work is O(reorg depth), not O(log).
 
-    Entries (optional, keyed repair — the incremental_entries_update
-    machinery run in reverse): the fold is a pure function of each
-    key's own events, so only keys REFERENCED by a discarded event can
-    change. Those keys' events are replayed from the surviving log and
-    MERGEd; keys with no surviving events are delete_keys'd. The
-    repair set is widened with stored entries whose lastUpdateBlock >
-    fork_block (M8 is the max applied block, so every reorg-affected
-    entry is visible that way), which makes a crash between the two
-    table writes self-healing: re-running the same rollback finds no
-    discarded events but still repairs the stale entries.
+    Entries (optional, keyed repair through the stream's restricted
+    replay, incremental_entries_update): the fold is a pure function of
+    each key's own events, so only keys REFERENCED by a discarded event
+    can change. Those keys are refolded from the surviving log and
+    MERGEd. The repair set is widened with stored entries whose
+    lastUpdateBlock > fork_block (M8 is the max applied block, so every
+    reorg-affected entry is visible that way), which makes a crash
+    between the two table writes self-healing: re-running the same
+    rollback finds no discarded events but still repairs the stale
+    entries. A refolded entry's blocks are all at or below the fork, so
+    a row still above it after the MERGE is an entry the surviving log
+    no longer produces; those rows are delete_keys'd.
 
     Pending store (with entries): the delta path's parked early writes
     above the fork are dropped last — their events are gone, and a
@@ -705,7 +656,6 @@ def reorg_rollback(
         "entriesDeleted": 0,
     }
     with _merge_lock(events_path):
-        _recover_interrupted_swap(events_path)
         existing = spark.read.parquet(events_path)
         discarded = existing.filter(F.col("blockNumber") > fork_block)
         n_discarded = discarded.count()
@@ -765,20 +715,20 @@ def _reorg_repair_entries(
     fork_block: int,
 ) -> dict[str, int]:
     """reorg_rollback's keyed entries repair over the truncated events
-    table: refold the repair keys from the surviving log, MERGE them,
-    delete the keys nothing survives for. Returns {"entriesUpserted",
-    "entriesDeleted"}."""
+    table: refold the repair keys from the surviving log and MERGE them
+    (incremental_entries_update), then delete the rows still above the
+    fork. Returns {"entriesUpserted", "entriesDeleted"}."""
     from hypermap_etl_spark.operators.materialize import (
-        events_referencing,
-        materialize_entries,
-        with_entry_bucket,
+        _read_entries,
+        incremental_entries_update,
     )
 
     out = {"entriesUpserted": 0, "entriesDeleted": 0}
+    above_fork = F.col("lastUpdateBlock") > fork_block
     # widen with entries the STORE says were touched above the fork —
     # self-healing if a previous rollback truncated events but died
     # before this repair
-    stale = stored.filter(F.col("lastUpdateBlock") > fork_block).select("namehash")
+    stale = stored.filter(above_fork).select("namehash")
     # pin before the entries writes below — `stale` lazily reads the
     # very files the merge is about to replace
     keys = (
@@ -787,25 +737,19 @@ def _reorg_repair_entries(
     if keys.isEmpty():
         return out
 
-    if not _has_parquet_files(events_path):
-        # TOTAL reorg (fork below every indexed block, fuzzer-found):
-        # nothing survives, so there is no log to refold and the read
-        # below would raise on the emptied table — every repair key's
-        # entry simply goes away, which IS the fresh-index state
-        drep = delete_keys(spark, entries_path, keys, ["namehash"], "entry_bucket")
-        out["entriesDeleted"] = drep["deletedCount"]
-        return out
-
-    surviving = spark.read.parquet(events_path)
-    refolded = with_entry_bucket(
-        materialize_entries(events_referencing(surviving, keys))
-        .join(F.broadcast(keys), "namehash", "left_semi")
-    ).localCheckpoint()
-    rep = merge_into_parquet(
-        spark, entries_path, refolded, ["namehash"], "entry_bucket"
+    # a TOTAL reorg (fork below every indexed block) leaves no log to
+    # refold: every repair key's row is above the fork and goes below
+    if _has_parquet_files(events_path):
+        rep = incremental_entries_update(
+            spark, entries_path, spark.read.parquet(events_path), keys
+        )
+        out["entriesUpserted"] = rep["upsertedCount"] + rep["modifiedCount"]
+    gone = (
+        _read_entries(spark, entries_path)
+        .filter(above_fork)
+        .select("namehash")
+        .localCheckpoint()
     )
-    out["entriesUpserted"] = rep["upsertedCount"] + rep["modifiedCount"]
-    gone = keys.join(refolded.select("namehash"), "namehash", "left_anti")
     if not gone.isEmpty():
         drep = delete_keys(spark, entries_path, gone, ["namehash"], "entry_bucket")
         out["entriesDeleted"] = drep["deletedCount"]

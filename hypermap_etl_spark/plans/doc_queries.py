@@ -3167,6 +3167,26 @@ FROM packs GROUP BY bucket ORDER BY bucket""",
 )
 
 
+def _gate_index_path(kind: str, sf_dir: str) -> str:
+    """STABLE location of a gate's persisted index, built only when
+    absent: a fresh mkdtemp per plan-build would (a) leak an index copy
+    per session x sf_dir and (b) run full write jobs every time a plan
+    is merely constructed (the parity mirror DESCRIBEs every gate). The
+    name holds the fixture dir and an md5 of operators/similarity.py, so
+    an index is reused only by the code that built it; delete the
+    directory to force a rebuild."""
+    import hashlib
+    import os
+    import tempfile
+
+    with open(similarity.__file__, "rb") as f:
+        code = hashlib.md5(f.read()).hexdigest()[:12]
+    fixture = os.path.basename(sf_dir.rstrip("/"))
+    return os.path.join(
+        tempfile.gettempdir(), f"hypermap_{kind}_gate_{fixture}_{code}"
+    )
+
+
 @plan_cache
 def emb_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of a search over the PERSISTED index with flat lists
@@ -3176,20 +3196,10 @@ def emb_ivf_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which is bit-identical by construction, pinned in unit tests).
     Same derived-property pattern and threshold as emb_ivf_recall."""
     import os
-    import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") % 20 == 0
-    # STABLE index location per fixture dir, built only when absent:
-    # a fresh mkdtemp per plan-build would (a) leak an index copy per
-    # session x sf_dir and (b) run full write jobs every time a plan is
-    # merely constructed (the parity mirror DESCRIBEs every gate). The
-    # fixture tables are immutable within a round, so the cached index
-    # is sound; delete the directory to force a rebuild.
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"hypermap_ivf_gate_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _gate_index_path("ivf", sf_dir)
     if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
         similarity.ivf_index_write(emb, path, n_centroids=8)
     exact = similarity.brute_force_topk(emb, k=5, query_filter=qf)
@@ -4800,14 +4810,10 @@ def emb_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_ivf_index_recall; the stable per-fixture index location is
     the same build-once convention."""
     import os
-    import tempfile
 
     emb = load_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") % 20 == 0
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"hypermap_ivfpq_gate_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = _gate_index_path("ivfpq", sf_dir)
     if not os.path.exists(os.path.join(path, "lists", "_SUCCESS")):
         similarity.ivf_index_write(emb, path, n_centroids=8, m=8, k_codes=16)
     exact = similarity.brute_force_topk(emb, k=5, query_filter=qf)

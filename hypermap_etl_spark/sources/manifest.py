@@ -1,6 +1,7 @@
 """Manifest-committed parquet tables — the object-store-safe
-alternative to the staged double-rename that operators/merge.py
-commits unpartitioned rewrites with (``_swap_in``, local/HDFS-only).
+alternative to the directory renames operators/merge.py commits with
+(dynamic partition overwrite for the events and entries tables, the
+``_swap_in`` double-rename for its two side tables; local/HDFS-only).
 The ``manifest`` CLI drives it; the index stream, the entries delta
 path and the serving queries use the plain parquet layout.
 

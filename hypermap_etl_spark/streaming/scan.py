@@ -28,10 +28,15 @@ Scale design (the 100 TB path):
     block_bucket — per-batch write I/O is O(touched buckets), never
     O(table) (operators/merge.merge_into_parquet; proven byte-identical
     for untouched buckets in tests/test_merge_serving.py).
-  - the index stream maintains a (namehash → block_bucket) side index
-    so the per-batch replay reads ONLY the buckets containing the
-    touched keys' historical events — scan volume is O(touched), not
-    O(full log)×4 as the naive four-semi-join formulation was.
+  - the index stream keeps the entries table current per batch by one
+    of two paths, picked from the source layout at its first non-empty
+    batch: the O(batch) delta merge for block-aligned chain-scan files,
+    else a restricted replay of the touched keys (the same keyed refold
+    reorg_rollback repairs entries with).
+  - the replay path maintains a (namehash → block_bucket) side index
+    so it reads ONLY the buckets containing the touched keys'
+    historical events — scan volume is O(touched), not O(full log)×4
+    as the naive four-semi-join formulation was.
 
 Beyond-parity extension (the reference cannot have late data because
 block numbers are totally ordered): event-time tumbling windows with a
@@ -89,8 +94,8 @@ def start_ingest_stream(
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        # persist: the MERGE runs several actions (dedupe, touched-
-        # partition collect, match counts, swap write) and would
+        # persist: the MERGE runs several actions (touched-partition
+        # collect, the observed partition overwrite) and would
         # otherwise re-decode the batch for each one
         events = with_block_bucket(parse_raw_logs(batch_df)).persist()
         try:
@@ -187,10 +192,9 @@ def source_layout_block_aligned(source_path: str) -> bool:
     range order; a shuffled multi-part re-write of the same ranges
     fails the overlap check and falls back to replay.
 
-    Footer statistics only — no Spark job, no row reads; O(files) at
-    stream start. An EMPTY source offers no evidence and returns False
-    (callers that know their writer can attest with
-    ``entries_strategy='delta'`` explicitly)."""
+    Footer statistics only — no Spark job, no row reads; O(files), run
+    once per stream run at its first non-empty batch. An EMPTY source
+    offers no evidence and returns False."""
     import pyarrow.parquet as pq
 
     spans = []
@@ -233,6 +237,15 @@ def source_layout_block_aligned(source_path: str) -> bool:
     return True
 
 
+# index-stream maintenance cadence: every COMPACT_INDEX_EVERY batches
+# the key index is rewritten distinct into one file, and every
+# COMPACT_ENTRIES_EVERY batches the entries buckets holding more than
+# ENTRIES_MAX_FILES files are collapsed to one file each
+COMPACT_INDEX_EVERY = 64
+COMPACT_ENTRIES_EVERY = 64
+ENTRIES_MAX_FILES = 8
+
+
 def start_index_stream(
     spark: SparkSession,
     source_path: str,
@@ -242,15 +255,10 @@ def start_index_stream(
     trigger: dict | None = None,
     max_files_per_trigger: int = 10,
     on_progress: Callable[[dict], None] | None = None,
-    compact_index_every: int = 64,
-    compact_entries_every: int = 64,
-    entries_max_files: int = 8,
-    entries_strategy: str = "auto",
 ):
     """Continuous `index-events`: per micro-batch, MERGE decoded events
     into the events table AND incrementally update the materialized
-    entries (only the namehashes the batch touches —
-    operators/materialize.incremental_entries_update). The streaming
+    entries (only the namehashes the batch touches). The streaming
     equivalent of the reference's index loop
     (/root/reference/scripts/index-events.ts:216).
 
@@ -261,42 +269,38 @@ def start_index_stream(
     to the entries table: ``<entries>__keyidx`` (the replay path's key
     index) and ``<entries>__pending`` (the delta path's early writes).
 
-    Per-batch cost at scale (entries_strategy='replay'):
-      write  O(touched block buckets)   — dynamic partition overwrite
-      scan   O(buckets holding touched keys' events) — side-index prune
-      fold   O(events of touched entries)
-      upsert O(entry buckets holding touched entries)
-    Nothing is proportional to the full log or the full entries table.
+    Entries maintenance runs one of two paths, chosen from the source
+    layout at the first non-empty batch (source_layout_block_aligned —
+    parquet footer spans only, no Spark job), so a stream started on
+    an empty source decides once its first files have landed:
 
-    ``entries_strategy='auto'`` (the default)
-    inspects the source layout ONCE at stream start
-    (source_layout_block_aligned — parquet footer spans only): the
-    chain-scan writer's one-sorted-file-per-range layout provably
-    satisfies the delta contract, so it runs 'delta'; anything else
-    (overlapping spans, mtime disorder, an empty dir with no evidence)
-    falls back to 'replay', which is indifferent to layout. The chosen
-    strategy is printed at start and reported in every on_progress
-    payload — and re-verified per micro-batch: a delta batch whose
-    min(blockNumber) is not strictly above the applied high-water mark
-    (files that landed mid-stream out of block order) demotes the
-    stream to 'replay' for the rest of the run, with the demoting
-    batch_id surfaced as ``delta_fallback_at``.
+    - 'delta' when the layout is the chain-scan writer's
+      one-sorted-file-per-range: the batch's own events are folded
+      alone and associatively merged with the touched keys' STORED rows
+      (materialize.incremental_entries_delta) — O(batch) per batch, no
+      history reread at all. Valid because such a source delivers
+      batches in block order (the file source chops micro-batches at
+      file boundaries and picks files oldest-first); re-delivered
+      batches re-merge idempotently. A range written as many shuffled
+      part-files could split one block's events across micro-batches,
+      which the associative merge cannot repair; their spans overlap,
+      so such a source runs 'replay'.
+    - 'replay' for anything else (overlapping spans, mtime disorder): a
+      restricted replay of the touched keys' events
+      (materialize.incremental_entries_update), indifferent to order.
+      Per-batch cost at scale:
+        write  O(touched block buckets)   — dynamic partition overwrite
+        scan   O(buckets holding touched keys' events) — side-index prune
+        fold   O(events of touched entries)
+        upsert O(entry buckets holding touched entries)
+      Nothing is proportional to the full log or the full entries table.
 
-    ``entries_strategy='delta'`` drops even the restricted replay:
-    the batch's own events are folded alone and associatively merged
-    with the touched keys' STORED rows
-    (materialize.incremental_entries_delta) — O(batch) per batch, no
-    history reread at all. Valid because a chain scan delivers batches
-    in block order; re-delivered batches re-merge idempotently. On
-    logs with hot parent keys (whose full histories the replay rereads
-    every batch) this is the scale path; keep 'replay' for
-    out-of-order backfills — and note the delta contract extends to
-    FILE layout: the file source chops micro-batches at file
-    boundaries, so each source file must be one block-aligned extract
-    range (the chain-scan writer's natural layout). A range written as
-    many shuffled part-files can split one block's events across
-    micro-batches in arbitrary order, which the associative merge
-    cannot repair; 'replay' is indifferent to it.
+    The choice is printed and reported in every on_progress payload
+    (``entries_strategy``) — and re-verified per micro-batch: a delta
+    batch whose min(blockNumber) is not strictly above the applied
+    high-water mark (files that landed mid-stream out of block order)
+    demotes the stream to 'replay' for the rest of the run, with the
+    demoting batch_id surfaced as ``delta_fallback_at``.
 
     The key index exists only for the replay path, which alone reads
     it. The first replay batch of each run rebuilds it from the events
@@ -305,16 +309,16 @@ def start_index_stream(
     which do not write it) are found. Later replay batches of the run
     blind-append their pairs (no read on the write path), so it
     accumulates one small file and some duplicate pairs per batch;
-    every ``compact_index_every`` batches it is rewritten distinct into
-    one file (compact_small_table) — long-running tails never degrade
-    into thousands-of-tiny-files scans. 0 disables.
+    every COMPACT_INDEX_EVERY batches it is rewritten distinct into one
+    file (compact_small_table) — long-running tails never degrade into
+    thousands-of-tiny-files scans.
 
     The entries table needs the same maintenance: each batch's dynamic
     partition overwrite rewrites every touched entry bucket with as many
-    files as shuffle tasks wrote it, so every ``compact_entries_every``
-    batches the oversized buckets (> ``entries_max_files`` files) are
-    collapsed to one file each (compact_partitions — I/O is O(oversized
-    buckets), untouched buckets are never opened). 0 disables.
+    files as shuffle tasks wrote it, so every COMPACT_ENTRIES_EVERY
+    batches the buckets holding more than ENTRIES_MAX_FILES files are
+    collapsed to one file each (compact_partitions — I/O is
+    O(oversized buckets), untouched buckets are never opened).
     """
     from hypermap_etl_spark.operators.materialize import (
         incremental_entries_delta,
@@ -322,39 +326,24 @@ def start_index_stream(
         touched_namehashes,
     )
 
-    if entries_strategy not in ("auto", "replay", "delta"):
-        raise ValueError(
-            f"entries_strategy must be 'auto', 'replay' or 'delta', got"
-            f" {entries_strategy!r}"
-        )
-    if entries_strategy == "auto":
-        entries_strategy = (
-            "delta" if source_layout_block_aligned(source_path) else "replay"
-        )
-        # the detected choice is a correctness-relevant attestation —
-        # say it loudly at start, not only inside progress payloads
-        print(
-            f"[start_index_stream] entries_strategy=auto resolved to "
-            f"'{entries_strategy}' for {source_path}"
-        )
-
     key_index_path = entries_path.rstrip("/") + "__keyidx"
     raw = read_raw_log_stream(spark, source_path, max_files_per_trigger)
 
-    # Per-batch guard for the delta contract: the
-    # start-time layout check is evidence about the files present THEN;
-    # files landing later (a backfill rewrite into the same prefix, a
-    # writer change) can violate block order mid-stream. Each delta
-    # batch must sit strictly above everything already applied, so we
-    # track the applied high-water in-memory and demote the stream to
-    # 'replay' — permanently, trust is gone — the moment a batch's
-    # min(blockNumber) is not above it. 'replay' is indifferent to
-    # order, so the demoted batch (and all later ones) stays correct.
-    # The FIRST batch of a run is exempt: after a crash Spark redelivers
-    # the last uncommitted batch, whose span legitimately overlaps the
-    # applied rows (the delta merge is idempotent for exact redelivery).
+    # Per-batch guard for the delta contract: the layout check is
+    # evidence about the files present when it ran; files landing later
+    # (a backfill rewrite into the same prefix, a writer change) can
+    # violate block order mid-stream. Each delta batch must sit strictly
+    # above everything already applied, so we track the applied
+    # high-water in-memory and demote the stream to 'replay' —
+    # permanently, trust is gone — the moment a batch's min(blockNumber)
+    # is not above it. 'replay' is indifferent to order, so the demoted
+    # batch (and all later ones) stays correct. The FIRST batch of a run
+    # is exempt: after a crash Spark redelivers the last uncommitted
+    # batch, whose span legitimately overlaps the applied rows (the
+    # delta merge is idempotent for exact redelivery).
+    # "strategy": None until the first non-empty batch;
     # "indexed": the key index was rebuilt in this run
-    state = {"strategy": entries_strategy, "hw": None, "fallback_at": None, "indexed": False}
+    state = {"strategy": None, "hw": None, "fallback_at": None, "indexed": False}
     span_aggs = [
         F.count(F.lit(1)).alias("n"),
         F.min("blockNumber").alias("lo"),
@@ -371,6 +360,16 @@ def start_index_stream(
             span = events.agg(*span_aggs).first()
             if span["n"] == 0:
                 return
+            if state["strategy"] is None:
+                state["strategy"] = (
+                    "delta" if source_layout_block_aligned(source_path) else "replay"
+                )
+                # the detected choice is a correctness-relevant
+                # attestation — say it loudly, not only in progress
+                print(
+                    f"[start_index_stream] entries_strategy resolved to "
+                    f"'{state['strategy']}' for {source_path}"
+                )
             if state["strategy"] == "delta":
                 if state["hw"] is not None and span["lo"] <= state["hw"]:
                     state["strategy"] = "replay"
@@ -392,11 +391,6 @@ def start_index_stream(
                 spark, table_path, events, ["event_id"], partition_col="block_bucket"
             )
             if state["strategy"] == "delta":
-                # O(batch): batch-only fold + associative merge with
-                # the stored rows — no history replay, no side-index
-                # lookup; valid because a chain scan delivers batches
-                # in block order (re-delivered batches re-merge
-                # idempotently)
                 buckets = None
                 incremental_entries_delta(spark, entries_path, events)
             else:
@@ -405,7 +399,7 @@ def start_index_stream(
                 else:
                     rebuild_key_index(spark, table_path, key_index_path)
                     state["indexed"] = True
-                if compact_index_every and batch_id > 0 and batch_id % compact_index_every == 0:
+                if batch_id > 0 and batch_id % COMPACT_INDEX_EVERY == 0:
                     from hypermap_etl_spark.operators.merge import compact_small_table
 
                     compact_small_table(spark, key_index_path)
@@ -414,16 +408,12 @@ def start_index_stream(
                 log = spark.read.parquet(table_path).filter(
                     F.col("block_bucket").isin(buckets)
                 )
-                incremental_entries_update(spark, entries_path, log, events)
-            if (
-                compact_entries_every
-                and batch_id > 0
-                and batch_id % compact_entries_every == 0
-            ):
+                incremental_entries_update(spark, entries_path, log, keys)
+            if batch_id > 0 and batch_id % COMPACT_ENTRIES_EVERY == 0:
                 from hypermap_etl_spark.operators.merge import compact_partitions
 
                 compact_partitions(
-                    spark, entries_path, "entry_bucket", max_files=entries_max_files
+                    spark, entries_path, "entry_bucket", max_files=ENTRIES_MAX_FILES
                 )
             if on_progress is not None:
                 on_progress(

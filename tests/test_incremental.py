@@ -8,6 +8,7 @@ import tempfile
 from hypermap_etl_spark.operators.materialize import (
     incremental_entries_update,
     materialize_entries,
+    touched_namehashes,
 )
 from tests.test_materialize import _fixture_rows
 from tests.helpers import events_df
@@ -41,7 +42,9 @@ def test_incremental_equals_full(spark):
         landed.extend(batch)
         landed_df = events_df(spark, landed)
         new_df = events_df(spark, batch)
-        incremental_entries_update(spark, entries_path, landed_df, new_df)
+        incremental_entries_update(
+            spark, entries_path, landed_df, touched_namehashes(new_df)
+        )
         prev = cut
 
     got = _flat(spark.read.parquet(entries_path))
@@ -52,7 +55,9 @@ def test_incremental_single_batch_equals_full(spark):
     rows = _fixture_rows()
     full_df = events_df(spark, rows)
     entries_path = tempfile.mkdtemp() + "/entries"
-    incremental_entries_update(spark, entries_path, full_df, full_df)
+    incremental_entries_update(
+        spark, entries_path, full_df, touched_namehashes(full_df)
+    )
     assert _flat(spark.read.parquet(entries_path)) == _flat(materialize_entries(full_df))
 
 

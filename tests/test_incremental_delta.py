@@ -128,61 +128,25 @@ def test_placeholder_flag_persisted_and_upgraded(spark):
     assert got[X]["label"] == "x"
 
 
-def test_merge_accepts_legacy_stored_table_without_flag(spark):
-    """A stored entries table written before the flag column existed
-    still merges (value-inference fallback) and the output carries a
-    concrete resolved flag."""
-    from hypermap_etl_spark.operators.materialize import merge_entry_states
+def test_entries_table_without_placeholder_flag_raises(spark):
+    """A stored entries table written before the isPlaceholder column
+    existed cannot tell a placeholder from a genuine Mint, so reading
+    it for the delta merge fails loudly, naming the table."""
+    import re
 
-    P = h(65)
-    rows1 = [
+    import pytest
+
+    rows = [
         ev(eventType="Mint", blockNumber=10, logIndex=0, parenthash=ROOT_HASH,
-           childhash=P, labelhash=h(66), label="real"),
+           childhash=h(65), labelhash=h(66), label="real"),
     ]
-    rows2 = [
-        ev(eventType="Fact", blockNumber=20, logIndex=0, parenthash=P,
-           facthash=h(67), labelhash=h(68), label="c", data="0x01"),
-    ]
-    stored = materialize_entries(events_df(spark, rows1)).drop("isPlaceholder")
-    partial = materialize_entries(
-        events_df(spark, rows2), known_extra=stored.select("namehash")
-    )
-    merged = {r["namehash"]: r.asDict() for r in
-              merge_entry_states(stored, partial).collect()}
-    assert merged[P]["label"] == "real"
-    assert merged[P]["facts"] == {"c": "0x01"}
-    assert merged[P]["isPlaceholder"] is False
-
-
-def test_legacy_entries_table_read_from_disk_still_merges(spark):
-    """The delta path reads stored entries with the known schema, no
-    inference job. A table written before the flag column existed is
-    read without the flag, and the merge falls back to value inference
-    exactly as for an in-memory legacy frame."""
-    from hypermap_etl_spark.operators.materialize import merge_entry_states
-
-    P = h(65)
-    rows1 = [
-        ev(eventType="Mint", blockNumber=10, logIndex=0, parenthash=ROOT_HASH,
-           childhash=P, labelhash=h(66), label="real"),
-    ]
-    rows2 = [
-        ev(eventType="Fact", blockNumber=20, logIndex=0, parenthash=P,
-           facthash=h(67), labelhash=h(68), label="c", data="0x01"),
-    ]
-    legacy = materialize_entries(events_df(spark, rows1)).drop("isPlaceholder")
-    partial = materialize_entries(
-        events_df(spark, rows2), known_extra=legacy.select("namehash")
-    )
-    expected = _flat(merge_entry_states(legacy, partial))
+    legacy = materialize_entries(events_df(spark, rows)).drop("isPlaceholder")
     path = tempfile.mkdtemp() + "/entries"
     with_entry_bucket(legacy).write.partitionBy("entry_bucket").parquet(path)
-    stored = _read_entries(spark, path)
-    assert "isPlaceholder" not in stored.columns
-    got = _flat(merge_entry_states(stored.drop("entry_bucket"), partial))
-    assert got == expected
-    assert got[P]["label"] == "real"
-    assert got[P]["isPlaceholder"] is False
+    with pytest.raises(ValueError, match=f"{re.escape(path)}.*isPlaceholder"):
+        _read_entries(spark, path)
+    with pytest.raises(ValueError, match="isPlaceholder"):
+        incremental_entries_delta(spark, path, events_df(spark, rows))
 
 
 def test_delta_repeat_mint_keeps_first_identity(spark):

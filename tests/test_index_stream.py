@@ -19,6 +19,69 @@ from tests.helpers import ev, events_df, h
 from tests.test_materialize import _fixture_rows
 
 
+def _land_redelivered(spark, rows, src):
+    """Land ``rows`` as one chunk file, twice over (a redelivered
+    chunk): the two files' block spans coincide, so the source is not
+    block-aligned and the index stream runs its replay path."""
+    for _ in range(2):
+        build_raw_logs(events_df(spark, rows)).coalesce(1).write.mode(
+            "append").parquet(src)
+
+
+def _stage_chunks(spark, chunks, base):
+    """One block-sorted parquet file per chunk, written outside the
+    stream source (a chain-scan writer's output)."""
+    import glob
+
+    files = []
+    for i, rows in enumerate(chunks):
+        build_raw_logs(events_df(spark, rows)).coalesce(1).sortWithinPartitions(
+            "blockNumber").write.parquet(f"{base}/stage{i}")
+        files += glob.glob(f"{base}/stage{i}/*.parquet")
+    return files
+
+
+def _land(files, src, mtime0):
+    """Move staged files into the source whole, in order, with strictly
+    increasing mtimes from ``mtime0``."""
+    for i, f in enumerate(files):
+        os.utime(f, (mtime0 + i, mtime0 + i))
+        os.rename(f, os.path.join(src, os.path.basename(f)))
+
+
+def _block_chunks():
+    """The fixture log cut at block boundaries into three ranges."""
+    rows = sorted(
+        _fixture_rows(), key=lambda r: (r["blockNumber"], r["logIndex"])
+    )
+    return rows, [
+        [r for r in rows if r["blockNumber"] <= 15],
+        [r for r in rows if 15 < r["blockNumber"] <= 19],
+        [r for r in rows if r["blockNumber"] > 19],
+    ]
+
+
+def _assert_entries_match_fold(spark, ent, rows):
+    """The stream's entries table equals the batch fold of ``rows``."""
+    from hypermap_etl_spark.operators.decode import parse_raw_logs
+
+    expected = {
+        r["namehash"]: r.asDict()
+        for r in materialize_entries(
+            parse_raw_logs(build_raw_logs(events_df(spark, rows)))
+        ).collect()
+    }
+    got = {r["namehash"]: r.asDict() for r in spark.read.parquet(ent).collect()}
+    assert set(got) == set(expected)
+    for k in expected:
+        for fld in ("label", "parentHash", "owner", "gene",
+                    "creationBlock", "lastUpdateBlock"):
+            assert got[k][fld] == expected[k][fld], (k, fld)
+        assert sorted(got[k]["children"]) == sorted(expected[k]["children"])
+        assert got[k]["facts"] == expected[k]["facts"]
+        assert got[k]["notes"] == expected[k]["notes"]
+
+
 def test_streaming_index_matches_batch(spark):
     rows = _fixture_rows()
     base = tempfile.mkdtemp()
@@ -125,12 +188,10 @@ def test_index_stream_prunes_replay_to_touched_buckets(spark):
            childhash=h(20 + i), label=f"b{i}")
         for i in range(2)
     ]
-    build_raw_logs(events_df(spark, rows_b0 + rows_b2)).write.mode("append").parquet(src)
-    # strategy pinned: this test asserts REPLAY-path telemetry
-    # (replay_buckets); 'auto' may legitimately pick delta here
-    start_index_stream(
-        spark, src, tbl, ent, ckpt, entries_strategy="replay"
-    ).awaitTermination(240)
+    # this test asserts REPLAY-path telemetry (replay_buckets), so the
+    # source is not block-aligned
+    _land_redelivered(spark, rows_b0 + rows_b2, src)
+    start_index_stream(spark, src, tbl, ent, ckpt).awaitTermination(240)
 
     # Note on h(20) (lives in bucket 2 only) + its own block in bucket 2
     late = [
@@ -140,8 +201,7 @@ def test_index_stream_prunes_replay_to_touched_buckets(spark):
     build_raw_logs(events_df(spark, late)).write.mode("append").parquet(src)
     progress = []
     q = start_index_stream(spark, src, tbl, ent, ckpt,
-                           on_progress=progress.append,
-                           entries_strategy="replay")
+                           on_progress=progress.append)
     q.awaitTermination(240)
 
     assert progress, "index stream must report per-batch progress (T5)"
@@ -186,16 +246,13 @@ def test_replay_stream_indexes_events_written_between_runs(spark):
     note = [ev(eventType="Note", blockNumber=250_010, logIndex=0, parenthash=P,
                notehash=h(31), labelhash=h(32), label="note1", data="0x01")]
 
-    build_raw_logs(events_df(spark, mint)).write.mode("append").parquet(src)
-    start_index_stream(
-        spark, src, tbl, ent, ckpt, entries_strategy="replay"
-    ).awaitTermination(240)
+    # a redelivered chunk: not block-aligned, so both runs replay
+    _land_redelivered(spark, mint, src)
+    start_index_stream(spark, src, tbl, ent, ckpt).awaitTermination(240)
     extracted = with_block_bucket(parse_raw_logs(build_raw_logs(events_df(spark, fact))))
     merge_into_parquet(spark, tbl, extracted, ["event_id"], partition_col="block_bucket")
     build_raw_logs(events_df(spark, note)).write.mode("append").parquet(src)
-    start_index_stream(
-        spark, src, tbl, ent, ckpt, entries_strategy="replay"
-    ).awaitTermination(240)
+    start_index_stream(spark, src, tbl, ent, ckpt).awaitTermination(240)
 
     expected = materialize_entries(
         parse_raw_logs(build_raw_logs(events_df(spark, mint + fact + note)))
@@ -302,14 +359,15 @@ def test_descendants_bfs(spark):
     assert got == {(h(2), 1), (h(3), 1), (h(4), 2)}
 
 
-def test_index_stream_autocompacts_key_index(spark):
-    """With compact_index_every=1 the key index collapses to one
+def test_index_stream_autocompacts_key_index(spark, monkeypatch):
+    """With COMPACT_INDEX_EVERY=1 the key index collapses to one
     distinct file after a batch that blind-appended to it (the second
     replay batch of a run; the first rebuilds it)."""
     import glob
 
-    from hypermap_etl_spark.streaming.scan import start_index_stream
+    from hypermap_etl_spark.streaming import scan
 
+    monkeypatch.setattr(scan, "COMPACT_INDEX_EVERY", 1)
     base = tempfile.mkdtemp()
     src, tbl, ent, ckpt = f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
     idx = f"{ent}__keyidx"
@@ -319,17 +377,16 @@ def test_index_stream_autocompacts_key_index(spark):
            childhash=h(10 + i), label=f"a{i}")
         for i in range(2)
     ]
-    build_raw_logs(events_df(spark, rows)).write.mode("append").parquet(src)
-    # the key index exists only on the replay path
-    start_index_stream(spark, src, tbl, ent, ckpt, compact_index_every=1,
-                       entries_strategy="replay").awaitTermination(240)
+    # the key index exists only on the replay path: a redelivered
+    # chunk keeps the source from being block-aligned
+    _land_redelivered(spark, rows, src)
+    start_index_stream(spark, src, tbl, ent, ckpt).awaitTermination(240)
 
     for i in range(2):  # two files, one batch each: rebuild, then append
         more = [ev(eventType="Mint", blockNumber=20 + i, logIndex=0,
                    parenthash=h(1), childhash=h(30 + i), label=f"b{i}")]
         build_raw_logs(events_df(spark, more)).write.mode("append").parquet(src)
-    q = start_index_stream(spark, src, tbl, ent, ckpt, compact_index_every=1,
-                           max_files_per_trigger=1, entries_strategy="replay")
+    q = start_index_stream(spark, src, tbl, ent, ckpt, max_files_per_trigger=1)
     q.awaitTermination(240)
 
     files = glob.glob(f"{idx}/*.parquet")
@@ -339,7 +396,7 @@ def test_index_stream_autocompacts_key_index(spark):
     assert len(pairs) == spark.read.parquet(idx).count()
 
 
-def test_index_stream_bounds_entries_files(spark):
+def test_index_stream_bounds_entries_files(spark, monkeypatch):
     """Entries-table maintenance symmetry: across a
     many-batch availableNow run with per-batch compaction, every
     entry_bucket partition stays at ≤ 1 file, and the compacted entries
@@ -347,8 +404,10 @@ def test_index_stream_bounds_entries_files(spark):
     import glob
 
     from hypermap_etl_spark.operators.decode import parse_raw_logs
-    from hypermap_etl_spark.streaming.scan import start_index_stream
+    from hypermap_etl_spark.streaming import scan
 
+    monkeypatch.setattr(scan, "COMPACT_ENTRIES_EVERY", 1)
+    monkeypatch.setattr(scan, "ENTRIES_MAX_FILES", 1)
     base = tempfile.mkdtemp()
     src, tbl, ent, ckpt = f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
     os.makedirs(src)
@@ -363,9 +422,8 @@ def test_index_stream_bounds_entries_files(spark):
         ]
         all_rows += rows
         build_raw_logs(events_df(spark, rows)).write.mode("append").parquet(src)
-    q = start_index_stream(
+    q = scan.start_index_stream(
         spark, src, tbl, ent, ckpt, max_files_per_trigger=1,
-        compact_entries_every=1, entries_max_files=1,
     )
     q.awaitTermination(240)
 
@@ -389,59 +447,33 @@ def test_index_stream_bounds_entries_files(spark):
 
 
 def test_streaming_index_delta_strategy_matches_batch(spark):
-    """entries_strategy='delta' (batch-only fold + associative merge,
-    no history replay) must produce the same entries as the batch full
-    recompute when batches arrive in block order — the chain-scan
-    contract. Chunks are cut at block boundaries (a real scan's
-    fromBlock/toBlock ranges)."""
-    rows = sorted(
-        _fixture_rows(), key=lambda r: (r["blockNumber"], r["logIndex"])
-    )
-    chunks = [
-        [r for r in rows if r["blockNumber"] <= 15],
-        [r for r in rows if 15 < r["blockNumber"] <= 19],
-        [r for r in rows if r["blockNumber"] > 19],
-    ]
+    """On block-aligned chunk files the stream runs the delta path
+    (batch-only fold + associative merge, no history replay) in both
+    runs, and it produces the same entries as the batch full recompute
+    — the chain-scan contract. Chunks are cut at block boundaries (a
+    real scan's fromBlock/toBlock ranges), one FILE per extract range:
+    the file source chops micro-batches at file boundaries, so a
+    multi-file range could split one block's events across batches in
+    arbitrary file order (documented on start_index_stream)."""
+    import time as _time
+
+    rows, chunks = _block_chunks()
     base = tempfile.mkdtemp()
     src, tbl, ent, ckpt = (
         f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
     )
     os.makedirs(src)
-    # one FILE per extract range (coalesce(1)) — the chain-scan layout
-    # the delta strategy requires: the file source chops micro-batches
-    # at file boundaries, so a multi-file range could split one block's
-    # events across batches in arbitrary file order, violating the
-    # block-order contract (the replay strategy has no such
-    # requirement; this is documented on start_index_stream)
-    build_raw_logs(events_df(spark, chunks[0])).coalesce(1).write.mode(
-        "append").parquet(src)
-    build_raw_logs(events_df(spark, chunks[1])).coalesce(1).write.mode(
-        "append").parquet(src)
-    q = start_index_stream(spark, src, tbl, ent, ckpt, entries_strategy="delta")
-    q.awaitTermination(240)
-    build_raw_logs(events_df(spark, chunks[2])).coalesce(1).write.mode(
-        "append").parquet(src)
-    q2 = start_index_stream(spark, src, tbl, ent, ckpt, entries_strategy="delta")
-    q2.awaitTermination(240)
-
-    from hypermap_etl_spark.operators.decode import parse_raw_logs
-
-    expected_events = parse_raw_logs(build_raw_logs(events_df(spark, rows)))
-    expected = {
-        r["namehash"]: r.asDict()
-        for r in materialize_entries(expected_events).collect()
-    }
-    got = {r["namehash"]: r.asDict() for r in spark.read.parquet(ent).collect()}
-    assert set(got) == set(expected)
-    for k in expected:
-        e, g = expected[k], got[k]
-        for fld in (
-            "label", "parentHash", "owner", "gene",
-            "creationBlock", "lastUpdateBlock",
-        ):
-            assert g[fld] == e[fld], (k, fld, g[fld], e[fld])
-        assert sorted(g["children"]) == sorted(e["children"])
-        assert g["facts"] == e["facts"] and g["notes"] == e["notes"]
+    progress = []
+    for run in ([chunks[0], chunks[1]], [chunks[2]]):
+        for c in run:
+            build_raw_logs(events_df(spark, c)).coalesce(1).write.mode(
+                "append").parquet(src)
+            _time.sleep(0.05)  # distinct mtimes, as a polling writer has
+        start_index_stream(
+            spark, src, tbl, ent, ckpt, on_progress=progress.append
+        ).awaitTermination(240)
+    assert progress and all(p["entries_strategy"] == "delta" for p in progress)
+    _assert_entries_match_fold(spark, ent, rows)
 
 
 def test_auto_strategy_picks_delta_on_chain_scan_layout(spark):
@@ -582,56 +614,67 @@ def test_layout_mtime_ties_are_no_evidence(spark):
 
 
 def test_delta_demotes_to_replay_on_midstream_disorder(spark):
-    """The delta contract is re-verified per micro-batch.
-    An attested 'delta' stream that receives a batch whose blocks are
-    NOT strictly above the applied high-water mark (a backfill file
-    landing late) demotes itself to 'replay' for the rest of the run —
-    and the final entries still equal the batch recompute, because
-    replay re-folds the touched keys' full history."""
-    from hypermap_etl_spark.operators.decode import parse_raw_logs
+    """The delta contract is re-verified per micro-batch. A stream
+    that started on a block-aligned source (delta) and then receives a
+    file whose blocks are NOT strictly above the applied high-water
+    mark (a backfill file landing late) demotes itself to 'replay' for
+    the rest of the run — and the final entries still equal the batch
+    recompute, because replay re-folds the touched keys' full
+    history."""
+    import time as _time
 
-    rows = sorted(
-        _fixture_rows(), key=lambda r: (r["blockNumber"], r["logIndex"])
-    )
-    a = [r for r in rows if r["blockNumber"] <= 15]
-    b = [r for r in rows if r["blockNumber"] > 19]
-    c = [r for r in rows if 15 < r["blockNumber"] <= 19]
+    rows, (a, c, b) = _block_chunks()
     base = tempfile.mkdtemp()
     src, tbl, ent, ckpt = (
         f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
     )
     os.makedirs(src)
-    import time as _time
-
-    # written (and hence picked up) in order A, B, C — C's blocks sit
-    # BELOW the high-water B establishes, violating the contract
-    for chunk in (a, b, c):
-        build_raw_logs(events_df(spark, chunk)).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        _time.sleep(0.05)
+    staged_a, staged_b, staged_c = _stage_chunks(spark, [a, b, c], base)
+    t0 = _time.time() - 60
+    _land([staged_a, staged_b], src, t0)
     progress = []
     q = start_index_stream(
-        spark, src, tbl, ent, ckpt,
-        max_files_per_trigger=1,
-        entries_strategy="delta",  # the caller's (wrong) attestation
-        on_progress=progress.append,
+        spark, src, tbl, ent, ckpt, trigger={"processingTime": "1 second"},
+        max_files_per_trigger=1, on_progress=progress.append,
     )
-    q.awaitTermination(240)
+    try:
+        q.processAllAvailable()
+        # C lands after B, but its blocks sit BELOW the high-water B
+        # established, violating the contract
+        _land([staged_c], src, t0 + 2)
+        q.processAllAvailable()
+    finally:
+        q.stop()
     strategies = [p["entries_strategy"] for p in progress]
     assert strategies == ["delta", "delta", "replay"], strategies
     assert progress[-1]["delta_fallback_at"] == progress[-1]["batch_id"]
+    _assert_entries_match_fold(spark, ent, rows)
 
-    expected_events = parse_raw_logs(build_raw_logs(events_df(spark, rows)))
-    expected = {
-        r["namehash"]: r.asDict()
-        for r in materialize_entries(expected_events).collect()
-    }
-    got = {r["namehash"]: r.asDict() for r in spark.read.parquet(ent).collect()}
-    assert set(got) == set(expected)
-    for k in expected:
-        for fld in ("label", "parentHash", "owner", "gene",
-                    "creationBlock", "lastUpdateBlock"):
-            assert got[k][fld] == expected[k][fld], (k, fld)
-        assert sorted(got[k]["children"]) == sorted(expected[k]["children"])
-        assert got[k]["facts"] == expected[k]["facts"]
+
+def test_index_stream_resolves_strategy_at_first_batch(spark):
+    """A stream started on an EMPTY source picks its entries path at
+    its first non-empty batch, not at start: chain-scan files that land
+    after the start run the delta path, and the entries equal the
+    batch recompute."""
+    import time as _time
+
+    rows, chunks = _block_chunks()
+    base = tempfile.mkdtemp()
+    src, tbl, ent, ckpt = (
+        f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
+    )
+    os.makedirs(src)
+    staged = _stage_chunks(spark, chunks, base)
+    progress = []
+    q = start_index_stream(
+        spark, src, tbl, ent, ckpt, trigger={"processingTime": "1 second"},
+        on_progress=progress.append,
+    )
+    try:
+        q.processAllAvailable()  # nothing to read yet
+        _land(staged, src, _time.time() - 60)
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert progress and all(p["entries_strategy"] == "delta" for p in progress)
+    _assert_entries_match_fold(spark, ent, rows)

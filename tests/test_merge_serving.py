@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hypermap_etl_spark.operators.enrich import enrich_timestamps
-from hypermap_etl_spark.operators.merge import append_if_absent, merge_into_parquet
+from hypermap_etl_spark.operators.merge import merge_into_parquet, with_block_bucket
 from hypermap_etl_spark.plans import serving
 from tests.helpers import ev, events_df, h
 
@@ -25,12 +25,18 @@ def _mk(spark, n, label="a", start=0):
     )
 
 
+def _merge_bucketed(spark, path, df):
+    return merge_into_parquet(
+        spark, path, with_block_bucket(df), ["event_id"], "block_bucket"
+    )
+
+
 def test_merge_upsert_and_update(spark):
     path = tempfile.mkdtemp() + "/tbl"
-    r1 = merge_into_parquet(spark, path, _mk(spark, 5), ["event_id"])
+    r1 = _merge_bucketed(spark, path, _mk(spark, 5))
     assert r1 == {"upsertedCount": 5, "modifiedCount": 0}
     # overlapping batch: 3 updates (new label wins) + 2 inserts
-    r2 = merge_into_parquet(spark, path, _mk(spark, 5, label="b", start=2), ["event_id"])
+    r2 = _merge_bucketed(spark, path, _mk(spark, 5, label="b", start=2))
     assert r2 == {"upsertedCount": 2, "modifiedCount": 3}
     tbl = spark.read.parquet(path)
     assert tbl.count() == 7
@@ -44,8 +50,6 @@ def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
     import glob
     import hashlib
     import os
-
-    from hypermap_etl_spark.operators.merge import with_block_bucket
 
     path = tempfile.mkdtemp() + "/tbl"
     # buckets 0 and 1 (block 150k)
@@ -80,59 +84,23 @@ def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
 def test_merge_rejects_table_with_unexpected_columns(spark):
     """The stored table is read with the batch's schema (no inference
     job), so a table holding a column the batch lacks must still fail
-    the merge loudly, not be rewritten with that column dropped —
-    partitioned or not."""
+    the merge loudly, not be rewritten with that column dropped."""
     import pytest
 
-    from hypermap_etl_spark.operators.merge import with_block_bucket
-
-    for part in (None, "block_bucket"):
-        path = tempfile.mkdtemp() + "/tbl"
-        batch = with_block_bucket(_mk(spark, 3))
-        merge_into_parquet(
-            spark, path, batch.withColumn("extra", F.lit(1)), ["event_id"],
-            partition_col=part,
-        )
-        with pytest.raises(ValueError, match="extra"):
-            merge_into_parquet(
-                spark, path, with_block_bucket(_mk(spark, 2, start=5)),
-                ["event_id"], partition_col=part,
-            )
-        assert "extra" in spark.read.parquet(path).columns
-        assert spark.read.parquet(path).count() == 3
-
-
-def test_merge_recovers_interrupted_swap(spark):
-    """A crash between the two swap renames leaves the table in a
-    __old_ dir; the next merge must restore it instead of treating the
-    table as absent."""
-    import os
-
-    base = tempfile.mkdtemp()
-    path = f"{base}/tbl"
-    merge_into_parquet(spark, path, _mk(spark, 5), ["event_id"])
-    # simulate the crash window: table renamed away, staging orphaned
-    os.rename(path, f"{path}__old_deadbeef")
-    os.makedirs(f"{path}__staging_cafe")
-    r = merge_into_parquet(spark, path, _mk(spark, 2, label="b"), ["event_id"])
-    assert r == {"upsertedCount": 0, "modifiedCount": 2}  # table recovered
-    assert spark.read.parquet(path).count() == 5
-    assert not os.path.exists(f"{path}__staging_cafe")
+    path = tempfile.mkdtemp() + "/tbl"
+    _merge_bucketed(spark, path, _mk(spark, 3).withColumn("extra", F.lit(1)))
+    with pytest.raises(ValueError, match="extra"):
+        _merge_bucketed(spark, path, _mk(spark, 2, start=5))
+    assert "extra" in spark.read.parquet(path).columns
+    assert spark.read.parquet(path).count() == 3
 
 
 def test_merge_dedupes_within_batch(spark):
     path = tempfile.mkdtemp() + "/tbl"
     batch = _mk(spark, 3).unionByName(_mk(spark, 3))  # exact dups in one batch
-    r = merge_into_parquet(spark, path, batch, ["event_id"])
+    r = _merge_bucketed(spark, path, batch)
     assert r["upsertedCount"] == 3
     assert spark.read.parquet(path).count() == 3
-
-
-def test_append_if_absent(spark):
-    path = tempfile.mkdtemp() + "/tbl"
-    assert append_if_absent(spark, path, _mk(spark, 4), ["event_id"]) == 4
-    assert append_if_absent(spark, path, _mk(spark, 6), ["event_id"]) == 2
-    assert spark.read.parquet(path).count() == 6
 
 
 def test_enrich_timestamps_null_tolerant(spark):
@@ -266,7 +234,7 @@ def test_compact_small_table_dedupes(spark):
 
 def test_merge_lock_blocks_concurrent_writer(spark, tmp_path):
     """A held lock makes a second merge fail loudly instead of racing
-    the recovery sweep; a stale lock (crashed writer) is taken over."""
+    the first; a stale lock (crashed writer) is taken over."""
     import os
     import time as _time
 
@@ -279,12 +247,12 @@ def test_merge_lock_blocks_concurrent_writer(spark, tmp_path):
     )
 
     table = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, "a")], "event_id long, v string")
+    df = spark.createDataFrame([(1, "a", 0)], "event_id long, v string, p int")
     with _merge_lock(table):
         with pytest.raises(ConcurrentMergeError):
-            merge_into_parquet(spark, table, df, ["event_id"])
+            merge_into_parquet(spark, table, df, ["event_id"], "p")
     # lock released -> merge proceeds
-    assert merge_into_parquet(spark, table, df, ["event_id"]) == {
+    assert merge_into_parquet(spark, table, df, ["event_id"], "p") == {
         "upsertedCount": 1,
         "modifiedCount": 0,
     }
@@ -293,7 +261,7 @@ def test_merge_lock_blocks_concurrent_writer(spark, tmp_path):
     os.mkdir(lock)
     old = _time.time() - 7200
     os.utime(lock, (old, old))
-    res = merge_into_parquet(spark, table, df, ["event_id"])
+    res = merge_into_parquet(spark, table, df, ["event_id"], "p")
     assert res == {"upsertedCount": 0, "modifiedCount": 1}
     assert not os.path.exists(lock)
 
@@ -427,18 +395,13 @@ def test_delete_keys_empties_whole_partition_and_unpartitioned(spark, tmp_path):
     assert back.count() == 5
     assert back.filter(F.col("bucket") == 0).count() == 0
 
-    # unpartitioned: staged atomic rewrite
-    p2 = str(tmp_path / "flat")
-    spark.range(20).withColumnRenamed("id", "k").write.parquet(p2)
-    rep2 = delete_keys(
-        spark, p2, spark.createDataFrame([(7,), (8,), (99,)], "k long"), ["k"]
-    )
-    assert rep2["deletedCount"] == 2
-    assert spark.read.parquet(p2).count() == 18
+    # the partition column is required: there is no unpartitioned delete
+    with pytest.raises(TypeError, match="partition_col"):
+        delete_keys(spark, path, victims, ["k"])
     # missing table: no-op
     rep3 = delete_keys(
         spark, str(tmp_path / "nope"),
-        spark.createDataFrame([(1,)], "k long"), ["k"],
+        spark.createDataFrame([(1,)], "k long"), ["k"], "bucket",
     )
     assert rep3 == {"deletedCount": 0, "partitionsRewritten": 0}
 
@@ -472,9 +435,10 @@ def test_delete_keys_escaped_string_partitions(spark, tmp_path):
     assert left == {"src=plain"}
     back = spark.read.parquet(path)
     assert [(r["k"], r["src"]) for r in back.collect()] == [(3, "plain")]
-    # no trash/staging residue: crash-window dirs are swept inline
+    # no trash/staging residue: the trash dir is removed inline
     assert not [
-        d for d in os.listdir(tmp_path) if "__old_" in d or "__staging_" in d
+        d for d in os.listdir(tmp_path)
+        if "__trash" in d or "__old_" in d or "__staging_" in d
     ]
 
 
@@ -513,14 +477,11 @@ def test_delete_keys_emptied_partition_vanishes_atomically(spark, tmp_path):
     deleted, so a root listing taken at any point sees the partition
     either whole or absent — never half-emptied. Simulate the crash
     window (trash renamed, rmtree not yet run): the table must read
-    consistently post-delete, and the next lock-guarded op sweeps the
-    orphaned trash."""
+    consistently post-delete, and the next removal empties the
+    orphaned trash first."""
     import os
 
-    from hypermap_etl_spark.operators.merge import (
-        _recover_interrupted_swap,
-        _remove_partition_dirs,
-    )
+    from hypermap_etl_spark.operators.merge import _remove_partition_dirs
 
     path = str(tmp_path / "atomic")
     spark.createDataFrame(
@@ -529,7 +490,7 @@ def test_delete_keys_emptied_partition_vanishes_atomically(spark, tmp_path):
 
     # crash window: rename happened, rmtree didn't (emulated by doing
     # the rename half by hand exactly as _remove_partition_dirs does)
-    trash = f"{path}__old_deadbeef"
+    trash = f"{path}__trash"
     os.makedirs(trash)
     os.rename(os.path.join(path, "bucket=1"), os.path.join(trash, "bucket=1"))
     # a reader listing the root now sees a CONSISTENT table: bucket 1
@@ -538,15 +499,12 @@ def test_delete_keys_emptied_partition_vanishes_atomically(spark, tmp_path):
     assert {d for d in os.listdir(path) if d.startswith("bucket=")} == {
         "bucket=0"
     }
-    # the next lock-guarded operation sweeps the orphan
-    _recover_interrupted_swap(path)
-    assert not os.path.exists(trash)
-
-    # and the normal full path removes + sweeps in one call
+    # the next removal empties the orphan, removes its own partition
+    # and leaves no trash behind
     removed = _remove_partition_dirs(path, "bucket", [0])
     assert removed == 1
     assert not [d for d in os.listdir(path) if d.startswith("bucket=")]
-    assert not [d for d in os.listdir(tmp_path) if "__old_" in d]
+    assert not os.path.exists(trash)
 
 
 # ------------------------------------------------------------ reorg rollback
@@ -810,39 +768,6 @@ def _crash_swap_at(monkeypatch, path, point):
     monkeypatch.setattr(shutil, "rmtree", rmtree)
 
 
-def _swap_case_merge(spark, base):
-    path = f"{base}/tbl"
-    merge_into_parquet(spark, path, _mk(spark, 5), ["event_id"])
-
-    def run():
-        merge_into_parquet(
-            spark, path, _mk(spark, 5, label="b", start=2), ["event_id"]
-        )
-
-    def rows():
-        return sorted(
-            tuple(r) for r in spark.read.parquet(path).select("event_id", "label").collect()
-        )
-
-    return path, run, rows
-
-
-def _swap_case_delete_keys(spark, base):
-    from hypermap_etl_spark.operators.merge import delete_keys
-
-    path = f"{base}/tbl"
-    spark.range(20).withColumnRenamed("id", "k").write.parquet(path)
-
-    def run():
-        victims = spark.createDataFrame([(7,), (8,), (99,)], "k long")
-        delete_keys(spark, path, victims, ["k"])
-
-    def rows():
-        return sorted(r["k"] for r in spark.read.parquet(path).collect())
-
-    return path, run, rows
-
-
 def _swap_case_compact_small_table(spark, base):
     from hypermap_etl_spark.operators.merge import compact_small_table
 
@@ -906,8 +831,6 @@ def _swap_case_pending_store(spark, base):
 
 
 _SWAP_CASES = {
-    "merge": _swap_case_merge,
-    "delete_keys": _swap_case_delete_keys,
     "compact_small_table": _swap_case_compact_small_table,
     "pending_store": _swap_case_pending_store,
 }
@@ -924,7 +847,8 @@ def swap_case(request, spark, tmp_path_factory):
 
 @pytest.mark.parametrize("point", ["staged", "renamed_away", "renamed_in"])
 def test_staged_swap_crash_matrix(spark, tmp_path, monkeypatch, swap_case, point):
-    """Every whole-table rewrite commits through merge._swap_in. A crash
+    """Both side-table rewrites (the key index compaction, the pending
+    store) commit through merge._swap_in. A crash
     at any of its three steps, followed by re-running the same call,
     must leave exactly the rows of a run that never crashed, and no
     ``__staging_``/``__old_`` dir next to the table."""

@@ -101,9 +101,11 @@ def test_duplicate_injection_is_noop(spark):
     rows = _fixture_rows()
     base = {r["namehash"]: r for r in materialize_entries(events_df(spark, rows)).collect()}
     path = tempfile.mkdtemp() + "/ev"
-    merge_into_parquet(spark, path, events_df(spark, rows), ["event_id"])
-    # re-deliver every third event
-    merge_into_parquet(spark, path, events_df(spark, rows[::3]), ["event_id"])
+    for batch in (rows, rows[::3]):  # then re-deliver every third event
+        merge_into_parquet(
+            spark, path, with_block_bucket(events_df(spark, batch)),
+            ["event_id"], "block_bucket",
+        )
     redone = {
         r["namehash"]: r
         for r in materialize_entries(spark.read.parquet(path)).collect()
