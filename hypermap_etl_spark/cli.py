@@ -704,9 +704,10 @@ def cmd_reorg(args) -> None:
 
 
 def cmd_compact(args) -> None:
-    """Maintenance: collapse small-file partitions of a streamed table
-    (and optionally the hash-bucketed entries table and/or a side table
-    like the key index) — see operators/merge.compact_partitions."""
+    """Maintenance: collapse small-file partitions of a partitioned
+    table that other writers append to (and optionally the hash-bucketed
+    entries table and/or a side table like the key index) — see
+    operators/merge.compact_partitions."""
     from hypermap_etl_spark.operators.merge import compact_partitions, compact_small_table
 
     if not args.table and not args.entries:

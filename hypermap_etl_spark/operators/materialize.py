@@ -382,17 +382,13 @@ def incremental_entries_update(
     updated = materialize_entries(relevant, root_hash).join(
         F.broadcast(keys), "namehash", "left_semi"
     )
-    # cluster the rewrite by bucket so each touched partition is written
-    # as one file per holding task instead of one file per shuffle task
-    # x bucket — steady-state file counts stay flat
-    updated = with_entry_bucket(updated).repartition("entry_bucket")
     # Materialize ONCE before the merge: merge_into_parquet runs
     # several actions over the batch frame (touched-partition collect,
     # the observed partition overwrite) and each would
     # otherwise re-execute the whole restricted fold. The frame is
     # touched-keys-sized, so the eager checkpoint is tiny; both
     # checkpoints release as soon as the merge lands.
-    updated = updated.localCheckpoint(eager=True)
+    updated = with_entry_bucket(updated).localCheckpoint(eager=True)
     try:
         # assume_unique: the fold is a groupBy(namehash) aggregate —
         # one row per key by construction
@@ -795,11 +791,7 @@ def incremental_entries_delta(
                 events_in, root_hash, known_extra=stored_keys
             )
             updated = merge_entry_states(stored_touched, partial)
-        updated = (
-            with_entry_bucket(updated)
-            .repartition("entry_bucket")
-            .localCheckpoint(eager=True)
-        )
+        updated = with_entry_bucket(updated).localCheckpoint(eager=True)
         held.append(updated)
 
         # the still-unknown remainder comes from the batch alone: retried

@@ -27,7 +27,12 @@ with optimistic concurrency (Delta/Iceberg) instead.
 Durability: every MERGE and delete is a DYNAMIC PARTITION OVERWRITE on
 the table's partition column — only partitions present in the
 incoming batch are rewritten; untouched partition files are never
-touched, and the table directory itself is never renamed. The one
+touched, and the table directory itself is never renamed. All of them
+(and reorg_rollback's fork-bucket rewrite and compact_partitions) go
+through one writer, ``_overwrite_partitions``, which leaves exactly one
+file per partition it writes: the program's own writes never fragment
+a partition, so compaction only serves tables that are appended to
+(the IVF index lists, tables other writers append to). The one
 whole-table commit, ``_swap_in`` (stage, rename the table away,
 rename the staging dir in, drop the old dir), serves only the two
 unpartitioned side tables: the stream's key index
@@ -287,6 +292,41 @@ def _remove_partition_dirs(path: str, partition_col: str, values) -> int:
     return len(doomed)
 
 
+def _overwrite_partitions(
+    df: DataFrame,
+    path: str,
+    partition_col: str,
+    sort_cols: list[str] | None = None,
+) -> None:
+    """The one partition-overwrite write of the program: replace the
+    partitions of the table at ``path`` that ``df`` holds rows for,
+    creating the table when it is missing. Partitions ``df`` has no row
+    for are never opened or replaced.
+
+    ``df`` is repartitioned BY the partition column first, so each
+    partition value is written by one task and every write leaves
+    exactly one file per partition it writes. Without it the write
+    inherits the task layout of its input (the scan of the stored
+    partition plus the batch's shuffle), and each touched partition
+    gains one file per task holding its rows.
+
+    ``sort_cols`` sorts each file's rows (compaction re-tightens the
+    row-group min/max stats the serving filters prune on). The sort
+    leads with the partition column: FileFormatWriter requires its
+    input ordered by the partition columns and inserts its own,
+    order-destroying sort when that is not already met.
+    """
+    out = df.repartition(F.col(partition_col))
+    if sort_cols:
+        out = out.sortWithinPartitions(partition_col, *sort_cols)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
+    )
+
+
 def _obs_count(obs) -> int:
     """Observation metric as an int, 0 when the observed node was
     optimized away entirely (a statically-empty subtree — e.g. an
@@ -359,11 +399,8 @@ def _merge_unlocked(
         # the row count is observed on the write itself, so the batch
         # plan runs once
         obs = Observation()
-        (
-            new_df.observe(obs, F.count(F.lit(1)).alias("n"))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(path)
+        _overwrite_partitions(
+            new_df.observe(obs, F.count(F.lit(1)).alias("n")), path, partition_col
         )
         return {"upsertedCount": _obs_count(obs), "modifiedCount": 0}
 
@@ -406,13 +443,7 @@ def _merge_unlocked(
     ).observe(obs_surv, F.count(F.lit(1)).alias("n"))
     # rewrite only the touched partitions in place; untouched
     # partition files are never opened or replaced
-    (
-        survivors.unionByName(new_df)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
+    _overwrite_partitions(survivors.unionByName(new_df), path, partition_col)
     matched = _obs_count(obs_exist) - _obs_count(obs_surv)
     return {
         "upsertedCount": int(batch_total - matched),
@@ -452,24 +483,23 @@ def compact_partitions(
     max_files: int = 8,
     sort_cols: list[str] | None = None,
 ) -> dict[str, int]:
-    """Small-file compaction for a partitioned table — the maintenance
-    job every streaming sink needs: each micro-batch MERGE adds files to
-    its touched partitions, and thousands of tiny parquet files turn
-    scans into open/footer overhead.
+    """Small-file compaction for a partitioned table that is APPENDED
+    to: each append (an IVF list append, a writer outside this program)
+    adds files to its partitions, and thousands of tiny parquet files
+    turn scans into open/footer overhead. The program's own MERGE,
+    delete and reorg writes leave one file per partition they write
+    (_overwrite_partitions), so they never need it.
 
-    Only partitions exceeding ``max_files`` are rewritten (dynamic
-    partition overwrite — untouched partitions' files are never opened),
-    repartitioned BY the partition column so each value collapses to one
-    task → one output file. I/O is O(oversized partitions), not
-    O(table).
+    Only partitions exceeding ``max_files`` are rewritten, through the
+    same one-file-per-partition writer (dynamic partition overwrite —
+    untouched partitions' files are never opened). I/O is
+    O(oversized partitions), not O(table).
 
     Takes the table's single-writer merge lock: compaction deletes the
     files it rewrites, so racing a concurrent MERGE's scan would fail
     that merge mid-read (FileNotFound) — a CLI `compact` against a
-    table a stream is actively merging now raises ConcurrentMergeError
-    instead. The index stream's in-batch compaction runs on the batch
-    thread after its merge released the lock, so it is never
-    self-blocked.
+    table a stream is actively merging raises ConcurrentMergeError
+    instead.
 
     Returns {"partitions_compacted": n, "files_before": x, "files_after": y}.
     """
@@ -480,23 +510,7 @@ def compact_partitions(
             return {"partitions_compacted": 0, "files_before": 0, "files_after": 0}
         before = sum(counts[v] for v in todo)
         df = spark.read.parquet(path).filter(F.col(partition_col).isin(todo))
-        out = df.repartition(len(todo), F.col(partition_col))
-        if sort_cols:
-            # restore intra-file sort clustering while we rewrite
-            # anyway: micro-batch appends interleave arrival order, so
-            # compaction is the free moment to re-tighten the row-group
-            # min/max stats the serving filters prune on. The sort MUST
-            # lead with the partition column: FileFormatWriter requires
-            # its output ordered by the partition columns and inserts
-            # its own (order-destroying) sort when the requirement is
-            # not already met.
-            out = out.sortWithinPartitions(partition_col, *sort_cols)
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
+        _overwrite_partitions(df, path, partition_col, sort_cols)
         after = sum(partition_file_counts(path, partition_col).get(v, 0) for v in todo)
         return {
             "partitions_compacted": len(todo),
@@ -581,12 +595,7 @@ def delete_keys(
         kept = {
             r[0] for r in survivors.select(partition_col).distinct().collect()
         }
-        (
-            survivors.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
+        _overwrite_partitions(survivors, path, partition_col)
         _remove_partition_dirs(path, partition_col, set(touched) - kept)
         return {
             "deletedCount": sum(r["__c"] for r in per_part),
@@ -687,12 +696,7 @@ def reorg_rollback(
                         events_path, "block_bucket", [fork_bucket]
                     )
                 else:
-                    (
-                        survivors.write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("block_bucket")
-                        .parquet(events_path)
-                    )
+                    _overwrite_partitions(survivors, events_path, "block_bucket")
                     out["bucketsRewritten"] = 1
 
     if stored is not None:

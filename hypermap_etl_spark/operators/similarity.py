@@ -794,7 +794,7 @@ def ivf_index_compact(
 ) -> dict[str, int]:
     """Posting-list defragmentation for a persisted index — the
     maintenance hook every append-only store here has (the MinHash
-    signature store's signature_store_compact, the index stream's
+    signature store's signature_store_compact, the `compact` CLI's
     compact_partitions): each :func:`ivf_index_append` adds one file
     set to every touched ``cid=`` directory, so a long append tail
     turns the probed-list scan into parquet open/footer overhead.

@@ -238,12 +238,8 @@ def source_layout_block_aligned(source_path: str) -> bool:
 
 
 # index-stream maintenance cadence: every COMPACT_INDEX_EVERY batches
-# the key index is rewritten distinct into one file, and every
-# COMPACT_ENTRIES_EVERY batches the entries buckets holding more than
-# ENTRIES_MAX_FILES files are collapsed to one file each
+# the blind-appended key index is rewritten distinct into one file
 COMPACT_INDEX_EVERY = 64
-COMPACT_ENTRIES_EVERY = 64
-ENTRIES_MAX_FILES = 8
 
 
 def start_index_stream(
@@ -284,10 +280,16 @@ def start_index_stream(
       batches re-merge idempotently. A range written as many shuffled
       part-files could split one block's events across micro-batches,
       which the associative merge cannot repair; their spans overlap,
-      so such a source runs 'replay'.
+      so such a source runs 'replay'. The delta fold never reads the
+      events table, so the batch's events MERGE runs on a second
+      thread beside it; the batch returns once both writes have
+      finished, and if either fails its error is raised only then. A
+      crash can therefore leave either table ahead of the other; the
+      redelivered batch re-applies both, idempotently.
     - 'replay' for anything else (overlapping spans, mtime disorder): a
       restricted replay of the touched keys' events
       (materialize.incremental_entries_update), indifferent to order.
+      It reads the events table, so its events MERGE runs first.
       Per-batch cost at scale:
         write  O(touched block buckets)   — dynamic partition overwrite
         scan   O(buckets holding touched keys' events) — side-index prune
@@ -311,15 +313,12 @@ def start_index_stream(
     accumulates one small file and some duplicate pairs per batch;
     every COMPACT_INDEX_EVERY batches it is rewritten distinct into one
     file (compact_small_table) — long-running tails never degrade into
-    thousands-of-tiny-files scans.
-
-    The entries table needs the same maintenance: each batch's dynamic
-    partition overwrite rewrites every touched entry bucket with as many
-    files as shuffle tasks wrote it, so every COMPACT_ENTRIES_EVERY
-    batches the buckets holding more than ENTRIES_MAX_FILES files are
-    collapsed to one file each (compact_partitions — I/O is
-    O(oversized buckets), untouched buckets are never opened).
+    thousands-of-tiny-files scans. The events and entries tables need
+    no such maintenance: every MERGE rewrites each touched bucket as
+    one file (merge._overwrite_partitions).
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     from hypermap_etl_spark.operators.materialize import (
         incremental_entries_delta,
         incremental_entries_update,
@@ -387,13 +386,25 @@ def start_index_stream(
                         if state["hw"] is None
                         else max(span["hi"], state["hw"])
                     )
-            res = merge_into_parquet(
-                spark, table_path, events, ["event_id"], partition_col="block_bucket"
-            )
+            def merge_events():
+                return merge_into_parquet(
+                    spark, table_path, events, ["event_id"], partition_col="block_bucket"
+                )
+
             if state["strategy"] == "delta":
                 buckets = None
-                incremental_entries_delta(spark, entries_path, events)
+                with ThreadPoolExecutor(max_workers=1) as pool:
+                    merged = pool.submit(merge_events)
+                    try:
+                        incremental_entries_delta(spark, entries_path, events)
+                    finally:
+                        # joins the events MERGE even when the entries
+                        # leg raised, so no table lock outlives the
+                        # batch; an events error is raised here, with
+                        # an entries error as its context
+                        res = merged.result()
             else:
+                res = merge_events()
                 if state["indexed"]:
                     batch_key_buckets(events).write.mode("append").parquet(key_index_path)
                 else:
@@ -409,12 +420,6 @@ def start_index_stream(
                     F.col("block_bucket").isin(buckets)
                 )
                 incremental_entries_update(spark, entries_path, log, keys)
-            if batch_id > 0 and batch_id % COMPACT_ENTRIES_EVERY == 0:
-                from hypermap_etl_spark.operators.merge import compact_partitions
-
-                compact_partitions(
-                    spark, entries_path, "entry_bucket", max_files=ENTRIES_MAX_FILES
-                )
             if on_progress is not None:
                 on_progress(
                     {

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from hypermap_etl_spark.constants import ROOT_HASH
@@ -396,18 +397,16 @@ def test_index_stream_autocompacts_key_index(spark, monkeypatch):
     assert len(pairs) == spark.read.parquet(idx).count()
 
 
-def test_index_stream_bounds_entries_files(spark, monkeypatch):
-    """Entries-table maintenance symmetry: across a
-    many-batch availableNow run with per-batch compaction, every
-    entry_bucket partition stays at ≤ 1 file, and the compacted entries
+def test_index_stream_bounds_entries_files(spark):
+    """Across a many-batch availableNow run every entry_bucket and
+    block_bucket partition holds exactly one file, with no compaction
+    (each MERGE rewrites a touched bucket as one file), and the entries
     still equal a batch recompute."""
     import glob
 
     from hypermap_etl_spark.operators.decode import parse_raw_logs
     from hypermap_etl_spark.streaming import scan
 
-    monkeypatch.setattr(scan, "COMPACT_ENTRIES_EVERY", 1)
-    monkeypatch.setattr(scan, "ENTRIES_MAX_FILES", 1)
     base = tempfile.mkdtemp()
     src, tbl, ent, ckpt = f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
     os.makedirs(src)
@@ -429,9 +428,10 @@ def test_index_stream_bounds_entries_files(spark, monkeypatch):
 
     buckets = glob.glob(f"{ent}/entry_bucket=*")
     assert buckets, "entries table must be entry_bucket-partitioned"
+    buckets += glob.glob(f"{tbl}/block_bucket=*")
     for b in buckets:
         files = glob.glob(f"{b}/*.parquet")
-        assert len(files) <= 1, (b, files)
+        assert len(files) == 1, (b, files)
 
     expected = {
         r["namehash"]: r.asDict()
@@ -678,3 +678,64 @@ def test_index_stream_resolves_strategy_at_first_batch(spark):
         q.stop()
     assert progress and all(p["entries_strategy"] == "delta" for p in progress)
     _assert_entries_match_fold(spark, ent, rows)
+
+
+def _fail_one_delta_leg(spark, monkeypatch, module, attr):
+    """Index the three block-aligned chunks (one delta batch each) with
+    ``module.attr`` raising on its second call, i.e. inside the second
+    batch's concurrent table writes. The query fails with that error
+    and no events-table lock outlives it; a restart on the same
+    checkpoint redelivers the batch and brings the events table and the
+    entries table to the full log."""
+    import time as _time
+
+    from hypermap_etl_spark.operators.decode import parse_raw_logs
+
+    rows, chunks = _block_chunks()
+    base = tempfile.mkdtemp()
+    src, tbl, ent, ckpt = (
+        f"{base}/src", f"{base}/tbl", f"{base}/entries", f"{base}/ckpt"
+    )
+    os.makedirs(src)
+    _land(_stage_chunks(spark, chunks, base), src, _time.time() - 60)
+    real, calls = getattr(module, attr), []
+
+    def flaky(*a, **kw):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected leg failure")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(module, attr, flaky)
+    q = start_index_stream(spark, src, tbl, ent, ckpt, max_files_per_trigger=1)
+    with pytest.raises(Exception, match="injected leg failure"):
+        q.awaitTermination(240)
+    assert not os.path.exists(f"{tbl}__lock")
+
+    progress = []
+    start_index_stream(
+        spark, src, tbl, ent, ckpt, max_files_per_trigger=1,
+        on_progress=progress.append,
+    ).awaitTermination(240)
+    assert progress and all(p["entries_strategy"] == "delta" for p in progress)
+    expected = parse_raw_logs(build_raw_logs(events_df(spark, rows)))
+    got = spark.read.parquet(tbl)
+    assert got.count() == expected.count()
+    assert got.select("event_id").subtract(expected.select("event_id")).isEmpty()
+    _assert_entries_match_fold(spark, ent, rows)
+
+
+def test_delta_batch_entries_leg_failure_recovers(spark, monkeypatch):
+    """The entries leg of a delta batch raises while the events MERGE
+    runs beside it."""
+    from hypermap_etl_spark.operators import materialize
+
+    _fail_one_delta_leg(spark, monkeypatch, materialize, "incremental_entries_delta")
+
+
+def test_delta_batch_events_leg_failure_recovers(spark, monkeypatch):
+    """The events leg of a delta batch raises while the entries delta
+    runs beside it, leaving the entries table ahead of the events."""
+    from hypermap_etl_spark.streaming import scan
+
+    _fail_one_delta_leg(spark, monkeypatch, scan, "merge_into_parquet")

@@ -46,10 +46,14 @@ def test_merge_upsert_and_update(spark):
 def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
     """With partition_col, a merge must rewrite ONLY touched buckets:
     untouched partition files stay byte-identical (the parquet-native
-    incremental MERGE the streaming path relies on)."""
+    incremental MERGE the streaming path relies on). Every partition
+    overwrite (create and update merge, delete_keys, reorg_rollback's
+    fork-bucket rewrite) leaves each bucket it writes as one file."""
     import glob
     import hashlib
     import os
+
+    from hypermap_etl_spark.operators.merge import delete_keys, reorg_rollback
 
     path = tempfile.mkdtemp() + "/tbl"
     # buckets 0 and 1 (block 150k)
@@ -65,6 +69,11 @@ def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
             for f in files
         ]
 
+    def assert_one_file(*buckets):
+        for b in buckets:
+            assert len(fingerprint(b)) == 1, (b, fingerprint(b))
+
+    assert_one_file(0, 1)
     before_b0 = fingerprint(0)
     # merge touching ONLY bucket 1
     r = merge_into_parquet(
@@ -76,9 +85,24 @@ def test_partitioned_merge_leaves_untouched_partitions_alone(spark):
     )
     assert r == {"upsertedCount": 3, "modifiedCount": 1}
     assert fingerprint(0) == before_b0  # bucket-0 files untouched
+    assert_one_file(1)
     tbl = spark.read.parquet(path)
     assert tbl.count() == 3 + 1 + 4
     assert tbl.filter(F.col("label") == "b").count() == 4
+
+    # blocks 150_000..150_004 in bucket 1: delete one, then roll back
+    # above 150_002 (the fork bucket is rewritten, not dropped)
+    victim = tbl.filter(F.col("blockNumber") == 150_001).select("event_id").localCheckpoint()
+    rep = delete_keys(spark, path, victim, ["event_id"], "block_bucket")
+    assert rep == {"deletedCount": 1, "partitionsRewritten": 1}
+    assert fingerprint(0) == before_b0
+    assert_one_file(1)
+    rep = reorg_rollback(spark, path, fork_block=150_002)
+    assert rep["eventsDeleted"] == 2 and rep["bucketsRewritten"] == 1
+    assert fingerprint(0) == before_b0
+    assert_one_file(1)
+    blocks = sorted(r[0] for r in spark.read.parquet(path).select("blockNumber").collect())
+    assert blocks == [0, 1, 2, 150_000, 150_002]
 
 
 def test_merge_rejects_table_with_unexpected_columns(spark):
