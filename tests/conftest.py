@@ -43,9 +43,14 @@ def spark():
     # semantic effect (test_partition_invariance sweeps partition
     # counts explicitly; production sessions keep the env-driven
     # default). This is what lets the driver's pytest budget finish.
+    # One task thread per core the suite runs on (SPARK_GRAFT_CPUS, set
+    # to nproc by the tier-1 command): on a 4-core host local[8]
+    # oversubscribes the cores, and the cli/incremental_delta/
+    # merge_serving files ran 286 s at local[8] against 241 s at
+    # local[4] (shuffle.partitions 4 instead of 8 gained nothing more).
     s = get_spark(
         "hypermap-etl-tests",
-        master="local[8]",
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         extra_conf={"spark.sql.shuffle.partitions": "8"},
     )
     yield s
